@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension packaging of the engine (SURVEY §4 tier (c)): start any
   * session with
@@ -14,36 +14,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * and every graft SQL function plus the barrier-aware parse-pruning
   * optimizer rule is installed — no imperative
   * [[graft.functions.GraftFunctions.registerAll]] call needed (that path
-  * remains for programmatic sessions; both are idempotent and can coexist).
-  * Injected functions live in the session's own registry and optimizer, so
-  * multiple sessions with different extension lists never interfere.
+  * remains for programmatic sessions; both install the same
+  * [[graft.functions.GraftFunctions.SqlFunctions]] table, are idempotent
+  * and can coexist). Injected functions live in the session's own registry
+  * and optimizer, so multiple sessions with different extension lists never
+  * interfere.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def fn(name: String, builder: Seq[Expression] => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo("graft", name), builder)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import graft.functions._
-    ext.injectFunction(fn("relationalize",
-      exprs => RelationalizeGenerator(exprs.head, exprs.lift(1) match {
-        case Some(org.apache.spark.sql.catalyst.expressions.Literal(s2, _)) => s2.toString
-        case None => "t"
-        case other => throw new IllegalArgumentException(
-          s"relationalize name must be a string literal, got $other")
-      })))
-    ext.injectFunction(fn("hash60", exprs => Hash60(exprs.head)))
-    ext.injectFunction(fn("graft_barrier", exprs => OptimizationBarrier(exprs.head)))
-    ext.injectFunction(fn("vec_dot", exprs => VecDot(exprs.head, exprs(1))))
-    ext.injectFunction(fn("ahash60", exprs => AHash60(exprs.head)))
-    ext.injectFunction(fn("nfc_normalize", exprs => NfcNormalize(exprs.head)))
-    ext.injectFunction(fn("graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction(fn("graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs(0), exprs(1))))
+    graft.functions.GraftFunctions.SqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
+    }
     ext.injectOptimizerRule(_ => graft.plans.PruneBarrieredJsonParse)
   }
 }

@@ -225,7 +225,7 @@ object GrowthCurve {
     //   - consume wall: count EVERY discovered table (T+1 pruned reads);
     //   - schema footprint: total serialized schema bytes — the ONLY
     //     driver/executor state that grows with T (the per-partition map
-    //     is additionally capped by schemaMapCap).
+    //     is additionally capped by RelationalizeSpark.SchemaMapCap).
     // Claims: build wall ~linear in rows and ~flat in T at fixed rows;
     // consume wall ~linear in T (it runs T+1 jobs) but each pruned read
     // touches only its table's files; schema bytes linear in T (KBs),

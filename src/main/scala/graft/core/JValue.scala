@@ -122,13 +122,6 @@ object Json {
 
   def taggedKey(k: String, tag: String): String = s"$k$TagSep$tag"
 
-  /** Split `k<TagSep>tag` on the LAST separator occurrence. */
-  def splitTaggedKey(key: String): (String, String) = {
-    val i = key.lastIndexOf(TagSep.toInt)
-    require(i >= 0, s"untagged payload key: $key")
-    (key.substring(0, i), key.substring(i + 1))
-  }
-
   /** Serialize a flat row with tag-carrying keys (`k<TagSep>tag`). */
   def writeTaggedRow(row: Iterable[(String, JValue)]): String =
     writeRow(row.map { case (k, v) => taggedKey(k, ColType.of(v).repr) -> v })

@@ -18,60 +18,45 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GraftFunctions {
 
-  /** Register all engine functions on a session (idempotent). */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "relationalize",
-      exprs => RelationalizeGenerator(exprs.head,
-        exprs.lift(1).map(foldableString(_, "relationalize name")).getOrElse("t")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash60", exprs => Hash60(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_barrier", exprs => OptimizationBarrier(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_overlap", exprs => ArrayOverlap(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ahash60", exprs => AHash60(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "phash60", exprs => PHash60(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "box_resize", exprs => BoxResize(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_sum", exprs => ByteSum(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_mass",
-      exprs => GramMass(exprs.head, foldableInt(exprs(1), "graft_gram_mass n")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => Ngrams(exprs.head, foldableInt(exprs(1), "graft_ngrams n")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow_fps",
-      exprs => WinnowFps(exprs.head,
-        foldableInt(exprs(1), "graft_winnow_fps k"),
-        foldableInt(exprs(2), "graft_winnow_fps w")),
-      "built-in")
+  /** Every engine SQL function as (name, builder): the one table that both
+    * [[registerAll]] and [[graft.GraftExtensions]] install from.
+    */
+  val SqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "relationalize" -> (exprs => RelationalizeGenerator(exprs.head,
+      exprs.lift(1).map(foldableString(_, "relationalize name")).getOrElse("t"))),
+    "hash60" -> (exprs => Hash60(exprs.head)),
+    "graft_barrier" -> (exprs => OptimizationBarrier(exprs.head)),
+    "vec_dot" -> (exprs => VecDot(exprs.head, exprs(1))),
+    "graft_overlap" -> (exprs => ArrayOverlap(exprs.head, exprs(1))),
+    "ahash60" -> (exprs => AHash60(exprs.head)),
+    "phash60" -> (exprs => PHash60(exprs.head)),
+    "nfc_normalize" -> (exprs => NfcNormalize(exprs.head)),
+    "box_resize" -> (exprs => BoxResize(exprs(0), exprs(1), exprs(2))),
+    "byte_sum" -> (exprs => ByteSum(exprs.head)),
+    "graft_gram_mass" -> (exprs =>
+      GramMass(exprs.head, foldableInt(exprs(1), "graft_gram_mass n"))),
+    "graft_ngrams" -> (exprs =>
+      Ngrams(exprs.head, foldableInt(exprs(1), "graft_ngrams n"))),
+    "graft_winnow_fps" -> (exprs => WinnowFps(exprs.head,
+      foldableInt(exprs(1), "graft_winnow_fps k"),
+      foldableInt(exprs(2), "graft_winnow_fps w"))),
     // Spark's own runtime-filter bloom sketch, exposed in SQL: the aggregate
     // builds the filter as one BINARY value (mergeable partials — no row
     // shuffle, only sketch bytes move), and the probe side consumes it via a
     // scalar subquery (BloomFilterMightContain requires a foldable/subquery
     // bloom, exactly the shape InjectRuntimeFilter generates). Keys are
     // BIGINT — pair with hash60 for string membership.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
+    "graft_bloom_agg" -> (exprs =>
+      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+        exprs(0), exprs(1), exprs(2))),
+    "graft_might_contain" -> (exprs =>
+      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
+
+  /** Register all engine functions on a session (idempotent). */
+  def registerAll(spark: SparkSession): Unit = {
+    SqlFunctions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
     // parse-schema pruning through the barrier (idempotent registration):
     // runs after the main operator-optimization batch, where ColumnPruning
     // has already narrowed consumer projections

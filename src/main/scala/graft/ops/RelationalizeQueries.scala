@@ -125,7 +125,7 @@ object RelationalizeQueries {
     */
   def relSchema(spark: SparkSession, dir: String): DataFrame = {
     val docs = choiceDocs(spark, dir)
-    val schemas = RelationalizeSpark.inferSchemas(
+    val schemas = RelationalizeSpark.collectSchemas(
       RelationalizeSpark.emit(docs.as(Encoders.STRING), "events"))
     import spark.implicits._
     schemas("events").columns.toSeq
@@ -136,7 +136,7 @@ object RelationalizeQueries {
   /** Schema DRIFT report between two corpus snapshots — the evolution
     * dashboard a continuously-ingesting relationalize pipeline needs before
     * re-running DDL: infer the choice schema over the old and new snapshot
-    * independently (the same distributed [[graft.relationalize.RelationalizeSpark.inferSchemas]]
+    * independently (the same distributed [[graft.relationalize.RelationalizeSpark.collectSchemas]]
     * merge as `rel_schema`), then full-outer-diff the column lattices —
     * `added` / `removed` / `changed` (type widened or narrowed, e.g.
     * int → c-int-str when a producer starts sending strings) / `same`.
@@ -149,7 +149,7 @@ object RelationalizeQueries {
   def relSchemaDrift(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     def infer(docs: DataFrame): Seq[(String, String)] =
-      RelationalizeSpark.inferSchemas(
+      RelationalizeSpark.collectSchemas(
         RelationalizeSpark.emit(docs.as(Encoders.STRING), "events"))("events")
         .columns.toSeq.map { case (c, t) => (c, t.repr) }
     val (oldDocs, newDocs) = driftDocs(spark, dir)
@@ -178,7 +178,7 @@ object RelationalizeQueries {
   def relMigrate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     def outTags(docs: DataFrame): Map[String, String] =
-      RelationalizeSpark.inferSchemas(
+      RelationalizeSpark.collectSchemas(
         RelationalizeSpark.emit(docs.as(Encoders.STRING), "events"))("events")
         .outputBindings.map(b => b._1 -> b._3).toMap
     val (oldDocs, newDocs) = driftDocs(spark, dir)

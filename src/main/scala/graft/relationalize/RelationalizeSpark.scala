@@ -3,9 +3,7 @@ package graft.relationalize
 import graft.core._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql._
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{coalesce, col, from_json, lit, raise_error, timestamp_millis, udaf, when}
+import org.apache.spark.sql.functions.{coalesce, col, from_json, lit, raise_error, timestamp_millis, when}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -27,12 +25,6 @@ final case class RelationalizeOptions(
       * memory/disk.
       */
     materializePath: Option[String] = None,
-    /** Max distinct tables held in a partition's local schema map before the
-      * accumulated schemas are flushed as marker rows and the map cleared
-      * (associative merge makes the flush lossless). Bounds executor memory
-      * under extreme table fan-out.
-      */
-    schemaMapCap: Int = 8192,
     /** When > 0 (with [[materializePath]]): shuffle the emitted rows by
       * `(table, hash(payload) % N)` before the `partitionBy(table)` write,
       * bounding the materialization at N files per table. Without it the
@@ -77,14 +69,23 @@ final case class RelationalizeOptions(
     quarantine: Boolean = false)
 
 /** Result of relationalizing a document collection: one typed DataFrame per
-  * discovered table plus its choice schema (for DDL / introspection).
+  * discovered table plus its choice schema (for DDL / introspection), all
+  * served from the one pass-1 emit this result owns.
   */
 final case class RelationalizeResult(
-    tables: Map[String, DataFrame],
     schemas: Map[String, ChoiceSchema],
-    private val cached: Option[Dataset[Emitted]] = None) {
+    private val emitted: Dataset[Emitted]) {
+
+  lazy val tables: Map[String, DataFrame] =
+    schemas.map { case (t, s) => t -> convert(t, s) }
 
   def apply(table: String): DataFrame = tables(table)
+
+  /** Convert `table`'s emitted rows under a caller-chosen schema (e.g. one
+    * merged with a stored schema) — see [[RelationalizeSpark.toDataFrame]].
+    */
+  def convert(table: String, schema: ChoiceSchema): DataFrame =
+    RelationalizeSpark.toDataFrame(emitted, table, schema)
 
   def ddl(schemaName: String = "public", dialect: SqlDialect = PostgresDialect): Map[String, String] =
     schemas.map { case (t, s) => t -> s.generateDdl(t, schemaName, dialect) }
@@ -94,19 +95,18 @@ final case class RelationalizeResult(
     * per-table DataFrames have been consumed or materialized — afterwards
     * they still compute correctly but re-run pass 1 per action.
     */
-  def release(): Unit = cached.foreach(_.unpersist())
+  def release(): Unit = emitted.unpersist()
 }
 
 /** Distributed relationalize, Spark-first:
   *
-  *   - '''pass 1''' — one narrow `mapPartitions` over the raw documents emits
-  *     `(table, flatRowJson)` pairs; the only thing that crosses a stage
-  *     boundary is the per-table choice ''schema'' (KB-sized), aggregated with
-  *     a typed [[Aggregator]] whose merge is the reference's own associative
-  *     shard-merge (`relationalize/schema.py:259-302`). Map-side partial
-  *     aggregation means the shuffle carries one small Map per (partition,
-  *     table) — this holds at 100 TB: no data shuffle, driver state is only
-  *     the schemas.
+  *   - '''pass 1''' ([[emit]]) — one narrow `mapPartitions` over the raw
+  *     documents emits `(table, flatRowJson)` pairs and observes every row
+  *     into a per-partition choice schema as it is written; the only thing
+  *     that reaches the driver is those per-table ''schemas'' (KB-sized marker
+  *     rows), folded with the reference's own associative shard-merge
+  *     (`relationalize/schema.py:259-302`) by [[collectSchemas]] — this
+  *     holds at 100 TB: no data shuffle, driver state is only the schemas.
   *   - '''pass 2''' — with schemas broadcast back (implicitly, via closure:
   *     they are tiny), each table's rows are converted (choice-split) and
   *     decoded straight to `InternalRow`-friendly typed Rows. Tables are
@@ -131,10 +131,9 @@ object RelationalizeSpark {
   /** docKey factory honoring [[RelationalizeOptions.contentDocKeys]] and
     * [[RelationalizeOptions.docKeyPrefix]].
     */
-  private def docKeyFn(contentDocKeys: Boolean,
-                       prefix: String): (Int, Long, String) => String =
-    if (contentDocKeys) (_, _, line) => Relationalizer.contentDocKey(line)
-    else (pid, ordinal, _) => s"$prefix$pid:$ordinal"
+  private def docKeyFn(options: RelationalizeOptions): (Int, Long, String) => String =
+    if (options.contentDocKeys) (_, _, line) => Relationalizer.contentDocKey(line)
+    else (pid, ordinal, _) => s"${options.docKeyPrefix}$pid:$ordinal"
 
   /** Destination table for unparseable lines under
     * [[RelationalizeOptions.quarantine]] — a NORMAL table (pass 2 serves it
@@ -163,48 +162,39 @@ object RelationalizeSpark {
             "_error_" -> JString(e.getClass.getSimpleName))))
       }
 
-  /** Pass-1 transform: raw JSON lines -> emitted (table, flatRow) pairs. */
-  def emit(ds: Dataset[String], name: String,
-           contentDocKeys: Boolean = false,
-           quarantine: Boolean = false,
-           docKeyPrefix: String = ""): Dataset[Emitted] = {
-    implicit val enc: Encoder[Emitted] = Encoders.product[Emitted]
-    val key = docKeyFn(contentDocKeys, docKeyPrefix)
-    ds.mapPartitions { iter =>
-      val pid = TaskContext.getPartitionId()
-      var ordinal = -1L
-      iter.flatMap { line =>
-        ordinal += 1
-        relLine(line, name, key(pid, ordinal, line), quarantine).iterator.map {
-          case (table, row) => Emitted(table, Json.writeTaggedRow(row))
-        }
-      }
-    }
-  }
+  /** Max distinct tables held in a partition's local schema map before the
+    * accumulated schemas are flushed as marker rows and the map cleared.
+    */
+  private val SchemaMapCap = 8192
 
-  /** Fused pass-1: like [[emit]], but each partition also observes every flat
-    * row into a local choice schema *before* serialization (the reference's
-    * `on_object_write` fusion, `relationalize.py:63`) and appends one
-    * marker row per discovered table at partition end. Schema inference then
-    * costs a collect of (partitions x tables) tiny rows — no second parse of
-    * any payload, no aggregation job over the data.
+  /** Pass 1: raw JSON lines -> emitted (table, flatRow) pairs. Each
+    * partition also observes every flat row into a local choice schema
+    * ''before'' serialization (the reference's `on_object_write` fusion,
+    * `relationalize.py:63`) and appends one [[SchemaMarker]]-prefixed row
+    * per discovered table at partition end. Schema inference then costs a
+    * collect of (partitions x tables) tiny rows — no second parse of any
+    * payload, no aggregation job over the data; [[toDataFrame]]'s table
+    * filter drops the marker rows.
     *
     * The per-partition schema map is bounded: when a partition has observed
-    * `schemaMapCap` distinct tables, the accumulated schemas are flushed as
+    * [[SchemaMapCap]] distinct tables, the accumulated schemas are flushed as
     * marker rows mid-stream and the map is cleared. [[collectSchemas]]'
     * per-table `merge` is associative (the reference's own shard-merge
     * semantics), so multiple marker rows per (partition, table) fold to the
     * same schema — extreme table fan-out (millions of distinct child tables)
     * costs bounded executor memory instead of an unbounded map.
     */
-  def emitWithSchemas(ds: Dataset[String], name: String,
-                      schemaMapCap: Int = 8192,
-                      contentDocKeys: Boolean = false,
-                      quarantine: Boolean = false,
-                      docKeyPrefix: String = ""): Dataset[Emitted] = {
+  def emit(ds: Dataset[String], name: String,
+           options: RelationalizeOptions = RelationalizeOptions()): Dataset[Emitted] =
+    emit(ds, name, options, SchemaMapCap)
+
+  /** [[emit]] with an explicit schema-map cap (specs force flushes with it). */
+  private[relationalize] def emit(ds: Dataset[String], name: String,
+                                  options: RelationalizeOptions,
+                                  schemaMapCap: Int): Dataset[Emitted] = {
     require(schemaMapCap > 0)
     implicit val enc: Encoder[Emitted] = Encoders.product[Emitted]
-    val key = docKeyFn(contentDocKeys, docKeyPrefix)
+    val key = docKeyFn(options)
     ds.mapPartitions { iter =>
       val pid = TaskContext.getPartitionId()
       var ordinal = -1L
@@ -218,7 +208,7 @@ object RelationalizeSpark {
       }
       val dataRows = iter.flatMap { line =>
         ordinal += 1
-        relLine(line, name, key(pid, ordinal, line), quarantine).iterator.flatMap {
+        relLine(line, name, key(pid, ordinal, line), options.quarantine).iterator.flatMap {
           case (table, row) =>
             localSchemas.update(table,
               localSchemas.getOrElse(table, ChoiceSchema.empty).observe(row))
@@ -233,61 +223,21 @@ object RelationalizeSpark {
     }
   }
 
-  /** Collect + merge the per-partition schema marker rows of a fused emit. */
-  def collectSchemas(emitted: Dataset[Emitted]): Map[String, ChoiceSchema] =
+  /** The schema marker rows of an emit — the rows [[collectSchemas]]
+    * collects. A narrow filter over pass 1: no exchange.
+    */
+  private[graft] def schemaRows(emitted: Dataset[Emitted]): Dataset[Emitted] =
     emitted.filter(col("table").startsWith(SchemaMarker))
+
+  /** Collect + merge the per-partition schema marker rows of an [[emit]]. */
+  def collectSchemas(emitted: Dataset[Emitted]): Map[String, ChoiceSchema] =
+    schemaRows(emitted)
       .collect()
       .groupBy(_.table.stripPrefix(SchemaMarker))
       .map { case (t, rows) =>
         t -> rows.map(r => ChoiceSchema.deserialize(r.payload))
           .reduce(_.merge(_))
       }
-
-  /** Choice-schema inference as a typed aggregate: buffer = column -> type
-    * repr; merge = the lattice merge. Usable via `groupBy(...).agg(...)`,
-    * partial-aggregated map-side.
-    */
-  class SchemaAggregator extends Aggregator[String, Map[String, String], String] {
-    override def zero: Map[String, String] = Map.empty
-
-    override def reduce(b: Map[String, String], payload: String): Map[String, String] = {
-      var acc = b
-      Json.parseRow(payload).foreach { case (taggedKey, _) =>
-        val (k, tagRepr) = Json.splitTaggedKey(taggedKey)
-        val t = ColType.parse(tagRepr)
-        acc = acc.updated(k,
-          acc.get(k).fold(t.repr)(old => ColType.merge(ColType.parse(old), t).repr))
-      }
-      acc
-    }
-
-    override def merge(b1: Map[String, String], b2: Map[String, String]): Map[String, String] = {
-      var acc = b1
-      b2.foreach { case (k, t) =>
-        acc = acc.updated(k,
-          acc.get(k).fold(t)(old => ColType.merge(ColType.parse(old), ColType.parse(t)).repr))
-      }
-      acc
-    }
-
-    // sorted for a canonical serialized form
-    override def finish(b: Map[String, String]): String =
-      Json.writeRow(b.toSeq.sortBy(_._1).map { case (k, t) => k -> JString(t) })
-
-    override def bufferEncoder: Encoder[Map[String, String]] = ExpressionEncoder[Map[String, String]]()
-    override def outputEncoder: Encoder[String] = Encoders.STRING
-  }
-
-  /** Aggregate per-table choice schemas. The collected result is tiny (one
-    * row per discovered table).
-    */
-  def inferSchemas(emitted: Dataset[Emitted]): Map[String, ChoiceSchema] = {
-    val agg = udaf(new SchemaAggregator)
-    emitted.groupBy(col("table")).agg(agg(col("payload")).as("schema"))
-      .collect()
-      .map(r => r.getString(0) -> ChoiceSchema.deserialize(r.getString(1)))
-      .toMap
-  }
 
   /** The scalar tags a payload value can carry (nulls are keyed `none` but
     * need no parse field — a missing field already reads null).
@@ -378,33 +328,32 @@ object RelationalizeSpark {
   def apply(ds: Dataset[String], name: String,
             options: RelationalizeOptions = RelationalizeOptions()): RelationalizeResult = {
     val spark = ds.sparkSession
-    val (emittedSource: Dataset[Emitted], cached: Option[Dataset[Emitted]]) =
-      options.materializePath match {
+    val emitted: Dataset[Emitted] = options.materializePath match {
       case Some(path) =>
-        val emitted = emitWithSchemas(ds, name, options.schemaMapCap,
-          options.contentDocKeys, options.quarantine, options.docKeyPrefix)
+        val fresh = emit(ds, name, options)
         val toWrite =
           if (options.materializeFilesPerTable > 0)
-            emitted.repartition(col("table"), org.apache.spark.sql.functions.pmod(
+            fresh.repartition(col("table"), org.apache.spark.sql.functions.pmod(
               org.apache.spark.sql.functions.hash(col("payload")),
               lit(options.materializeFilesPerTable)))
-          else emitted
+          else fresh
         toWrite.write.mode(SaveMode.Overwrite).partitionBy("table").parquet(path)
         implicit val enc: Encoder[Emitted] = Encoders.product[Emitted]
         // explicit schema: an empty corpus writes no data files, and
         // schema inference on a data-file-less partitioned dir throws
-        (spark.read
+        spark.read
           .schema(StructType(Seq(
             StructField("payload", StringType), StructField("table", StringType))))
           .parquet(path)
-          .select(col("table").cast(StringType), col("payload")).as[Emitted], None)
+          .select(col("table").cast(StringType), col("payload")).as[Emitted]
       case None =>
-        val c = emitWithSchemas(ds, name, options.schemaMapCap, options.contentDocKeys,
-            options.quarantine, options.docKeyPrefix)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        (c, Some(c))
+        emit(ds, name, options).persist(StorageLevel.MEMORY_AND_DISK)
     }
-    val raw = collectSchemas(emittedSource)
+    // a failed schema collect must not leave the emit cached: no result
+    // (and so no release()) exists yet
+    val raw =
+      try collectSchemas(emitted)
+      catch { case e: Throwable => emitted.unpersist(); throw e }
     val schemas = raw.map { case (t, s0) =>
       var s = s0
       if (options.dropNullColumns) s = s.dropNullColumns._1
@@ -412,12 +361,6 @@ object RelationalizeSpark {
       if (options.dropDuplicateColumns) s = s.dropDuplicateColumns._1
       t -> s
     }
-    val tables = schemas.map { case (t, s) => t -> toDataFrame(emittedSource, t, s) }
-    RelationalizeResult(tables, schemas, cached)
+    RelationalizeResult(schemas, emitted)
   }
-
-  /** Relationalize a JSON string column of an existing DataFrame. */
-  def fromJsonColumn(df: DataFrame, jsonCol: String, name: String,
-                     options: RelationalizeOptions = RelationalizeOptions()): RelationalizeResult =
-    apply(df.select(col(jsonCol)).as(Encoders.STRING), name, options)
 }

@@ -1,80 +1,48 @@
 package graft.streaming
 
 import graft.core.{ChoiceSchema, ColType}
-import graft.relationalize.{Emitted, RelationalizeSpark}
+import graft.relationalize.{RelationalizeOptions, RelationalizeSpark}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql._
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming variant of relationalize.
   *
   * The flatten/explode transform itself is stateless and therefore fully
-  * streaming-compatible — one `mapPartitions` over each micro-batch. Choice
-  * -schema inference is NOT (it is unbounded state: the lattice only grows),
-  * exactly as noted in SURVEY §2.8. Two supported modes:
+  * streaming-compatible — the batch pass 1 ([[RelationalizeSpark.emit]]) over
+  * each micro-batch. Choice-schema inference is NOT (it is unbounded state:
+  * the lattice only grows), exactly as noted in SURVEY §2.8. Two modes:
   *
   *   1. '''frozen schema''' ([[withFrozenSchemas]]): schemas inferred up front
   *      (e.g. from a batch sample or a prior run) are applied to every batch;
   *      values outside a frozen choice raise, like the reference's
   *      convert-time error.
-  *   2. '''foreachBatch''' ([[foreachBatchWriter]]): per-batch inference +
-  *      convert + sink append — schema evolution handled by the caller
-  *      (re-merging the returned per-batch schemas).
+  *   2. '''evolving schema''' ([[runToParquetEvolving]]): each micro-batch runs
+  *      the batch pipeline ([[RelationalizeSpark.apply]]), merges its
+  *      observed schemas into a durable store, migrates already-written
+  *      parquet when a layout widens, and appends under the merged schema.
   */
 object StreamingRelationalize {
 
-  /** Stateless streaming emit: raw JSON lines -> (table, payload) rows.
-    * Usable directly as `emit(stream).writeStream...` with any sink.
+  /** Frozen-schema streaming: convert each table's stream with a fixed choice
+    * schema, returning one streaming DataFrame per table.
     *
     * Rid determinism within one micro-batch derives from (batch partition,
     * ordinal) like batch mode — but those coordinates RESTART every
     * micro-batch, so a sink that accumulates batches and join-backs rids
     * must not use positional keys bare: pass `contentDocKeys = true` here
     * (a pure streaming transform has no batch id to scope keys with), or
-    * use the foreachBatch writers below, which scope every positional key
-    * by `"b<batchId>:"` automatically.
-    */
-  def emit(lines: Dataset[String], name: String,
-           quarantine: Boolean = false,
-           contentDocKeys: Boolean = false): Dataset[Emitted] =
-    RelationalizeSpark.emit(lines, name, contentDocKeys = contentDocKeys,
-      quarantine = quarantine)
-
-  /** Frozen-schema streaming: convert each table's stream with a fixed choice
-    * schema, returning one streaming DataFrame per table. See [[emit]] for
-    * the cross-batch rid contract (`contentDocKeys`).
+    * use [[runToParquetEvolving]], which scopes every positional key by
+    * `"b<batchId>:"` automatically.
     */
   def withFrozenSchemas(lines: Dataset[String], name: String,
                         schemas: Map[String, ChoiceSchema],
                         contentDocKeys: Boolean = false): Map[String, DataFrame] = {
-    val emitted = emit(lines, name, contentDocKeys = contentDocKeys)
+    val emitted = RelationalizeSpark.emit(lines, name,
+      RelationalizeOptions(contentDocKeys = contentDocKeys))
     schemas.map { case (t, sch) => t -> RelationalizeSpark.toDataFrame(emitted, t, sch) }
   }
-
-  /** foreachBatch pipeline: each micro-batch is relationalized with
-    * *per-batch* inferred schemas and handed to `sink` as typed DataFrames.
-    * Returns the writer (caller sets checkpoint/output mode and starts it).
-    * The per-batch cached emit is released once `sink` returns (the sink
-    * must consume/write the tables before returning) — a long-running
-    * stream must not accumulate one persisted emit per micro-batch.
-    * Positional docKeys are scoped by `"b<batchId>:"` so rids stay unique
-    * across the accumulated sink AND idempotent under crash replay (a
-    * replayed batch keeps its id).
-    */
-  def foreachBatchWriter(lines: Dataset[String], name: String,
-      options: graft.relationalize.RelationalizeOptions =
-        graft.relationalize.RelationalizeOptions())(
-      sink: (Map[String, DataFrame], Long) => Unit): DataStreamWriter[String] =
-    lines.writeStream.foreachBatch { (batch: Dataset[String], batchId: Long) =>
-      if (!batch.isEmpty) {
-        val result = RelationalizeSpark(batch, name,
-          options.copy(docKeyPrefix = s"b$batchId:${options.docKeyPrefix}"))
-        try sink(result.tables, batchId)
-        finally result.release()
-      }
-    }
 
   // --- cross-batch schema evolution with sink migration -----------------
 
@@ -246,11 +214,10 @@ object StreamingRelationalize {
       // corrupt any join-back over the accumulated sink (gate-pinned by
       // stream_rel_explode); replay keeps the same id, so rids stay
       // idempotent like the b<batchId> data writes
-      val emitted = RelationalizeSpark.emitWithSchemas(batch, name,
-          docKeyPrefix = s"b$batchId:")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val result = RelationalizeSpark(batch, name,
+        RelationalizeOptions(docKeyPrefix = s"b$batchId:"))
       try {
-        RelationalizeSpark.collectSchemas(emitted).foreach { case (t, observed) =>
+        result.schemas.foreach { case (t, observed) =>
           val tablePath = s"$outDir/$t"
           val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
           recoverInterruptedMigration(fs, tablePath)
@@ -273,13 +240,13 @@ object StreamingRelationalize {
               .write.mode(SaveMode.Overwrite).parquet(s"$outDir/_drift_log/$t/b$batchId")
           }
           SchemaStore.save(spark, outDir, t, merged)
-          RelationalizeSpark.toDataFrame(emitted, t, merged)
+          result.convert(t, merged)
             .write.mode(SaveMode.Overwrite).parquet(s"$tablePath/b$batchId")
         }
-      } finally emitted.unpersist()
+      } finally result.release()
     }
 
-  /** Read a table written by [[runToParquetEvolving]] / [[runToParquet]]:
+  /** Read a table written by [[runToParquetEvolving]]:
     * batch writes live in `b<batchId>` subdirectories (migrated history sits
     * flat in the root), so the listing must recurse.
     */
@@ -306,19 +273,4 @@ object StreamingRelationalize {
           org.apache.spark.sql.types.StructField("to_type", org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("widening", org.apache.spark.sql.types.BooleanType))))
   }
-
-  /** Convenience: run a micro-batch relationalize stream into per-table
-    * parquet directories under `outDir/<table>/b<batchId>/` (batch-id
-    * subpaths + Overwrite: replays after a pre-commit crash are idempotent),
-    * with availableNow semantics for bounded sources.
-    */
-  def runToParquet(lines: Dataset[String], name: String, outDir: String,
-                   checkpoint: String): StreamingQuery =
-    foreachBatchWriter(lines, name) { (tables, batchId) =>
-      tables.foreach { case (t, df) =>
-        df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$t/b$batchId")
-      }
-    }.option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

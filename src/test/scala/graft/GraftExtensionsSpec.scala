@@ -37,6 +37,17 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(d == 11.0)
   }
 
+  test("every function in the shared table resolves in an extension-only session") {
+    val names = graft.functions.GraftFunctions.SqlFunctions.map(_._1)
+    assert(names.distinct.size == names.size, s"duplicate names in $names")
+    val missing = names.filterNot(n =>
+      spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not installed by GraftExtensions: $missing")
+    // one of the functions the extension list used to miss, run end to end
+    val Array(s) = spark.sql("SELECT byte_sum(CAST('ab' AS BINARY))").collect().map(_.getLong(0))
+    assert(s == 97L + 98L)
+  }
+
   test("generator and bloom work end-to-end in pure SQL") {
     spark.range(0, 100).selectExpr("id * 2 AS k").createOrReplaceTempView("ext_base")
     spark.range(0, 10).selectExpr("id * 3 AS k").createOrReplaceTempView("ext_delta")

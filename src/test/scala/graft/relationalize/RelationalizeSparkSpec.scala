@@ -100,13 +100,21 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     res.release()
   }
 
+  test("a failing schema collect leaves no cached emit behind") {
+    spark.catalog.clearCache()
+    intercept[org.apache.spark.SparkException] {
+      RelationalizeSpark(ds(lmsDocs.head, """{"broken"""), "users")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("distributed schema inference equals single-pass observation") {
     val docs = (0 until 100).map(i =>
       if (i % 3 == 0) s"""{"k": $i, "m": null}"""
       else if (i % 3 == 1) s"""{"k": "s$i", "m": true}"""
       else s"""{"k": $i.5}""")
     val emitted = RelationalizeSpark.emit(ds(docs: _*).repartition(7), "t")
-    val inferred = RelationalizeSpark.inferSchemas(emitted)("t")
+    val inferred = RelationalizeSpark.collectSchemas(emitted)("t")
     val local = docs.foldLeft(ChoiceSchema.empty)((s, d) => s.observe(Json.parseRow(d)))
     assert(inferred.columns == local.columns)
     assert(inferred.columns("k").repr == "c-float-int-str")
@@ -151,8 +159,8 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rid = md5(docKey : ridOrdinal) is content-independent, and positional
     // coordinates restart every micro-batch — so two DIFFERENT docs at the
     // same (partition, ordinal) in different batches share a rid tree
-    // unless the writer scopes keys by batch id (what foreachBatchWriter /
-    // runToParquetEvolving now do; gate row: stream_rel_explode)
+    // unless the writer scopes keys by batch id (what runToParquetEvolving
+    // does; gate row: stream_rel_explode)
     def rootRid(doc: String, prefix: String): String = {
       val res = RelationalizeSpark(ds(doc).repartition(1), "t",
         RelationalizeOptions(docKeyPrefix = prefix))
@@ -222,17 +230,19 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val arrays = (0 until 3).map(j => s""""arr_${i}_$j": [{"v": $i}, {"v": $j}]""").mkString(", ")
       s"""{"id": $i, $arrays}"""
     }
-    val capped = RelationalizeSpark(ds(docs: _*), "fan",
-      RelationalizeOptions(schemaMapCap = 16))
+    val cappedEmit = RelationalizeSpark.emit(ds(docs: _*), "fan",
+      RelationalizeOptions(), schemaMapCap = 16)
+    val capped = RelationalizeSpark.collectSchemas(cappedEmit)
     val uncapped = RelationalizeSpark(ds(docs: _*), "fan")
-    assert(capped.schemas.keySet == uncapped.schemas.keySet)
-    assert(capped.schemas.keySet.size == 361) // root + 360 child tables
-    assert(capped.schemas.map { case (t, s) => t -> s.serialize } ==
+    assert(capped.keySet == uncapped.schemas.keySet)
+    assert(capped.keySet.size == 361) // root + 360 child tables
+    assert(capped.map { case (t, s) => t -> s.serialize } ==
       uncapped.schemas.map { case (t, s) => t -> s.serialize })
     // spot-check a child table decodes identically
     val t = "fan_arr_7_2"
-    assert(capped(t).columns.sameElements(uncapped(t).columns))
-    assert(capped(t).count() == 2 && uncapped(t).count() == 2)
+    val cappedT = RelationalizeSpark.toDataFrame(cappedEmit, t, capped(t))
+    assert(cappedT.columns.sameElements(uncapped(t).columns))
+    assert(cappedT.count() == 2 && uncapped(t).count() == 2)
   }
 
   test("rid keys: positional docKeys re-key under a repartition (the pinned hazard)") {
@@ -296,7 +306,7 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.createDirectories(java.nio.file.Paths.get(inDir))
     Files.writeString(java.nio.file.Paths.get(s"$inDir/part0.jsonl"), lmsDocs.mkString("\n"))
     val lines = spark.readStream.textFile(inDir)
-    val q = StreamingRelationalize.runToParquet(lines, "users", s"$tmp/out", s"$tmp/ckpt")
+    val q = StreamingRelationalize.runToParquetEvolving(lines, "users", s"$tmp/out", s"$tmp/ckpt")
     q.awaitTermination(60000)
     assert(StreamingRelationalize.readTable(spark, s"$tmp/out", "users").count() == 2)
     assert(StreamingRelationalize.readTable(spark, s"$tmp/out", "users_enrollments").count() == 2)
