@@ -19,13 +19,22 @@ import scala.collection.immutable.VectorMap
 final case class ChoiceSchema(columns: VectorMap[String, ColType]) {
   import ColType._
 
+  /** Fold one row into the schema. Returns `this` when every value's type
+    * is already admitted, which is the common case once a table's columns
+    * have been seen.
+    */
   def observe(row: Iterable[(String, JValue)]): ChoiceSchema = {
     var cols = columns
     row.foreach { case (k, v) =>
       val t = ColType.of(v)
-      cols = cols.updated(k, cols.get(k).fold(t)(ColType.merge(_, t)))
+      cols.get(k) match {
+        case Some(old) =>
+          val merged = ColType.merge(old, t)
+          if (merged ne old) cols = cols.updated(k, merged)
+        case None => cols = cols.updated(k, t)
+      }
     }
-    ChoiceSchema(cols)
+    if (cols eq columns) this else ChoiceSchema(cols)
   }
 
   def merge(other: ChoiceSchema): ChoiceSchema = {

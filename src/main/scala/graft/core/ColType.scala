@@ -80,14 +80,23 @@ object ColType {
     case other => Set(other.repr)
   }
 
-  def merge(a: ColType, b: ColType): ColType =
-    if (a == b) a
-    else {
+  /** The least type admitting both. Observation calls this once per value,
+    * and nearly every call meets a type the column already admits, so those
+    * cases return an existing instance without building member sets; a
+    * caller can test `eq` on the result to see that nothing changed.
+    */
+  def merge(a: ColType, b: ColType): ColType = (a, b) match {
+    case _ if a == b => a
+    case (_, CNone) => a
+    case (CNone, _) => b
+    case (c: CChoice, t) if c.members.contains(t.repr) => c
+    case (t, c: CChoice) if c.members.contains(t.repr) => c
+    case _ =>
       val ms = members(a) ++ members(b)
       if (ms.isEmpty) CNone
       else if (ms.size == 1) parse(ms.head)
       else CChoice(ms.toVector.sorted)
-    }
+  }
 
   /** Spark type for a base tag (`sql_dialects.py:52-59` analog: the
     * all-null placeholder maps to boolean).

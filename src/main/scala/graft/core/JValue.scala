@@ -59,14 +59,16 @@ object Json {
   def parse(s: String): JsonNode = mapper.readTree(s)
 
   /** Serialize a flat row to a compact JSON object, preserving key order. */
-  def writeRow(row: Iterable[(String, JValue)]): String = {
+  def writeRow(row: Iterable[(String, JValue)]): String = write(row, tagged = false)
+
+  private def write(row: Iterable[(String, JValue)], tagged: Boolean): String = {
     val sb = new StringBuilder(64)
     sb.append('{')
     var first = true
     row.foreach { case (k, v) =>
       if (!first) sb.append(',')
       first = false
-      writeString(sb, k)
+      writeString(sb, if (tagged) taggedKey(k, ColType.of(v).repr) else k)
       sb.append(':')
       v match {
         case JNull => sb.append("null")
@@ -123,8 +125,7 @@ object Json {
   def taggedKey(k: String, tag: String): String = s"$k$TagSep$tag"
 
   /** Serialize a flat row with tag-carrying keys (`k<TagSep>tag`). */
-  def writeTaggedRow(row: Iterable[(String, JValue)]): String =
-    writeRow(row.map { case (k, v) => taggedKey(k, ColType.of(v).repr) -> v })
+  def writeTaggedRow(row: Iterable[(String, JValue)]): String = write(row, tagged = true)
 
   /** Parse a flat-row JSON object back to an ordered column->scalar map. */
   def parseRow(s: String): VectorMap[String, JValue] = {

@@ -6,7 +6,6 @@ import graft.core._
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import scala.collection.immutable.VectorMap
-import scala.jdk.CollectionConverters._
 
 /** The core relationalize transform: depth-first walk of one JSON document,
   * flattening nested structs and splitting arrays into child tables linked by
@@ -43,6 +42,22 @@ object Relationalizer {
   private val localMd: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
+  private val HexDigits = "0123456789abcdef".toCharArray
+
+  /** Lowercase hex of a digest, through a lookup table: `f"$b%02x"` builds a
+    * java.util.Formatter per byte, 16 per rid.
+    */
+  private def hex(bytes: Array[Byte]): String = {
+    val out = new Array[Char](bytes.length * 2)
+    var i = 0
+    while (i < bytes.length) {
+      out(2 * i) = HexDigits((bytes(i) >> 4) & 0xf)
+      out(2 * i + 1) = HexDigits(bytes(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+
   /** Relationalize one parsed document.
     *
     * @param doc    the JSON document (normally an object)
@@ -54,62 +69,68 @@ object Relationalizer {
   def relationalize(doc: JsonNode, name: String, docKey: String): Vector[(String, FlatRow)] = {
     val out = Vector.newBuilder[(String, FlatRow)]
     var ridOrdinal = 0
+    lazy val docKeyBytes = docKey.getBytes(StandardCharsets.UTF_8)
 
     def nextRid(): String = {
       val md = Relationalizer.localMd.get()
       md.reset()
-      md.update(docKey.getBytes(StandardCharsets.UTF_8))
+      md.update(docKeyBytes)
       md.update(':'.toByte)
       md.update(ridOrdinal.toString.getBytes(StandardCharsets.UTF_8))
       ridOrdinal += 1
-      val hex = md.digest().map(b => f"$b%02x").mkString
-      s"R$Delimiter$hex"
+      s"R$Delimiter${hex(md.digest())}"
     }
 
-    def walk(node: JsonNode, path: String): FlatRow = {
+    /** `acc` plus the flat columns of `node` at `path`. Columns go straight
+      * into the caller's row (VectorMap.updated: last write wins, a key keeps
+      * its first position, like Python `dict.update`), with no map per value.
+      */
+    def walk(node: JsonNode, path: String, acc: FlatRow): FlatRow =
       if (node.isArray) {
         val rid = nextRid()
         val table = s"$name$Delimiter$path"
-        node.elements().asScala.zipWithIndex.foreach { case (elem, idx) =>
-          out += table -> elementRow(elem, rid, idx, path)
+        // same empty-path prefix rule as the dict branch: a root-level array
+        // (path "") yields bare _val_/_rid_/_index_ keys, per the reference
+        val prefix = if (path.isEmpty) "" else s"$path$Delimiter"
+        val (idKey, indexKey) = (s"$prefix$IdCol", s"$prefix$IndexCol")
+        val elems = node.elements()
+        var idx = 0
+        while (elems.hasNext) {
+          val row = elementRow(elems.next(), prefix)
+            .updated(idKey, JString(rid))
+            .updated(indexKey, JLong(idx.toLong))
+          out += table -> row
+          idx += 1
         }
-        VectorMap(path -> JString(rid))
+        acc.updated(path, JString(rid))
       } else if (node.isObject) {
         val prefix = if (path.isEmpty) "" else s"$path$Delimiter"
-        var acc = VectorMap.empty[String, JValue]
-        node.properties().asScala.foreach { e =>
-          walk(e.getValue, s"$prefix${e.getKey}").foreach { case (k, v) => acc = acc.updated(k, v) }
+        var row = acc
+        val props = node.properties().iterator()
+        while (props.hasNext) {
+          val e = props.next()
+          row = walk(e.getValue, prefix + e.getKey, row)
         }
-        acc
-      } else VectorMap(path -> JValue.of(node))
-    }
+        row
+      } else acc.updated(path, JValue.of(node))
 
-    def elementRow(elem: JsonNode, rid: String, idx: Int, path: String): FlatRow = {
-      // same empty-path prefix rule as the dict branch: a root-level array
-      // (path "") yields bare _val_/_rid_/_index_ keys, per the reference
-      val prefix = if (path.isEmpty) "" else s"$path$Delimiter"
+    /** An array element's own columns; the caller appends `_rid_`/`_index_`. */
+    def elementRow(elem: JsonNode, prefix: String): FlatRow =
       if (elem.isObject) {
-        // struct element: its own keys first, then _rid_/_index_ appended.
-        // A user key literally named _rid_/_index_ is overwritten by the
-        // synthetic columns (reference sets them on the dict before the
-        // walk), so skip them here.
-        var acc = VectorMap.empty[String, JValue]
-        elem.properties().asScala.foreach { e =>
+        // struct element: its own keys first. A user key literally named
+        // _rid_/_index_ is overwritten by the synthetic columns (reference
+        // sets them on the dict before the walk), so skip them here.
+        var row: FlatRow = VectorMap.empty
+        val props = elem.properties().iterator()
+        while (props.hasNext) {
+          val e = props.next()
           if (e.getKey != IdCol && e.getKey != IndexCol)
-            walk(e.getValue, s"$prefix${e.getKey}").foreach { case (k, v) => acc = acc.updated(k, v) }
+            row = walk(e.getValue, prefix + e.getKey, row)
         }
-        acc
-          .updated(s"$prefix$IdCol", JString(rid))
-          .updated(s"$prefix$IndexCol", JLong(idx.toLong))
-      } else {
-        // scalar or nested-array element: synthetic {_val_, _rid_, _index_}
-        walk(elem, s"$prefix$ValCol")
-          .updated(s"$prefix$IdCol", JString(rid))
-          .updated(s"$prefix$IndexCol", JLong(idx.toLong))
-      }
-    }
+        row
+      } else walk(elem, s"$prefix$ValCol", VectorMap.empty) // scalar or nested array
 
-    val rootRow = walk(doc, "")
+    val rootRow = walk(doc, "", VectorMap.empty)
     out += name -> rootRow
     out.result()
   }
@@ -126,6 +147,6 @@ object Relationalizer {
   def contentDocKey(line: String): String = {
     val md = localMd.get()
     md.reset()
-    md.digest(line.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString
+    hex(md.digest(line.getBytes(StandardCharsets.UTF_8)))
   }
 }

@@ -1,8 +1,16 @@
 package graft.sources
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
+import org.apache.hadoop.mapred.{InputSplit, JobConf}
+import org.apache.hadoop.mapred.lib.{CombineFileSplit, CombineTextInputFormat}
+import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, isnan, when}
 import org.apache.spark.sql.types.DoubleType
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Sources (SURVEY §2.1): the reference ingests JSONL from local FS / S3 /
   * in-memory iterables. Spark equivalents, one per reference operator.
@@ -14,12 +22,36 @@ import org.apache.spark.sql.types.DoubleType
   */
 object Sources {
 
-  /** S1: JSONL file(s) -> one raw line per row. Works for local paths and
-    * `s3a://` URIs alike; gzip is transparent. Lines arrive unparsed so the
-    * relationalizer controls scalar typing (see graft.core.JValue).
+  /** S1: JSONL file(s) -> one raw line per row. `path` is a file, a
+    * directory (read recursively, `_`/`.` names skipped), a glob or a
+    * comma-separated list, local or `s3a://`; gzip is transparent. Lines
+    * arrive unparsed so the relationalizer controls scalar typing (see
+    * graft.core.JValue).
+    *
+    * Split policy ([[EvenLineInputFormat]]): the input's bytes are cut into
+    * `defaultParallelism` line-aligned splits of near-equal size, each at
+    * most `spark.sql.files.maxPartitionBytes`, in path then offset order.
+    * Small files are packed together and a file that cannot be split (gzip)
+    * stays whole. Spark's own file planner does not cut a split below
+    * `spark.sql.files.openCostInBytes` (4 MB), so through it a few-MB JSONL
+    * file is one or two partitions, and relationalize pass 1 (and every
+    * pass-2 conversion of its cached emit) runs on one or two cores.
+    *
+    * Positional rids (`RelationalizeOptions.contentDocKeys = false`) follow
+    * this split, so they change with the core count; content keys do not.
     */
-  def jsonl(spark: SparkSession, path: String): Dataset[String] =
-    spark.read.textFile(path)
+  def jsonl(spark: SparkSession, path: String): Dataset[String] = {
+    val job = new JobConf(spark.sessionState.newHadoopConf())
+    org.apache.hadoop.mapred.FileInputFormat.setInputPaths(job, path)
+    job.setBoolean(FileInputFormat.INPUT_DIR_RECURSIVE, true)
+    job.setLong(FileInputFormat.SPLIT_MAXSIZE, spark.sessionState.conf.filesMaxPartitionBytes)
+    val lines = spark.sparkContext
+      .hadoopRDD(job, classOf[EvenLineInputFormat], classOf[LongWritable], classOf[Text],
+        spark.sparkContext.defaultParallelism)
+      .map(_._2.toString)
+    lines.partitions // list and plan now, like spark.read: a missing path fails here
+    spark.createDataset(lines)(Encoders.STRING)
+  }
 
   /** S2: in-memory iterable (tests, small corpora). */
   def fromIterable(spark: SparkSession, docs: Seq[String]): Dataset[String] =
@@ -51,6 +83,51 @@ object Sources {
     */
   def fromMongoExport(lines: Dataset[String]): Dataset[String] =
     lines.map(MongoExtendedJson.normalize _)(Encoders.STRING)
+}
+
+/** Line-aligned text splits of near-equal size: the files' bytes, in path
+  * order, are cut into `numSplits` ranges of `ceil(total / numSplits)` bytes
+  * (at most `mapreduce.input.fileinputformat.split.maxsize`). A range may
+  * span several small files; a file whose codec cannot split (gzip) goes
+  * into one range whole. Each piece is read by Hadoop's line reader, which
+  * skips a partial first line and finishes the last one, so every line is
+  * read exactly once whatever the cut points.
+  */
+final class EvenLineInputFormat extends CombineTextInputFormat {
+  override def getSplits(job: JobConf, numSplits: Int): Array[InputSplit] = {
+    val codecs = new CompressionCodecFactory(job)
+    val files = listStatus(job).filter(f => f.isFile && f.getLen > 0).sortBy(_.getPath.toString)
+    val total = files.map(_.getLen).sum
+    val n = math.max(1, numSplits)
+    val target = math.max(1L,
+      math.min(job.getLong(FileInputFormat.SPLIT_MAXSIZE, Long.MaxValue), (total + n - 1) / n))
+    val splits = ArrayBuffer.empty[InputSplit]
+    val pieces = ArrayBuffer.empty[(FileStatus, Long, Long)]
+    var filled = 0L
+    def close(): Unit = if (pieces.nonEmpty) {
+      val (first, start, _) = pieces.head
+      val hosts = first.getPath.getFileSystem(job)
+        .getFileBlockLocations(first, start, 1).headOption.fold(Array.empty[String])(_.getHosts)
+      splits += new CombineFileSplit(job, pieces.map(_._1.getPath).toArray,
+        pieces.map(_._2).toArray, pieces.map(_._3).toArray, hosts)
+      pieces.clear()
+      filled = 0L
+    }
+    files.foreach { f =>
+      val codec = codecs.getCodec(f.getPath)
+      val splittable = codec == null || codec.isInstanceOf[SplittableCompressionCodec]
+      var offset = 0L
+      while (offset < f.getLen) {
+        val take = if (splittable) math.min(f.getLen - offset, target - filled) else f.getLen
+        pieces += ((f, offset, take))
+        offset += take
+        filled += take
+        if (filled >= target) close()
+      }
+    }
+    close()
+    splits.toArray
+  }
 }
 
 /** Canonical MongoDB extended-JSON -> plain-JSON rewriter (S3 support). */

@@ -155,6 +155,55 @@ class ChoiceSchemaSpec extends AnyFunSuite {
     }
   }
 
+  /** The set-based definition of [[ColType.merge]], kept as the oracle for
+    * its fast paths: the union of both sides' non-none base members.
+    */
+  private def mergeBySets(a: ColType, b: ColType): ColType = {
+    def members(t: ColType): Set[String] = t match {
+      case CChoice(ms) => ms.toSet
+      case CNone => Set.empty
+      case other => Set(other.repr)
+    }
+    if (a == b) a
+    else {
+      val ms = members(a) ++ members(b)
+      if (ms.isEmpty) CNone
+      else if (ms.size == 1) ColType.parse(ms.head)
+      else CChoice(ms.toVector.sorted)
+    }
+  }
+
+  private val genColType: Gen[ColType] = {
+    val base = Gen.oneOf[ColType](CBool, CInt, CFloat, CStr, CNone, CDatetime,
+      CUnsupported("list"), CUnsupported("dict"))
+    Gen.frequency(2 -> base, 1 -> Gen.listOf(base).map(_.foldLeft[ColType](CNone)(mergeBySets)))
+  }
+
+  test("merge's fast paths agree with the set-based definition; known types keep their instance") {
+    forAll(Gen.zip(genColType, genColType), 1000) { case (a, b) =>
+      val merged = ColType.merge(a, b)
+      assert(merged == mergeBySets(a, b), s"merge($a, $b)")
+      // a value's own type is never a choice: that is the case observation meets
+      if (merged == a && !b.isInstanceOf[CChoice]) assert(merged eq a, s"merge($a, $b) rebuilt $a")
+      if (merged == b && !a.isInstanceOf[CChoice]) assert(merged eq b, s"merge($a, $b) rebuilt $b")
+    }
+    def sample(tag: String): JValue = tag match {
+      case "bool" => JBool(true)
+      case "int" => JLong(1)
+      case "float" => JDouble(1.5)
+      case "str" => JString("s")
+      case _ => JNull
+    }
+    forAll(genSchema, 300) { s =>
+      val admitted = s.columns.map {
+        case (k, CChoice(ms)) => k -> sample(ms.head)
+        case (k, t) => k -> sample(t.repr)
+      }
+      assert(s.observe(admitted) eq s, s"observing admitted values rebuilt $s")
+      assert(s.observe(admitted.map { case (k, _) => k -> JNull }) eq s)
+    }
+  }
+
   test("sequential observe == merge of per-row schemas (shard equivalence, schema.test.py:85-98)") {
     forAll(Gen.listOf(genRow)) { rows =>
       val sequential = rows.foldLeft(ChoiceSchema.empty)(_.observe(_))

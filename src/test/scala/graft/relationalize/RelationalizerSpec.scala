@@ -131,6 +131,14 @@ class RelationalizerSpec extends AnyFunSuite {
     assert(a != c)
   }
 
+  test("rid and content-key hex are pinned byte for byte (goldens from Python hashlib)") {
+    // hashlib.md5(b"0:0:0").hexdigest(): docKey "0:0", rid ordinal 0
+    val root = Relationalizer.relationalizeLine("""{"x":[1]}""", "t", "0:0").last
+    assert(root == ("t", Map("x" -> JString("R_90e48cd0d5d9ad4fa889c6194452bea7"))))
+    // hashlib.md5(b'{"a":1}').hexdigest()
+    assert(Relationalizer.contentDocKey("""{"a":1}""") == "bb6cb5c68df4652941caf652a366f2d8")
+  }
+
   test("mock LMS shape: users + users_enrollments (FIXTURES.md §3)") {
     val json = """{"user_id": "u1", "created_at": 1700000000, "name": "A", "email": "a@x.com",
                   |"enrollments": [{"course_id": "c1", "timestamp": 1}, {"course_id": "c2", "timestamp": 2}]}""".stripMargin
