@@ -52,8 +52,11 @@ object GraftFunctions {
     "graft_might_contain" -> (exprs =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
 
-  /** Register all engine functions on a session (idempotent). */
-  def registerAll(spark: SparkSession): Unit = {
+  /** Register all engine functions on a session (idempotent). Synchronized:
+    * concurrent table conversions call it from several driver threads, and
+    * the optimizer-rule registration below is a check-then-set.
+    */
+  def registerAll(spark: SparkSession): Unit = synchronized {
     SqlFunctions.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
     }

@@ -1,11 +1,14 @@
 package graft.streaming
 
 import graft.core.{ChoiceSchema, ColType}
-import graft.relationalize.{RelationalizeOptions, RelationalizeSpark}
+import graft.relationalize.{RelationalizeOptions, RelationalizeResult, RelationalizeSpark}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql._
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
 
 /** Structured-Streaming variant of relationalize.
   *
@@ -175,12 +178,19 @@ object StreamingRelationalize {
     * full corpus. Survives restarts: schema state is re-read per batch, and
     * every batch first self-heals any interrupted migration swap.
     *
-    * Crash-safety ordering per table: recover -> migrate -> save schema ->
-    * write. Saving BEFORE the write means a crash anywhere in the batch
-    * leaves store >= file layout or an uncommitted checkpoint: the batch
-    * replays with the same observed schemas, the migration re-runs (an
-    * identity rewrite if it already swapped in), and the write lands in the
-    * consistent layout.
+    * '''Ordering is per table; tables run concurrently.''' After the
+    * batch's one schema collect, each table runs its own chain recover ->
+    * load schema -> migrate -> drift log -> save schema -> write, and the
+    * chains of different tables run at the same time on a pool of
+    * `min(tables, sparkContext.defaultParallelism)` driver threads. Tables
+    * share no files, so the crash-safety argument holds per table: saving
+    * BEFORE the write means a crash anywhere in a chain leaves store >=
+    * file layout or an uncommitted checkpoint; the batch replays with the
+    * same observed schemas, the migration re-runs (an identity rewrite if
+    * it already swapped in), and the write lands in the consistent layout.
+    * A failing chain does not cut the others short: the batch waits for
+    * every table, then throws the first failure, so the checkpoint does
+    * not commit.
     *
     * '''Replay idempotence''': each batch writes to the batch-id-
     * deterministic subpath `<table>/b<batchId>` with Overwrite, so the
@@ -204,47 +214,83 @@ object StreamingRelationalize {
   /** One micro-batch of [[runToParquetEvolving]] — exposed so the replay
     * spec can invoke the same batch twice, exactly as the engine does after
     * a crash between the sink write and the checkpoint commit.
+    *
+    * The table pool is created on the calling thread, for this batch only,
+    * and shut down before returning. Its threads are started by the calling
+    * thread and so inherit its Spark local properties (the stream's job
+    * group, which lets `query.stop()` cancel table jobs still running) and
+    * its active session; threads kept across batches would carry a stale
+    * batch's properties. Each job is labelled `relationalize b<batchId>
+    * <table>: <step>`. The cached emit is released only after every table
+    * has finished.
     */
   private[graft] def processEvolvingBatch(batch: Dataset[String], batchId: Long,
-                                          name: String, outDir: String): Unit =
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      // batch-scoped docKeys: positional coordinates restart every batch,
-      // so without the prefix two batches' docs could share a rid tree and
-      // corrupt any join-back over the accumulated sink (gate-pinned by
-      // stream_rel_explode); replay keeps the same id, so rids stay
-      // idempotent like the b<batchId> data writes
-      val result = RelationalizeSpark(batch, name,
-        RelationalizeOptions(docKeyPrefix = s"b$batchId:"))
-      try {
-        result.schemas.foreach { case (t, observed) =>
-          val tablePath = s"$outDir/$t"
-          val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-          recoverInterruptedMigration(fs, tablePath)
-          val prior = SchemaStore.load(spark, outDir, t)
-          val merged = prior.fold(observed)(_.merge(observed))
-          prior.filter(_.outputColumns != merged.outputColumns)
-            .foreach(p => migrateParquet(spark, tablePath, p, merged))
-          // drift log: every column-level change this batch caused, as an
-          // auditable history next to the data (the streaming face of
-          // rel_schema_drift — ChoiceSchema.diff is lattice-aware, so each
-          // row carries the widening-vs-breaking verdict). Batch-id subpath
-          // + Overwrite = replay-idempotent, same as the data writes.
-          prior.map(_.diff(merged)).filter(_.nonEmpty).foreach { drifts =>
-            import spark.implicits._
-            drifts.map(d => (batchId, t, d.column, d.change,
-                d.from.orNull, d.to.orNull, d.widening))
-              .toDF("batch_id", "table", "column", "change",
-                "from_type", "to_type", "widening")
-              .coalesce(1)
-              .write.mode(SaveMode.Overwrite).parquet(s"$outDir/_drift_log/$t/b$batchId")
-          }
-          SchemaStore.save(spark, outDir, t, merged)
-          result.convert(t, merged)
-            .write.mode(SaveMode.Overwrite).parquet(s"$tablePath/b$batchId")
+                                          name: String, outDir: String): Unit = {
+    val sc = batch.sparkSession.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"relationalize b$batchId $name: schemas")
+    // batch-scoped docKeys: positional coordinates restart every batch,
+    // so without the prefix two batches' docs could share a rid tree and
+    // corrupt any join-back over the accumulated sink (gate-pinned by
+    // stream_rel_explode); replay keeps the same id, so rids stay
+    // idempotent like the b<batchId> data writes. An empty batch observes
+    // no table, so it writes nothing.
+    val result =
+      try RelationalizeSpark(batch, name, RelationalizeOptions(docKeyPrefix = s"b$batchId:"))
+      finally sc.setJobDescription(callerDescription)
+    try {
+      val chains = result.schemas.toSeq.sortBy(_._1).map { case (t, observed) =>
+        new Callable[Unit] {
+          def call(): Unit = evolveTable(batch.sparkSession, result, batchId, outDir, t, observed)
         }
-      } finally result.release()
+      }
+      if (chains.nonEmpty) {
+        val pool = Executors.newFixedThreadPool(math.min(chains.size, sc.defaultParallelism))
+        val failures =
+          try pool.invokeAll(chains.asJava).asScala.toSeq.flatMap { f =>
+            try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+          } finally pool.shutdownNow()
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed)
+          throw first
+        }
+      }
+    } finally result.release()
+  }
+
+  /** One table's chain of [[processEvolvingBatch]], run on a pool thread. */
+  private def evolveTable(spark: SparkSession, result: RelationalizeResult, batchId: Long,
+                          outDir: String, t: String, observed: ChoiceSchema): Unit = {
+    def step(label: String): Unit =
+      spark.sparkContext.setJobDescription(s"relationalize b$batchId $t: $label")
+    val tablePath = s"$outDir/$t"
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverInterruptedMigration(fs, tablePath)
+    val prior = SchemaStore.load(spark, outDir, t)
+    val merged = prior.fold(observed)(_.merge(observed))
+    step("migrate")
+    prior.filter(_.outputColumns != merged.outputColumns)
+      .foreach(p => migrateParquet(spark, tablePath, p, merged))
+    // drift log: every column-level change this batch caused, as an
+    // auditable history next to the data (the streaming face of
+    // rel_schema_drift — ChoiceSchema.diff is lattice-aware, so each
+    // row carries the widening-vs-breaking verdict). Batch-id subpath
+    // + Overwrite = replay-idempotent, same as the data writes.
+    step("drift-log")
+    prior.map(_.diff(merged)).filter(_.nonEmpty).foreach { drifts =>
+      import spark.implicits._
+      drifts.map(d => (batchId, t, d.column, d.change,
+          d.from.orNull, d.to.orNull, d.widening))
+        .toDF("batch_id", "table", "column", "change",
+          "from_type", "to_type", "widening")
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/_drift_log/$t/b$batchId")
     }
+    SchemaStore.save(spark, outDir, t, merged)
+    step("write")
+    result.convert(t, merged)
+      .write.mode(SaveMode.Overwrite).parquet(s"$tablePath/b$batchId")
+  }
 
   /** Read a table written by [[runToParquetEvolving]]:
     * batch writes live in `b<batchId>` subdirectories (migrated history sits
