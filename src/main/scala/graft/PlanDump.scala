@@ -31,7 +31,12 @@ object PlanDump {
     "mm_frame_dedup" -> (() => ops.MultimodalQueries.frameDedupPlan(s, dir)._1),
     "q_pagerank_round" -> (() => ops.IterativeQueries.pagerankRoundPlan(s, dir)._1),
     "q_pagerank_directed_round" -> (() => ops.IterativeQueries.pagerankDirectedRoundPlan(s, dir)._1),
-    "q_kcore_round" -> (() => ops.IterativeQueries.kcoreRoundPlan(s, dir)._1),
+    // a below-dial k-core round (round 2) over the cached edges
+    "q_kcore_round" -> { () =>
+      val edges = ops.IterativeQueries.kcoreEdges(ops.Tables(s, dir, "lineitem")).persist()
+      val round1 = ops.IterativeQueries.kcoreRound(edges).collect().map(_.getLong(0)).sorted
+      ops.IterativeQueries.kcoreRound(ops.IterativeQueries.kcoreKept(edges, Some(round1)))
+    },
     // r13: connected-components round over the embedding-LSH pair graph
     // (the emb_dup_clusters loop body) — propagate + doubling halves
     "emb_dup_clusters_propagate" -> (() => ops.DedupQueries.ccRoundPlan(s, dir)._1),

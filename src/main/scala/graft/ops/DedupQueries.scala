@@ -1018,7 +1018,9 @@ object DedupQueries {
     var backing = gen0
     var changed = 1L
     var rounds = 0
-    while (changed > 0) {
+    // the label is thread-local: finally restores the caller's on any exit
+    val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
+    try while (changed > 0) {
       rounds += 1
       spark.sparkContext.setJobDescription(s"cc: round $rounds")
       val viaNeighbors = ccPropagate(sym, labels, hinted)
@@ -1045,8 +1047,7 @@ object DedupQueries {
         if (rounds % CcCheckpointInterval == 0)
           spark.createDataFrame(nextP.rdd, nextP.schema)
         else nextP
-    }
-    spark.sparkContext.setJobDescription(null)
+    } finally spark.sparkContext.setJobDescription(callerDescription)
     // singletons re-join here labeled with their own id — exactly the label
     // the loop would have computed for an edge-less vertex
     val withSingles = labels.union(

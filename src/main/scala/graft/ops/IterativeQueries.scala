@@ -430,9 +430,9 @@ object IterativeQueries {
     // joins fall back to the shuffled form, where only the rank vector
     // moves. Same rows either way; this is the hint AQE would derive if
     // the generations carried statistics.
-    // try/finally: the description is thread-local — an exception between
-    // set and clear would otherwise leak the label onto unrelated jobs on
-    // this thread (round-12 advice)
+    // the description is thread-local: finally restores the caller's, so
+    // neither an exception nor the return leaks or wipes a label
+    val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
     try {
       spark.sparkContext.setJobDescription("pagerank_directed: build edges+degrees")
       val bcast = nodeDeg.count() <= BroadcastNodeCap
@@ -462,7 +462,7 @@ object IterativeQueries {
       spark.sparkContext.setJobDescription("pagerank_directed: release")
       val out = ranks.select(col("node").as("partkey"), col("rank").as("pr_fixed"))
       (Lifecycle.released(out, edgesDeg, nodeDeg, backing), round)
-    } finally spark.sparkContext.setJobDescription(null)
+    } finally spark.sparkContext.setJobDescription(callerDescription)
   }
 
   /** One synchronous directed round: dangling-mass 1-row broadcast,
@@ -546,10 +546,6 @@ object IterativeQueries {
     Lifecycle.released(out, barriers: _*)
   }
 
-  /** [[triangles]]'s lazy plan twin over an (l_orderkey, l_partkey) frame —
-    * for plan-shape inspection (the public entry returns a checkpointed
-    * LogicalRDD). Caller unpersists the returned barriers.
-    */
   /** Strong (support ≥ 2) co-occurrence pairs, u < v: per-order ordered-pair
     * expansion via ONE groupBy + explode instead of a self-join (the fact
     * table is read and shuffled once, no join sorts); collect_set dedupes
@@ -568,6 +564,10 @@ object IterativeQueries {
       .filter(col("n") >= 2)
       .select(col("u"), col("v"))
 
+  /** [[triangles]]' kernel over an (l_orderkey, l_partkey) frame, for plan
+    * inspection. Not lazy: its dial counts materialize the `pe`, `deg` and
+    * `ori` caches. The caller unpersists the returned barriers.
+    */
   private[graft] def trianglesPlan(li: DataFrame): (DataFrame, Seq[DataFrame]) = {
     import org.apache.spark.storage.StorageLevel
     // pe feeds BOTH the degree aggregate and the orientation join probe —
@@ -624,10 +624,7 @@ object IterativeQueries {
     */
   private val KcoreK = 3
 
-  /** Peeling-round cap for [[kcore]] — fixpoint at sf0.01 is round 11; the
-    * oracle unrolls exactly this many rounds, and extra rounds past the
-    * fixpoint are no-ops, so the early-exit below cannot diverge from it.
-    */
+  /** Peeling-round cap for [[kcore]]; the oracle unrolls exactly this many (sf0.01: 11). */
   private val KcoreRounds = 12
 
   /** k-core decomposition of the strong co-occurrence graph — the density
@@ -638,95 +635,96 @@ object IterativeQueries {
     * repeatedly drop every node with fewer than k surviving neighbors
     * until nothing changes; report each survivor with its in-core degree.
     *
-    * Scale shape: the symmetrized edge frame is partitioned on src ONCE and
-    * persisted; each round is two semi joins against the (one long per
-    * node) survivor frame plus one partial-aggregated degree count — the
-    * rank-vector discipline from pagerank. Each generation is persisted,
-    * counted (the count doubles as the fixpoint check — converged rounds
-    * are no-ops, so exiting early cannot diverge from the oracle's full
-    * unroll), its predecessor released, and its lineage truncated to a
-    * LogicalRDD (the survivor frame feeds TWO semi joins per round: left
-    * nested, the logical plan would double per round — the
-    * dedup_clusters discipline).
+    * Scale shape: the symmetrized edges are partitioned on src ONCE and
+    * persisted; one distinct count of their srcs is the dial. Below
+    * `nodeCap` the survivors live on the DRIVER as a sorted `Array[Long]`
+    * and each round is ONE exchange-free job over the edge cache
+    * ([[kcoreRound]]) that collects the next set — no per-round persist,
+    * broadcast or re-wrap. Above it the survivors are a persisted,
+    * lineage-truncated generation feeding two shuffled semi joins. The
+    * survivor count is the fixpoint check (S_r ⊆ S_{r-1}, so an unchanged
+    * size is an unchanged set; converged rounds are no-ops, so exiting
+    * early cannot diverge from the oracle's full unroll). Jobs are
+    * labelled `q_kcore: edges | round <r> | result`.
     */
   def kcore(s: SparkSession, dir: String): DataFrame =
     kcoreFrom(s, Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")))
 
-  private[graft] def kcoreFrom(spark: SparkSession, li: DataFrame,
-      k: Int = KcoreK, maxRounds: Int = KcoreRounds): DataFrame = {
+  private[graft] def kcoreFrom(spark: SparkSession, li: => DataFrame, k: Int = KcoreK,
+      maxRounds: Int = KcoreRounds, nodeCap: Long = BroadcastNodeCap): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // persisted: the symmetrizing union consumes pe twice (each arm would
-    // otherwise re-run the support-pair build — the expensive subtree)
-    val pe = supportPairs(li).persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = pe.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(pe.select(col("v").as("src"), col("u").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val gen0 = edges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var surv = spark.createDataFrame(gen0.rdd, gen0.schema)
-    var backing = gen0
-    var prev = gen0.count()
-    // the survivor frame is node-count bounded but surfaces as a LogicalRDD
-    // (no stats), so the planner would sort-merge the full edge frame
-    // against it EVERY round — the pagerank broadcast dial, applied to the
-    // two per-round semi joins: below the cap each round is one map-side
-    // pass over the once-partitioned edges (src partitioning feeds the
-    // degree groupBy exchange-free), above it the joins fall back to the
-    // shuffled form where only the survivor vector moves.
-    val bcast = prev <= BroadcastNodeCap
-    def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    var round = 0
-    var fixpoint = false
-    while (round < maxRounds && !fixpoint) {
-      round += 1
-      val next = edges
-        .join(hinted(surv.select(col("node").as("src"))), Seq("src"), "left_semi")
-        .join(hinted(surv.select(col("node").as("dst"))), Seq("dst"), "left_semi")
-        .groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k)
-        .select(col("src").as("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val cur = next.count()
-      backing.unpersist()
-      backing = next
-      surv = spark.createDataFrame(next.rdd, next.schema)
-      fixpoint = cur == prev
-      prev = cur
-    }
-    val out = edges
-      .join(hinted(surv.select(col("node").as("src"))), Seq("src"), "left_semi")
-      .join(hinted(surv.select(col("node").as("dst"))), Seq("dst"), "left_semi")
-      .groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
-      .select(col("src").as("node"), col("core_deg"))
-    Lifecycle.released(out, pe, edges, backing)
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    def phase(p: String): Unit = sc.setJobDescription(s"q_kcore: $p")
+    try {
+      phase("edges")
+      val edges = kcoreEdges(li).persist(StorageLevel.MEMORY_AND_DISK)
+      // RDD count: one job after the cache build (Dataset.count adds an exchange)
+      val n0 = edges.select(col("src")).distinct().rdd.count()
+      // peels until the survivor count stops changing, or maxRounds
+      def peelToFixpoint(peel: () => Long, size: Long = n0, round: Int = 1): Unit =
+        if (round <= maxRounds) {
+          phase(s"round $round")
+          val cur = peel()
+          if (cur != size) peelToFixpoint(peel, cur, round + 1)
+        }
+      val (kept, generation) =
+        if (n0 <= nodeCap) {
+          var survivors: Option[Array[Long]] = None // round 1 keeps every edge
+          peelToFixpoint { () =>
+            survivors = Some(kcoreRound(kcoreKept(edges, survivors), k)
+              .collect().map(_.getLong(0)).sorted)
+            survivors.get.length
+          }
+          (kcoreKept(edges, survivors), None)
+        } else {
+          def semi(surv: DataFrame): DataFrame = edges.join(surv, Seq("src"), "left_semi")
+            .join(surv.select(col("src").as("dst")), Seq("dst"), "left_semi")
+          var backing = edges.select(col("src")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+          var surv = spark.createDataFrame(backing.rdd, backing.schema)
+          peelToFixpoint { () =>
+            val next = kcoreRound(semi(surv), k).persist(StorageLevel.MEMORY_AND_DISK)
+            val cur = next.count()
+            backing.unpersist()
+            backing = next
+            surv = spark.createDataFrame(next.rdd, next.schema)
+            cur
+          }
+          (semi(surv), Some(backing))
+        }
+      phase("result")
+      val out = kept.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
+        .select(col("src").as("node"), col("core_deg"))
+      Lifecycle.released(out, edges +: generation.toSeq: _*)
+    } finally sc.setJobDescription(callerDescription)
   }
 
-  /** Lazy plan of one [[kcore]] peeling round over the prepared inputs —
-    * plan evidence (the public entry materializes each generation). Returns
-    * (roundPlan, persisted barriers for the caller).
+  /** [[kcore]]'s edges: (u, v) and (v, u) per support-2 pair from ONE
+    * explode over one scan of the pair build, partitioned on src.
     */
-  private[graft] def kcoreRoundPlan(s: SparkSession, dir: String,
-      k: Int = KcoreK): (DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
-    val li = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val pe = supportPairs(li).persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = pe.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(pe.select(col("v").as("src"), col("u").as("dst")))
+  private[graft] def kcoreEdges(li: DataFrame): DataFrame =
+    supportPairs(li)
+      .select(explode(array(struct(col("u").as("src"), col("v").as("dst")),
+        struct(col("v").as("src"), col("u").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val gen0 = edges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    gen0.count()
-    val surv = s.createDataFrame(gen0.rdd, gen0.schema)
-    val round = edges
-      .join(broadcast(surv.select(col("node").as("src"))), Seq("src"), "left_semi")
-      .join(broadcast(surv.select(col("node").as("dst"))), Seq("dst"), "left_semi")
-      .groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .filter(col("d") >= k)
-      .select(col("src").as("node"))
-    (round, Seq(pe, edges, gen0))
-  }
+
+  /** The edges with both ends in the sorted `survivors` (all when None).
+    * The binary-searched array rides in the udf's closure, i.e. in the task
+    * binary Spark broadcasts per stage anyway: no job, nothing to release.
+    */
+  private[graft] def kcoreKept(edges: DataFrame, survivors: Option[Array[Long]]): DataFrame =
+    survivors.fold(edges) { s =>
+      val member = udf((x: Long) => java.util.Arrays.binarySearch(s, x) >= 0)
+      edges.filter(member(col("src")) && member(col("dst")))
+    }
+
+  /** One [[kcore]] peel: the srcs with ≥ k `kept` edges. Over [[kcoreKept]]
+    * the degree groupBy reuses the edge cache's src partitioning, so the
+    * plan has no exchange. Shared by both branches and `PlanDump`.
+    */
+  private[graft] def kcoreRound(kept: DataFrame, k: Int = KcoreK): DataFrame =
+    kept.groupBy(col("src")).agg(count(lit(1)).as("d")).filter(col("d") >= k).select(col("src"))
 
   /** The [[kcore]] rounds unrolled as a MATERIALIZED CTE chain (same
     * discipline as the pagerank oracle).

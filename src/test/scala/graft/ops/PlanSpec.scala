@@ -496,4 +496,28 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one parse for the root table's projection + one for the child's
     assert(parses == 2, s"expected 2 JsonToStructs (root + child), got $parses")
   }
+
+  test("a below-dial k-core round has no exchange and runs as one job") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val li = KcoreSpec.chainAndK4(spark)
+    val edges = IterativeQueries.kcoreEdges(li).persist()
+    try {
+      edges.count()
+      // Exchange covers shuffle and broadcast exchanges; the helper walks
+      // AQE's final plan and its query stages, not the cached edges' plan
+      val walker = new AdaptiveSparkPlanHelper {}
+      for (survivors <- Seq(None, Some(Array(10L, 11L, 12L, 13L)))) {
+        val kept = IterativeQueries.kcoreKept(edges, survivors)
+        val plan = executedPlan(IterativeQueries.kcoreRound(kept))
+        val exchanges = walker.collectWithSubqueries(plan) { case e: Exchange => e }
+        assert(exchanges.isEmpty, s"round over ${survivors.map(_.length)} survivors has an exchange:\n$plan")
+      }
+    } finally edges.unpersist()
+    val labels = KcoreSpec.jobDescriptions(spark)(IterativeQueries.kcoreFrom(spark, li))
+    val perRound = labels.filter(_.startsWith("q_kcore: round ")).groupBy(identity)
+    // round 1 peels the chain; round 2 keeps all four clique nodes: fixpoint
+    assert(perRound.keySet == Set("q_kcore: round 1", "q_kcore: round 2"), labels)
+    assert(perRound.values.forall(_.size == 1), s"a round ran more than one job: $labels")
+  }
 }

@@ -430,17 +430,9 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("kcore peels a chain away and keeps the K4 clique at exactly degree 3") {
-    import spark.implicits._
-    // encode each desired support-2 edge as TWO orders containing exactly
-    // its endpoints: chain 1-2-3-4-5 (degrees <= 2, must peel) + clique
-    // {10,11,12,13} (degree 3 each, must survive at k=3)
-    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    val clique = for {
-      a <- Seq(10L, 11L, 12L, 13L); b <- Seq(10L, 11L, 12L, 13L) if a < b
-    } yield (a, b)
-    val li = (chain ++ clique).zipWithIndex.flatMap { case ((u, v), i) =>
-      Seq((2L * i, u), (2L * i, v), (2L * i + 1, u), (2L * i + 1, v))
-    }.toDF("l_orderkey", "l_partkey")
+    // chain 1-2-3-4-5 (degrees <= 2, must peel) + clique {10,11,12,13}
+    // (degree 3 each, must survive at k=3)
+    val li = KcoreSpec.chainAndK4(spark)
     val got = IterativeQueries.kcoreFrom(spark, li).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(10L -> 3L, 11L -> 3L, 12L -> 3L, 13L -> 3L),
