@@ -886,9 +886,6 @@ object DedupQueries {
   def connectedComponents(edges: DataFrame, vertices: DataFrame): DataFrame =
     connectedComponentsWithRounds(edges, vertices)._1
 
-  /** [[connectedComponents]] plus the number of rounds the loop ran — the
-    * observable the convergence specs pin (O(log n) on a path graph).
-    */
   /** Truncate lineage every N rounds: the doubling self-join embeds the
     * previous generation's plan TWICE, so without truncation the LOGICAL
     * plan (not the data) doubles per round and analysis time goes
@@ -912,7 +909,7 @@ object DedupQueries {
     * labels}, so pre-aggregating prop cannot change the result.) The caller
     * persists the result — the doubling self-join consumes it twice.
     */
-  private def ccPropagate(sym: DataFrame, labels: DataFrame,
+  private[graft] def ccPropagate(sym: DataFrame, labels: DataFrame,
       hinted: DataFrame => DataFrame): DataFrame = {
     val prop = sym.join(hinted(labels), sym("src") === labels("id"))
       .select(col("dst").as("id"), col("label"))
@@ -932,7 +929,7 @@ object DedupQueries {
     * round — the same semantics the old nextP-vs-labels join gave them.)
     * Below the dial the pointer side broadcasts — no doubling exchange.
     */
-  private def ccDouble(viaNeighbors: DataFrame,
+  private[graft] def ccDouble(viaNeighbors: DataFrame,
       hinted: DataFrame => DataFrame): DataFrame =
     viaNeighbors.as("x")
       .join(hinted(viaNeighbors.select(col("id").as("pid"), col("label").as("plabel")).as("p")),
@@ -941,48 +938,49 @@ object DedupQueries {
         least(col("x.label"), coalesce(col("p.plabel"), col("x.label"))).as("label"),
         col("x.old").as("old"))
 
-  /** Lazy plan of one CC round over the embedding-LSH pair graph — plan
-    * evidence for the emb_dup_clusters optimization (the public entry
-    * returns a checkpointed LogicalRDD; the loop persists each generation).
-    * Returns (propagate plan, doubling plan over a persisted generation,
-    * persisted barriers for the caller to release).
+  /** [[connectedComponents]] plus the number of rounds the loop ran — the
+    * observable the convergence specs pin (O(log n) on a path graph).
     */
-  private[graft] def ccRoundPlan(s: SparkSession, dir: String): (DataFrame, DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = dedupEmbeddingLsh(s, dir)
-      .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-    val vertices = Tables(s, dir, "embeddings").select(col("vec_id").as("id"))
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val touched = sym.select(col("dst").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    touched.count()
-    val gen0 = vertices.select(col("id"))
-      .join(broadcast(touched), Seq("id"), "left_semi")
-      .select(col("id"), col("id").as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    gen0.count()
-    val labels = s.createDataFrame(gen0.rdd, gen0.schema)
-    val via = ccPropagate(sym, labels, broadcast)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (ccPropagate(sym, labels, broadcast), ccDouble(via, broadcast),
-      Seq(sym, touched, gen0, via))
-  }
+  private[graft] def connectedComponentsWithRounds(edges: DataFrame, vertices: DataFrame,
+      nodeCap: Long = IterativeQueries.BroadcastNodeCap): (DataFrame, Int) =
+    Lifecycle.generations(edges.sparkSession) { g =>
+      val sc = edges.sparkSession.sparkContext
+      val (sym, touched, hinted) = ccPrepare(g, edges, vertices, nodeCap)
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0) {
+        rounds += 1
+        sc.setJobDescription(s"cc: round $rounds")
+        // the propagated frame is a side barrier: the doubling self-join
+        // reads it twice, and it retires with the predecessor
+        val viaNeighbors = ccPropagate(sym, g.current, hinted)
+        changed = g.advance(ccDouble(viaNeighbors, hinted),
+            truncate = rounds % CcCheckpointInterval == 0, viaNeighbors)(
+          _.filter(col("label") < col("old")).count())
+      }
+      sc.setJobDescription("cc: result")
+      // singletons re-join here labeled with their own id — exactly the label
+      // the loop would have computed for an edge-less vertex
+      (g.released(g.current.union(
+        vertices.select(col("id")).join(hinted(touched), Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("label")))), rounds)
+    }
 
-  private[graft] def connectedComponentsWithRounds(
-      edges: DataFrame, vertices: DataFrame): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
+  /** [[connectedComponentsWithRounds]]' setup, shared with `PlanDump` and
+    * the plan specs: returns the persisted symmetric edges, the persisted
+    * touched-vertex set and the broadcast dial, and leaves generation 0 —
+    * every touched vertex labelled with its own id — as `g.current`.
+    */
+  private[graft] def ccPrepare(g: Lifecycle.Generations, edges: DataFrame, vertices: DataFrame,
+      nodeCap: Long = IterativeQueries.BroadcastNodeCap)
+      : (DataFrame, DataFrame, DataFrame => DataFrame) = {
     // cached re-keyed on dst — the per-round neighbor-min aggregation key —
     // so the label-propagation groupBy below reuses the cached partitioning
     // (one build-time shuffle instead of an exchange per round: the
     // pagerank/kcore discipline, guide §2.4)
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = g.persist(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("dst")))
     // Only edge-TOUCHED vertices enter the loop: a vertex with no edge can
     // never change its label, so it is its own (singleton) cluster by
     // construction and joins the result at the end. On a near-dup corpus
@@ -991,8 +989,7 @@ object DedupQueries {
     // (`dst` distinct = `src` distinct — sym is symmetric — and the dst
     // spelling reuses the cached partitioning, so the distinct is
     // exchange-free.)
-    val touched = sym.select(col("dst").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val touched = g.persist(sym.select(col("dst").as("id")).distinct())
     // the label frames are touched-set bounded but surface as LogicalRDDs
     // (no stats), so the planner would sort-merge the full edge frame
     // against them EVERY round — the pagerank broadcast dial: below the cap
@@ -1000,66 +997,18 @@ object DedupQueries {
     // once-partitioned edges and the doubling self-join broadcasts the
     // pointer side; above it — web-scale components — the joins fall back
     // to the shuffled form, where only the label vector moves.
-    val bcast = touched.count() <= IterativeQueries.BroadcastNodeCap
-    def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    // labels: the frame rounds consume (a flat lineage-truncated wrapper —
+    val hinted = IterativeQueries.dial(touched.count() <= nodeCap)
     // generation 0 starts truncated: the doubling join embeds the previous
     // generation's plan TWICE per round, so any non-trivial base plan (the
     // semi-join here) would compound 2^(rounds % interval)-fold into every
     // round's ANALYSIS cost — measured 4.8 s -> 12.6 s on the bench entry
-    // before this wrapper); backing: the persisted generation whose blocks
-    // feed it — released when the generation retires, so the loop never
-    // accumulates cached state (the leak spec pins it)
-    val gen0 = vertices.select(col("id"))
-      .join(hinted(touched), Seq("id"), "left_semi")
-      .select(col("id"), col("id").as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = spark.createDataFrame(gen0.rdd, gen0.schema)
-    var backing = gen0
-    var changed = 1L
-    var rounds = 0
-    // the label is thread-local: finally restores the caller's on any exit
-    val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
-    try while (changed > 0) {
-      rounds += 1
-      spark.sparkContext.setJobDescription(s"cc: round $rounds")
-      val viaNeighbors = ccPropagate(sym, labels, hinted)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nextAll = ccDouble(viaNeighbors, hinted)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // FULL count, not limit(1).count(): limit stops at the first matching
-      // partition, leaving most of the freshly persisted generation
-      // unmaterialized — every later round then recomputes the missing
-      // partitions through the whole generation chain (the pagerank-directed
-      // fix, same cascade). One full count materializes every partition
-      // exactly once and answers convergence in a single job.
-      changed = nextAll.filter(col("label") < col("old")).count()
-      val nextP = nextAll.select(col("id"), col("label"))
-      viaNeighbors.unpersist()
-      backing.unpersist()
-      backing = nextAll
-      // lineage truncation every CcCheckpointInterval rounds: rebuild the
-      // frame from the materialized RDD so the logical plan resets to a
-      // LogicalRDD (blocks stay owned by `backing` — releasable, unlike a
-      // localCheckpoint's). On eviction/task retry the wrapper's RDD still
-      // recomputes through real lineage.
-      labels =
-        if (rounds % CcCheckpointInterval == 0)
-          spark.createDataFrame(nextP.rdd, nextP.schema)
-        else nextP
-    } finally spark.sparkContext.setJobDescription(callerDescription)
-    // singletons re-join here labeled with their own id — exactly the label
-    // the loop would have computed for an edge-less vertex
-    val withSingles = labels.union(
-      vertices.select(col("id")).join(hinted(touched), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("label")))
-    val result =
-      if (spark.sparkContext.getCheckpointDir.isDefined) withSingles.checkpoint(eager = true)
-      else withSingles.localCheckpoint(eager = true)
-    backing.unpersist()
-    sym.unpersist()
-    touched.unpersist()
-    (result, rounds)
+    // before the re-wrap. Rounds read (id, label); `old` only feeds the
+    // convergence check.
+    g.start(vertices.select(col("id"))
+        .join(hinted(touched), Seq("id"), "left_semi")
+        .select(col("id"), col("id").as("label")),
+      truncate = true, _.select(col("id"), col("label")))
+    (sym, touched, hinted)
   }
 
   /** Near-dup cluster resolution — the step a production dedup runs after

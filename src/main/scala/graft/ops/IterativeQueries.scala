@@ -18,11 +18,16 @@ import org.apache.spark.sql.functions._
   * for a billion-deep pathology and an unrunnable walk: every round is ONE
   * self-equi-join on the node id (shuffle on a long key), state is three
   * longs per vertex, and loop control reads only a 0/1 changed flag — no
-  * driver-side data. Same lineage-truncation discipline as
-  * [[DedupQueries.connectedComponentsWithRounds]]: the self-join embeds the
-  * previous generation's plan twice, so the frame is rebuilt from the
-  * materialized RDD every [[JumpCheckpointInterval]] rounds to keep logical
-  * plan growth bounded.
+  * driver-side data.
+  *
+  * Every loop here, and connected components in [[DedupQueries]], steps its
+  * state through one [[Lifecycle.Generations]]: persist the next
+  * generation, run the round's one materializing count, release the
+  * predecessor, and re-wrap the frame from the materialized RDD on the
+  * kernel's truncation cadence (every round for pagerank and k-core; every
+  * [[JumpCheckpointInterval]] rounds here, whose self-join embeds the
+  * previous generation's plan twice). Whatever a loop still holds is
+  * released when it returns or throws.
   */
 object IterativeQueries {
 
@@ -37,8 +42,8 @@ object IterativeQueries {
     * interval is unreachable on valid input; it exists so the PATHOLOGICAL
     * path (a cycle marching toward the depth-overflow guard at round 63)
     * dies with the contract's cycle error instead of a StackOverflowError
-    * mid-serialization. Reliable checkpoint when the session has a
-    * checkpoint dir, else local — the Lifecycle fallback rule; any blocks
+    * mid-serialization. [[Lifecycle.Generations.checkpoint]] applies the
+    * Lifecycle rule (reliable with a checkpoint dir, else local); any blocks
     * the local branch leaves belong to an error path that ends in a throw.
     */
   private val DeepTruncateInterval = 24
@@ -63,86 +68,61 @@ object IterativeQueries {
     *         the O(log depth) convergence spec pins.
     */
   private[graft] def resolveRootsWithRounds(nodes: DataFrame,
-      maxRounds: Int = MaxDoublingRounds): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = nodes.sparkSession
-    // generation 0: roots point at themselves with depth 0 (composing with
-    // a root's state is the identity, so fixpoint needs no special-casing)
-    var state = nodes.select(
-        col("node"),
-        col("parent").as("anc"),
-        when(col("parent") === col("node"), lit(0L)).otherwise(lit(1L)).as("depth"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var backing = state
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      if (rounds >= maxRounds) {
-        backing.unpersist()
-        throw new IllegalArgumentException(
-          s"resolveRoots: no fixpoint after $maxRounds doubling rounds " +
-            "(the default cap covers any acyclic depth < 2^64) — the parent graph " +
-            "has a cycle; the contract requires a forest (parent == node marks a root)")
+      maxRounds: Int = MaxDoublingRounds): (DataFrame, Int) =
+    Lifecycle.generations(nodes.sparkSession) { g =>
+      def cycle(detail: String) = new IllegalArgumentException(s"resolveRoots: $detail; " +
+        "the contract requires a forest (parent == node marks a root)")
+      // generation 0: roots point at themselves with depth 0 (composing with
+      // a root's state is the identity, so fixpoint needs no special-casing)
+      g.start(nodes.select(
+          col("node"),
+          col("parent").as("anc"),
+          when(col("parent") === col("node"), lit(0L)).otherwise(lit(1L)).as("depth")),
+        truncate = false, _.select(col("node"), col("anc"), col("depth")))
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0) {
+        if (rounds >= maxRounds)
+          throw cycle(s"no fixpoint after $maxRounds doubling rounds (the default cap " +
+            "covers any acyclic depth < 2^64) — the parent graph has a cycle")
+        rounds += 1
+        // anc'(v) = anc(anc(v)); depth adds the jumped segment's length.
+        // Left join + coalesce keeps rows whose ancestor id has no state row
+        // (dangling parent) frozen instead of dropping them. A row changed
+        // this round iff the jumped segment had NONZERO length (composing
+        // with a root adds 0) — computable in the SAME projection, so the
+        // convergence check is a filter, not a second join per round. The
+        // nonzero (not positive) movement test and the `try_add` matter on a
+        // cycle: depth doubles per round, so round 63 overflows 2^63 — under
+        // ANSI mode a plain `+` would abort the job with an opaque
+        // ArithmeticException, and pre-fix (with `> 0` movement) a wrapped
+        // jump could read as "no movement" and exit with corrupted state.
+        // `try_add` turns the overflow into a NULL depth in any ANSI setting;
+        // depth counts edges, so a legal forest can never reach 2^63 of them
+        // — a NULL depth is proof of a cycle and throws immediately rather
+        // than waiting for the round cap.
+        val state = g.current
+        val next = state.as("x")
+          .join(state.select(col("node").as("pnode"), col("anc").as("panc"),
+              col("depth").as("pdepth")).as("p"),
+            col("x.anc") === col("p.pnode"), "left")
+          .select(col("x.node"),
+            coalesce(col("p.panc"), col("x.anc")).as("anc"),
+            expr("try_add(x.depth, coalesce(p.pdepth, 0L))").as("depth"),
+            (coalesce(col("p.pdepth"), lit(0L)) =!= 0).as("moved"))
+        // two full counts: the first materializes every partition, the
+        // second answers convergence from the cache
+        changed = g.advance(next, truncate = rounds % JumpCheckpointInterval == 0) { gen =>
+          if (gen.filter(col("depth").isNull).count() > 0)
+            throw cycle("depth overflow — path length exceeds 2^63 edges, " +
+              "which only a cycle can produce")
+          gen.filter(col("moved")).count()
+        }
+        if (rounds % DeepTruncateInterval == 0) g.checkpoint()
       }
-      rounds += 1
-      // anc'(v) = anc(anc(v)); depth adds the jumped segment's length.
-      // Left join + coalesce keeps rows whose ancestor id has no state row
-      // (dangling parent) frozen instead of dropping them. A row changed
-      // this round iff the jumped segment had NONZERO length (composing
-      // with a root adds 0) — computable in the SAME projection, so the
-      // convergence check is a filter, not a second join per round. The
-      // nonzero (not positive) movement test and the `try_add` matter on a
-      // cycle: depth doubles per round, so round 63 overflows 2^63 — under
-      // ANSI mode a plain `+` would abort the job with an opaque
-      // ArithmeticException, and pre-fix (with `> 0` movement) a wrapped
-      // jump could read as "no movement" and exit with corrupted state.
-      // `try_add` turns the overflow into a NULL depth in any ANSI setting;
-      // depth counts edges, so a legal forest can never reach 2^63 of them
-      // — a NULL depth is proof of a cycle and throws immediately rather
-      // than waiting for the round cap.
-      val next = state.as("x")
-        .join(state.select(col("node").as("pnode"), col("anc").as("panc"),
-            col("depth").as("pdepth")).as("p"),
-          col("x.anc") === col("p.pnode"), "left")
-        .select(col("x.node"),
-          coalesce(col("p.panc"), col("x.anc")).as("anc"),
-          expr("try_add(x.depth, coalesce(p.pdepth, 0L))").as("depth"),
-          (coalesce(col("p.pdepth"), lit(0L)) =!= 0).as("moved"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // FULL counts, not limit(1).count(): the limit form launches an
-      // escalating job sequence (1, 4, 16... partitions) and — when a row
-      // IS found early — leaves most of the freshly persisted generation
-      // unmaterialized, so the next round recomputes the missing partitions
-      // through the whole generation chain. One full count materializes
-      // every partition once and answers both checks from cache.
-      val overflowed = next.filter(col("depth").isNull).count()
-      if (overflowed > 0) {
-        next.unpersist()
-        backing.unpersist()
-        throw new IllegalArgumentException(
-          "resolveRoots: depth overflow — path length exceeds 2^63 edges, " +
-            "which only a cycle can produce; the contract requires a " +
-            "forest (parent == node marks a root)")
-      }
-      changed = next.filter(col("moved")).count()
-      val nextState = next.select(col("node"), col("anc"), col("depth"))
-      backing.unpersist()
-      backing = next
-      state =
-        if (rounds % DeepTruncateInterval == 0) {
-          if (spark.sparkContext.getCheckpointDir.isDefined)
-            nextState.checkpoint(eager = true)
-          else nextState.localCheckpoint(eager = true)
-        } else if (rounds % JumpCheckpointInterval == 0)
-          spark.createDataFrame(nextState.rdd, nextState.schema)
-        else nextState
+      (g.released(g.current.select(col("node"), col("anc").as("root"),
+        col("depth").cast("int").as("depth"))), rounds)
     }
-    val result = Lifecycle.released(
-      state.select(col("node"), col("anc").as("root"),
-        col("depth").cast("int").as("depth")),
-      backing)
-    (result, rounds)
-  }
 
   def resolveRoots(nodes: DataFrame): DataFrame = resolveRootsWithRounds(nodes)._1
 
@@ -210,48 +190,74 @@ object IterativeQueries {
     * driver scalar. Per-order edge fan-out is quadratic only in the order's
     * line count (bounded ≤ 7 in TPC-H shapes).
     */
-  def pagerank(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    // per-order pair expansion via ONE groupBy + a DOUBLE explode instead of
-    // a self-join: the fact table is read and shuffled once (a self-join
-    // reads it twice and sorts both sides); fan-out is quadratic only in
-    // the order's line count (bounded ≤ 7 in TPC-H shapes). Two flat
-    // Generate nodes (explode the set, then explode the per-element filter)
-    // replace the earlier nested transform/flatten lambda, which built an
-    // array-of-array-of-struct per order in the interpreted HOF evaluator
-    // before exploding it. collect_set order is partition-dependent, but
-    // the expansion is immediately distinct-ed into a SET of pairs —
-    // order-independent by construction.
-    val edges = li.groupBy(col("l_orderkey"))
+  def pagerank(s: SparkSession, dir: String): DataFrame =
+    pagerankFrom(coOccurrence(s, dir, "y != src"))
+
+  /** The part co-occurrence edges of the pagerank kernels: every (src, dst)
+    * pair of parts in one order that `keep` (a predicate over `src` and the
+    * other part `y`) admits. Per-order pair expansion via ONE groupBy + a
+    * DOUBLE explode instead of a self-join: the fact table is read and
+    * shuffled once (a self-join reads it twice and sorts both sides);
+    * fan-out is quadratic only in the order's line count (bounded ≤ 7 in
+    * TPC-H shapes). Two flat Generate nodes (explode the set, then explode
+    * the per-element filter) replace the earlier nested transform/flatten
+    * lambda, which built an array-of-array-of-struct per order in the
+    * interpreted HOF evaluator before exploding it. collect_set order is
+    * partition-dependent, but the expansion is immediately distinct-ed into
+    * a SET of pairs — order-independent by construction.
+    */
+  private[graft] def coOccurrence(s: SparkSession, dir: String, keep: String): DataFrame =
+    Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
+      .groupBy(col("l_orderkey"))
       .agg(collect_set(col("l_partkey")).as("ps"))
       .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(expr("filter(ps, y -> y != src)")).as("dst"))
+      .select(col("src"), explode(expr(s"filter(ps, y -> $keep)")).as("dst"))
       .distinct()
-    pagerankFrom(edges)
-  }
 
   /** [[pagerank]]'s kernel over an arbitrary (src, dst) edge frame. The
     * edge set must contain every node as a source (symmetric edges satisfy
-    * this) — PageRank without dangling-mass redistribution.
+    * this) — PageRank without dangling-mass redistribution. Every
+    * generation is materialized and re-wrapped (the directed kernel's
+    * shape, adopted in round 10): the per-round rank vector is node-count
+    * bounded, and as a materialized LogicalRDD it can be broadcast-hinted
+    * below the [[BroadcastNodeCap]] dial — each round is then ONE map-side
+    * pass over the once-partitioned edges plus a partial-aggregated
+    * groupBy, with no per-round edge sort (the lazy 10-round chain
+    * sort-merged the full edge frame every round: measured 11.6 -> ~6 s at
+    * sf0.1). Above the dial the join falls back to shuffled form — only the
+    * rank vector moves — and materialization doubles as lineage
+    * truncation, the fault-tolerance checkpointing synchronous PageRank
+    * wants at scale anyway.
     */
-  private[graft] def pagerankFrom(edges: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    // out-degree via a window over the SAME shuffle that co-locates the
-    // edges on src — the edge build (an expensive self-join + distinct)
-    // runs exactly once; a groupBy+join spelling would recompute it for
-    // each join side and again for the constants frame below. The persisted
-    // frame is then re-keyed on dst: the rank join is BROADCAST below the
-    // node dial (src co-location buys nothing), while every round's
-    // contribution aggregate groups by dst — caching on the aggregation key
-    // makes each round's groupBy exchange-FREE (guide §2.4: establish the
-    // partitioning once, reuse it every round), one build-time shuffle paid
-    // once against one shuffle+stage barrier per round.
-    val edgesDeg = edges
-      .withColumn("deg",
-        count(lit(1)).over(Window.partitionBy(col("src"))))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private[graft] def pagerankFrom(edges: DataFrame,
+      nodeCap: Long = BroadcastNodeCap): DataFrame =
+    Lifecycle.generations(edges.sparkSession) { g =>
+      val (edgesDeg, hinted) = pagerankPrepare(g, edges, nodeCap)
+      for (_ <- 1 to PagerankIters)
+        g.advance(pagerankRound(edgesDeg, g.current, hinted), truncate = true)(_.count())
+      g.released(g.current.select(col("node").as("partkey"), col("rank").as("pr_fixed")))
+    }
+
+  /** [[pagerankFrom]]'s setup, shared with `PlanDump` and the plan specs:
+    * returns the persisted edge frame and the broadcast dial, and leaves
+    * generation 0 as `g.current`.
+    *
+    * Out-degree comes from a window over the SAME shuffle that co-locates
+    * the edges on src — the edge build (an expensive self-join + distinct)
+    * runs exactly once; a groupBy+join spelling would recompute it for each
+    * join side and again for the constants frame below. The persisted frame
+    * is then re-keyed on dst: the rank join is BROADCAST below the node dial
+    * (src co-location buys nothing), while every round's contribution
+    * aggregate groups by dst — caching on the aggregation key makes each
+    * round's groupBy exchange-FREE (guide §2.4: establish the partitioning
+    * once, reuse it every round), one build-time shuffle paid once against
+    * one shuffle+stage barrier per round.
+    */
+  private[graft] def pagerankPrepare(g: Lifecycle.Generations, edges: DataFrame,
+      nodeCap: Long = BroadcastNodeCap): (DataFrame, DataFrame => DataFrame) = {
+    val edgesDeg = g.persist(edges
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
+      .repartition(col("dst")))
     // graph-wide constants as a broadcast 1-row frame: n nodes, the teleport
     // base (1-d)/n, and the uniform initial rank — all in fixed point,
     // derived from the persisted frame (no re-derivation of the edge set).
@@ -262,80 +268,28 @@ object IterativeQueries {
     val consts = broadcast(edgesDeg.agg(countDistinct(col("src")).as("n")).select(
       expr(s"((CAST($PagerankScale AS BIGINT) * 15) div 100) div n").as("base"),
       expr(s"CAST($PagerankScale AS BIGINT) div n").as("init")))
-    // generations are MATERIALIZED (the directed kernel's shape, adopted in
-    // round 10): the per-round rank vector is node-count bounded, and as a
-    // materialized LogicalRDD it can be broadcast-hinted below the
-    // [[BroadcastNodeCap]] dial — each round is then ONE map-side pass over
-    // the once-partitioned edges plus a partial-aggregated groupBy, with no
-    // per-round edge sort (the lazy 10-round chain sort-merged the full
-    // edge frame every round: measured 11.6 -> ~6 s at sf0.1). Above the
-    // dial the join falls back to shuffled form — only the rank vector
-    // moves — and materialization doubles as lineage truncation, the
-    // fault-tolerance checkpointing synchronous PageRank wants at scale
-    // anyway.
-    val init0 = edgesDeg.select(col("src").as("node")).distinct()
+    val init0 = g.start(edgesDeg.select(col("src").as("node")).distinct()
       .crossJoin(consts)
-      .select(col("node"), col("init").as("rank"), col("base"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val bcast = init0.count() <= BroadcastNodeCap
-    def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    var ranks = spark.createDataFrame(init0.rdd, init0.schema)
-    var backing = init0
-    for (_ <- 1 to PagerankIters) {
-      val next = pagerankRound(edgesDeg, ranks, hinted)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count() // materialize the generation, truncate lineage
-      backing.unpersist()
-      backing = next
-      ranks = spark.createDataFrame(next.rdd, next.schema)
-    }
-    val out = ranks.select(col("node").as("partkey"), col("rank").as("pr_fixed"))
-    Lifecycle.released(out, edgesDeg, backing)
+      .select(col("node"), col("init").as("rank"), col("base")), truncate = true)
+    (edgesDeg, dial(init0.count() <= nodeCap))
   }
+
+  /** The broadcast hint when `bcast`, else no hint. */
+  private[graft] def dial(bcast: Boolean): DataFrame => DataFrame =
+    if (bcast) broadcast(_) else identity
 
   /** One synchronous round: contribution aggregate over the once-partitioned
     * edges, teleport applied. `base` rides the rank vector (constant per
     * graph, so min() inside the contrib aggregate reproduces it exactly) —
-    * no per-round consts re-derivation. Shared by the loop and the lazy
-    * plan twin [[pagerankRoundPlan]].
+    * no per-round consts re-derivation.
     */
-  private def pagerankRound(edgesDeg: DataFrame, ranks: DataFrame,
+  private[graft] def pagerankRound(edgesDeg: DataFrame, ranks: DataFrame,
       hinted: DataFrame => DataFrame): DataFrame =
     edgesDeg.join(hinted(ranks), col("src") === col("node"))
       .groupBy(col("dst"))
       .agg(sum(expr("rank div deg")).as("contrib"), min(col("base")).as("base"))
       .select(col("dst").as("node"),
         expr("base + (85 * contrib) div 100").as("rank"), col("base"))
-
-  /** Lazy plan of one [[pagerank]] round over the prepared inputs — the
-    * public entry materializes each generation, so its plan is a LogicalRDD
-    * stub; THIS is the plan that executes 10x per query (plan evidence +
-    * plan-shape specs). Returns (roundPlan, persisted barriers for the
-    * caller to release).
-    */
-  private[graft] def pagerankRoundPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
-    val li = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val edges = li.groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("ps"))
-      .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(expr("filter(ps, y -> y != src)")).as("dst"))
-      .distinct()
-    val edgesDeg = edges
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val consts = broadcast(edgesDeg.agg(countDistinct(col("src")).as("n")).select(
-      expr(s"((CAST($PagerankScale AS BIGINT) * 15) div 100) div n").as("base"),
-      expr(s"CAST($PagerankScale AS BIGINT) div n").as("init")))
-    val init0 = edgesDeg.select(col("src").as("node")).distinct()
-      .crossJoin(consts)
-      .select(col("node"), col("init").as("rank"), col("base"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    init0.count()
-    val ranks = s.createDataFrame(init0.rdd, init0.schema)
-    (pagerankRound(edgesDeg, ranks, broadcast), Seq(edgesDeg, init0))
-  }
 
   /** Round cap for [[pagerankDirected]] — the oracle unrolls exactly this
     * many rounds; the kernel may exit earlier at the EXACT integer fixpoint
@@ -382,35 +336,48 @@ object IterativeQueries {
     * predecessor released, lineage truncated to a LogicalRDD (the vector
     * feeds the contrib join, the dangling aggregate, and the moved check).
     */
-  def pagerankDirected(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val edges = li.groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("ps"))
-      .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(expr("filter(ps, y -> y > src)")).as("dst"))
-      .distinct()
-    pagerankDirectedFrom(s, edges)._1
-  }
+  def pagerankDirected(s: SparkSession, dir: String): DataFrame =
+    pagerankDirectedFrom(s, coOccurrence(s, dir, "y > src"))._1
 
   /** [[pagerankDirected]]'s kernel over an arbitrary (src, dst) edge frame —
     * no out-degree precondition. Returns (ranks, roundsRun) so specs can
     * observe the early exit.
     */
   private[graft] def pagerankDirectedFrom(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = PagerankDirectedIters): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel
-    // cached re-keyed on dst for the same reason as [[pagerankFrom]]: the
-    // rank join is broadcast, and dst partitioning makes every round's
-    // contribution groupBy exchange-free
-    val edgesDeg = edges
+      maxRounds: Int = PagerankDirectedIters,
+      nodeCap: Long = BroadcastNodeCap): (DataFrame, Int) =
+    Lifecycle.generations(spark) { g =>
+      val sc = spark.sparkContext
+      sc.setJobDescription("pagerank_directed: build edges+degrees")
+      val (edgesDeg, hinted) = pagerankDirectedPrepare(g, edges, nodeCap)
+      var round = 0
+      var fixpoint = false
+      while (round < maxRounds && !fixpoint) {
+        round += 1
+        sc.setJobDescription(s"pagerank_directed: round $round")
+        // the count that materializes the generation answers "converged?"
+        fixpoint = g.advance(pagerankDirectedRound(edgesDeg, g.current, hinted),
+          truncate = true)(_.filter(col("moved")).count()) == 0
+      }
+      sc.setJobDescription("pagerank_directed: release")
+      (g.released(g.current.select(col("node").as("partkey"), col("rank").as("pr_fixed"))),
+        round)
+    }
+
+  /** [[pagerankDirectedFrom]]'s setup, shared with `PlanDump` and the plan
+    * specs: returns the persisted edge frame and the broadcast dial, and
+    * leaves generation 0 as `g.current`. The edges are cached re-keyed on
+    * dst for the same reason as [[pagerankPrepare]]'s.
+    */
+  private[graft] def pagerankDirectedPrepare(g: Lifecycle.Generations, edges: DataFrame,
+      nodeCap: Long = BroadcastNodeCap): (DataFrame, DataFrame => DataFrame) = {
+    val edgesDeg = g.persist(edges
       .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("dst")))
     // node universe with out-degree (0 = dangling sink), one row per node
-    val nodeDeg = edgesDeg.select(col("src").as("node"), col("deg").as("odeg"))
+    val nodeDeg = g.persist(edgesDeg.select(col("src").as("node"), col("deg").as("odeg"))
       .unionAll(edgesDeg.select(col("dst").as("node"), lit(0L).as("odeg")))
-      .groupBy(col("node")).agg(max(col("odeg")).as("odeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("node")).agg(max(col("odeg")).as("odeg")))
     val consts = broadcast(nodeDeg.agg(count(lit(1)).as("n")).select(
       col("n"),
       expr(s"((CAST($PagerankScale AS BIGINT) * 15) div 100) div n").as("base"),
@@ -418,9 +385,9 @@ object IterativeQueries {
     // `base` and `n` are joined once here and carried as columns of every
     // generation (constant per graph): a per-round crossJoin(consts) would
     // re-aggregate nodeDeg every round for values that never change
-    val init0 = nodeDeg.crossJoin(consts)
-      .select(col("node"), col("odeg"), col("init").as("rank"), col("base"), col("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    g.start(nodeDeg.crossJoin(consts)
+      .select(col("node"), col("odeg"), col("init").as("rank"), col("base"), col("n")),
+      truncate = true)
     // the rank vector and the contrib frame are both NODE-count bounded,
     // but they surface as LogicalRDDs (no stats), so the planner would
     // sort-merge the full edge frame against them EVERY round. Below the
@@ -430,48 +397,15 @@ object IterativeQueries {
     // joins fall back to the shuffled form, where only the rank vector
     // moves. Same rows either way; this is the hint AQE would derive if
     // the generations carried statistics.
-    // the description is thread-local: finally restores the caller's, so
-    // neither an exception nor the return leaks or wipes a label
-    val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
-    try {
-      spark.sparkContext.setJobDescription("pagerank_directed: build edges+degrees")
-      val bcast = nodeDeg.count() <= BroadcastNodeCap
-      def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-      var ranks = spark.createDataFrame(init0.rdd, init0.schema)
-      var backing = init0
-      var round = 0
-      var fixpoint = false
-      while (round < maxRounds && !fixpoint) {
-        round += 1
-        spark.sparkContext.setJobDescription(s"pagerank_directed: round $round")
-        val next = pagerankDirectedRound(edgesDeg, ranks, hinted)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // materialize the generation; the same action answers "converged?".
-        // A FULL count of the moved rows, not limit(1).count(): the limit
-        // form stops after the first matching partition, leaving most of the
-        // persisted generation UNMATERIALIZED — every later round then
-        // recomputes the missing partitions through the whole generation
-        // chain (measured as the per-round task-time ballooning 7 -> 68 s at
-        // sf0.1). The full count materializes every partition exactly once
-        // and still answers the fixpoint question.
-        fixpoint = next.filter(col("moved")).count() == 0
-        backing.unpersist()
-        backing = next
-        ranks = spark.createDataFrame(next.rdd, next.schema)
-      }
-      spark.sparkContext.setJobDescription("pagerank_directed: release")
-      val out = ranks.select(col("node").as("partkey"), col("rank").as("pr_fixed"))
-      (Lifecycle.released(out, edgesDeg, nodeDeg, backing), round)
-    } finally spark.sparkContext.setJobDescription(callerDescription)
+    (edgesDeg, dial(nodeDeg.count() <= nodeCap))
   }
 
   /** One synchronous directed round: dangling-mass 1-row broadcast,
     * contribution aggregate over the once-partitioned edges, teleport +
     * redistribution, moved flag. `base`/`n` ride the rank vector (constant
-    * per graph) — no per-round consts re-derivation. Shared by the loop and
-    * [[pagerankDirectedRoundPlan]].
+    * per graph) — no per-round consts re-derivation.
     */
-  private def pagerankDirectedRound(edgesDeg: DataFrame, ranks: DataFrame,
+  private[graft] def pagerankDirectedRound(edgesDeg: DataFrame, ranks: DataFrame,
       hinted: DataFrame => DataFrame): DataFrame = {
     // the mass stranded on sinks this round: 1-row, broadcast
     val dm = broadcast(ranks.filter(col("odeg") === 0)
@@ -489,37 +423,6 @@ object IterativeQueries {
         col("prev"), col("base"), col("n"))
       .select(col("node"), col("odeg"), col("rank"),
         (col("rank") =!= col("prev")).as("moved"), col("base"), col("n"))
-  }
-
-  /** Lazy plan of one [[pagerankDirected]] round over the prepared inputs —
-    * plan evidence + plan-shape specs (the public entry materializes each
-    * generation). Returns (roundPlan, persisted barriers for the caller).
-    */
-  private[graft] def pagerankDirectedRoundPlan(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
-    val li = Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val edges = li.groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("ps"))
-      .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(expr("filter(ps, y -> y > src)")).as("dst"))
-      .distinct()
-    val edgesDeg = edges
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodeDeg = edgesDeg.select(col("src").as("node"), col("deg").as("odeg"))
-      .unionAll(edgesDeg.select(col("dst").as("node"), lit(0L).as("odeg")))
-      .groupBy(col("node")).agg(max(col("odeg")).as("odeg"))
-    val consts = broadcast(nodeDeg.agg(count(lit(1)).as("n")).select(
-      col("n"),
-      expr(s"((CAST($PagerankScale AS BIGINT) * 15) div 100) div n").as("base"),
-      expr(s"CAST($PagerankScale AS BIGINT) div n").as("init")))
-    val init0 = nodeDeg.crossJoin(consts)
-      .select(col("node"), col("odeg"), col("init").as("rank"), col("base"), col("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    init0.count()
-    val ranks = s.createDataFrame(init0.rdd, init0.schema)
-    (pagerankDirectedRound(edgesDeg, ranks, broadcast), Seq(edgesDeg, init0))
   }
 
   /** Per-node triangle counts + local clustering coefficient over the
@@ -581,8 +484,7 @@ object IterativeQueries {
     // deg is node-bounded but surfaces without usable stats below a cached
     // union, so the planner sort-merged pe against it twice — the pagerank
     // broadcast dial (eager count doubles as the persist materialization)
-    val bcastDeg = deg.count() <= BroadcastNodeCap
-    def hintedDeg(df: DataFrame): DataFrame = if (bcastDeg) broadcast(df) else df
+    val hintedDeg = dial(deg.count() <= BroadcastNodeCap)
     val lower = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
     val ori = pe
       .join(hintedDeg(deg.select(col("node").as("nu"), col("d").as("du"))), col("u") === col("nu"))
@@ -596,8 +498,7 @@ object IterativeQueries {
     // bytes-per-row budget as [[BroadcastNodeCap]]'s doc), and the whole
     // enumeration is one map-side stage over the cache. Above the cap the
     // legs fall back to the sort-merge form unchanged.
-    val bcastOri = ori.count() <= BroadcastNodeCap
-    def hintedOri(df: DataFrame): DataFrame = if (bcastOri) broadcast(df) else df
+    val hintedOri = dial(ori.count() <= BroadcastNodeCap)
     val tri = ori.as("e1")
       .join(hintedOri(ori.as("e2")), col("e1.t") === col("e2.s"))
       .join(hintedOri(ori.as("e3")), col("e3.s") === col("e1.s") && col("e3.t") === col("e2.t"))
@@ -651,14 +552,11 @@ object IterativeQueries {
     kcoreFrom(s, Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")))
 
   private[graft] def kcoreFrom(spark: SparkSession, li: => DataFrame, k: Int = KcoreK,
-      maxRounds: Int = KcoreRounds, nodeCap: Long = BroadcastNodeCap): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val sc = spark.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    def phase(p: String): Unit = sc.setJobDescription(s"q_kcore: $p")
-    try {
+      maxRounds: Int = KcoreRounds, nodeCap: Long = BroadcastNodeCap): DataFrame =
+    Lifecycle.generations(spark) { g =>
+      def phase(p: String): Unit = spark.sparkContext.setJobDescription(s"q_kcore: $p")
       phase("edges")
-      val edges = kcoreEdges(li).persist(StorageLevel.MEMORY_AND_DISK)
+      val edges = g.persist(kcoreEdges(li))
       // RDD count: one job after the cache build (Dataset.count adds an exchange)
       val n0 = edges.select(col("src")).distinct().rdd.count()
       // peels until the survivor count stops changing, or maxRounds
@@ -668,7 +566,7 @@ object IterativeQueries {
           val cur = peel()
           if (cur != size) peelToFixpoint(peel, cur, round + 1)
         }
-      val (kept, generation) =
+      val kept =
         if (n0 <= nodeCap) {
           var survivors: Option[Array[Long]] = None // round 1 keeps every edge
           peelToFixpoint { () =>
@@ -676,28 +574,19 @@ object IterativeQueries {
               .collect().map(_.getLong(0)).sorted)
             survivors.get.length
           }
-          (kcoreKept(edges, survivors), None)
+          kcoreKept(edges, survivors)
         } else {
           def semi(surv: DataFrame): DataFrame = edges.join(surv, Seq("src"), "left_semi")
             .join(surv.select(col("src").as("dst")), Seq("dst"), "left_semi")
-          var backing = edges.select(col("src")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-          var surv = spark.createDataFrame(backing.rdd, backing.schema)
-          peelToFixpoint { () =>
-            val next = kcoreRound(semi(surv), k).persist(StorageLevel.MEMORY_AND_DISK)
-            val cur = next.count()
-            backing.unpersist()
-            backing = next
-            surv = spark.createDataFrame(next.rdd, next.schema)
-            cur
-          }
-          (semi(surv), Some(backing))
+          g.start(edges.select(col("src")).distinct(), truncate = true)
+          peelToFixpoint(() =>
+            g.advance(kcoreRound(semi(g.current), k), truncate = true)(_.count()))
+          semi(g.current)
         }
       phase("result")
-      val out = kept.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
-        .select(col("src").as("node"), col("core_deg"))
-      Lifecycle.released(out, edges +: generation.toSeq: _*)
-    } finally sc.setJobDescription(callerDescription)
-  }
+      g.released(kept.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
+        .select(col("src").as("node"), col("core_deg")))
+    }
 
   /** [[kcore]]'s edges: (u, v) and (v, u) per support-2 pair from ONE
     * explode over one scan of the pair build, partitioned on src.

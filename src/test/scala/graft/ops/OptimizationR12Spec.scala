@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,17 +87,62 @@ class OptimizationR12Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
-  test("pagerank round plan is exchange-free above the cached edges and keeps the broadcast join") {
-    val (round, barriers) = IterativeQueries.pagerankRoundPlan(spark, dir)
+  /** The per-round work of `round`: its pre-execution plan cut at the
+    * first cached relation (the once-partitioned edges). Below the node
+    * dial the vector join above that cut is a BroadcastHashJoin.
+    */
+  private def aboveCache(round: DataFrame): String = {
     val plan = round.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    // cut the plan at the cached-relation boundary: everything above the
-    // InMemoryTableScan is the per-round work, and it must carry NO Exchange
-    val aboveCache = plan.split("InMemoryRelation").head
-    assert(!aboveCache.contains("Exchange"),
-      s"per-round exchange reappeared:\n$aboveCache")
-    assert(aboveCache.contains("BroadcastHashJoin"),
-      s"rank-vector broadcast join lost:\n$aboveCache")
-    barriers.foreach(_.unpersist())
+    val above = plan.split("InMemoryRelation").head
+    assert(above.contains("BroadcastHashJoin"), s"vector broadcast join lost:\n$above")
+    above
+  }
+
+  /** The shuffle exchanges in a plan fragment (broadcasts excluded). */
+  private def shuffles(plan: String): Seq[String] =
+    plan.split("\n").toSeq.filter(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
+
+  test("pagerank round plan is exchange-free above the cached edges and keeps the broadcast join") {
+    Lifecycle.generations(spark) { g =>
+      val (edgesDeg, hinted) = IterativeQueries.pagerankPrepare(g,
+        IterativeQueries.coOccurrence(spark, dir, "y != src"))
+      // everything above the InMemoryTableScan is the per-round work, and it
+      // must carry NO Exchange
+      val above = aboveCache(IterativeQueries.pagerankRound(edgesDeg, g.current, hinted))
+      assert(!above.contains("Exchange"), s"per-round exchange reappeared:\n$above")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("directed pagerank round plan shuffles nothing above the cached edges and keeps the broadcast joins") {
+    Lifecycle.generations(spark) { g =>
+      val (edgesDeg, hinted) = IterativeQueries.pagerankDirectedPrepare(g,
+        IterativeQueries.coOccurrence(spark, dir, "y > src"))
+      // the one exchange above the cut broadcasts the node-bounded contrib
+      // vector; the contrib groupBy reuses the cache's dst partitioning
+      val above = aboveCache(IterativeQueries.pagerankDirectedRound(edgesDeg, g.current, hinted))
+      assert(shuffles(above).isEmpty, s"per-round shuffle reappeared:\n$above")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("connected-components propagate round shuffles only the node-bounded label union and keeps the broadcast join") {
+    import spark.implicits._
+    // a chain plus a triangle, and one edge-less vertex
+    val edges = ((1L to 7L).map(i => (i, i + 1)) ++ Seq((20L, 21L), (21L, 22L), (20L, 22L)))
+      .toDF("src", "dst")
+    val vertices = ((1L to 8L) ++ Seq(20L, 21L, 22L, 99L)).toDF("id")
+    Lifecycle.generations(spark) { g =>
+      val (sym, _, hinted) = DedupQueries.ccPrepare(g, edges, vertices)
+      val above = aboveCache(DedupQueries.ccPropagate(sym, g.current, hinted))
+      // the neighbor-min groupBy reuses the cache's dst partitioning; the
+      // old labels arrive as a re-wrapped vector with no partitioning, so
+      // the one shuffle is the final per-vertex aggregate above the union
+      val ex = shuffles(above)
+      assert(ex.size == 1 && above.indexOf(ex.head) < above.indexOf("Union"),
+        s"expected one shuffle, above the label union:\n$above")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 }

@@ -13,14 +13,21 @@ class Round7Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    // deterministic physical plans for the join-strategy pins below
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      // deterministic physical plans for the join-strategy pins below
+      .config("spark.sql.adaptive.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    // reliable checkpoints: a released (or failed) query leaves the block
+    // store empty, which the resolveRoots cycle spec asserts
+    s.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-round7-ckpt").toString)
+    s
+  }
 
   override def afterAll(): Unit = spark.stop()
 
@@ -250,6 +257,9 @@ class Round7Spec extends AnyFunSuite with BeforeAndAfterAll {
       // a tight cap keeps the spec fast; the error path is identical at 64
       IterativeQueries.resolveRootsWithRounds(cyclic, maxRounds = 5)._1.collect()
     }
+    // the failed loop released every generation it had persisted
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"cycle error leaked ${spark.sparkContext.getPersistentRDDs.size} cached RDDs")
     assert(e.getMessage.contains("cycle"), s"unexpected message: ${e.getMessage}")
   }
 }

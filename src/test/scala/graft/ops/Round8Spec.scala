@@ -14,13 +14,20 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "false")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    // reliable checkpoints: a released (or failed) query leaves the block
+    // store empty, which the resolveRoots cycle spec asserts
+    s.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-round8-ckpt").toString)
+    s
+  }
 
   override def afterAll(): Unit = spark.stop()
 
@@ -36,6 +43,9 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
       // fire on the first negative depth, well before this cap.
       IterativeQueries.resolveRootsWithRounds(cyclic, maxRounds = 100)._1.collect()
     }
+    // the failed loop released every generation it had persisted
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"cycle error leaked ${spark.sparkContext.getPersistentRDDs.size} cached RDDs")
     assert(e.getMessage.contains("cycle"), s"unexpected message: ${e.getMessage}")
     assert(e.getMessage.contains("overflow"),
       s"the negative-depth guard (not the round cap) must fire: ${e.getMessage}")
