@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * d rounds. At 100 TB that is the difference between ~40 shuffle rounds
   * for a billion-deep pathology and an unrunnable walk: every round is ONE
   * self-equi-join on the node id (shuffle on a long key), state is three
-  * longs per vertex, and loop control reads only a 0/1 changed flag — no
-  * driver-side data.
+  * longs per vertex, and loop control collects only a 0/1 changed flag.
   *
   * Every loop here, and connected components in [[DedupQueries]], steps its
   * state through one [[Lifecycle.Generations]]: persist the next
