@@ -26,6 +26,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     graft.functions.GraftFunctions.SqlFunctions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.PruneBarrieredJsonParse)
+    ext.injectOptimizerRule(_ => graft.plans.PruneBarrieredDecode)
   }
 }

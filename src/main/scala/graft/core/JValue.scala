@@ -97,8 +97,7 @@ object Json {
         case c if c < ' ' =>
           // manual hex escape: the f"%04x" interpolator builds a
           // java.util.Formatter (regex parse + allocations) PER CALL, and
-          // since tagged payload keys embed TagSep every key hits this arm —
-          // it was 40% of pass-1 samples under profiling
+          // every tagged key (it embeds TagSep) hits this arm
           sb.append("\\u00")
           sb.append(Character.forDigit((c >> 4) & 0xf, 16))
           sb.append(Character.forDigit(c & 0xf, 16))
@@ -109,22 +108,18 @@ object Json {
     sb.append('"')
   }
 
-  /** Separator between column name and scalar tag in *internal* `Emitted`
-    * payload keys (the pass-1 -> pass-2 interchange of
-    * [[graft.relationalize.RelationalizeSpark]]). Pass 1 computes every
-    * value's tag anyway (it observes it into the choice schema), so carrying
-    * the tag in the key lets pass 2 read types *structurally* — a single
-    * `from_json` with per-(column, tag) fields — instead of re-inspecting
-    * values row by row. Keys containing this control character are
-    * unsupported (it never survives JSON-sourced data in practice; compare
-    * the reference's own `_` choice-suffix collision caveat,
-    * `relationalize/schema.py:49-52`).
+  /** Separator in the field names `k<TagSep>tag` of pass 2's decoded struct
+    * ([[graft.relationalize.DecodeTaggedRow]]): one field per (column, tag),
+    * so pass 2 reads types structurally. Keys containing it are unsupported
+    * (compare the reference's `_` choice-suffix caveat, `schema.py:49-52`).
     */
   val TagSep = '\u0000'
 
   def taggedKey(k: String, tag: String): String = s"$k$TagSep$tag"
 
-  /** Serialize a flat row with tag-carrying keys (`k<TagSep>tag`). */
+  /** Serialize a flat row as JSON with tag-carrying keys (`k<TagSep>tag`):
+    * a readable twin of [[graft.relationalize.TaggedRow]], which pass 1 writes.
+    */
   def writeTaggedRow(row: Iterable[(String, JValue)]): String = write(row, tagged = true)
 
   /** Parse a flat-row JSON object back to an ordered column->scalar map. */

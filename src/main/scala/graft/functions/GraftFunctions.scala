@@ -26,6 +26,8 @@ object GraftFunctions {
       exprs.lift(1).map(foldableString(_, "relationalize name")).getOrElse("t"))),
     "hash60" -> (exprs => Hash60(exprs.head)),
     "graft_barrier" -> (exprs => OptimizationBarrier(exprs.head)),
+    "graft_decode_tagged" -> (exprs => graft.relationalize.DecodeTaggedRow(exprs.head,
+      DataType.fromJson(foldableString(exprs(1), "graft_decode_tagged schema")).asInstanceOf[StructType])),
     "vec_dot" -> (exprs => VecDot(exprs.head, exprs(1))),
     "graft_overlap" -> (exprs => ArrayOverlap(exprs.head, exprs(1))),
     "ahash60" -> (exprs => AHash60(exprs.head)),
@@ -63,9 +65,9 @@ object GraftFunctions {
     // parse-schema pruning through the barrier (idempotent registration):
     // runs after the main operator-optimization batch, where ColumnPruning
     // has already narrowed consumer projections
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.PruneBarrieredJsonParse))
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.PruneBarrieredDecode))
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PruneBarrieredJsonParse
+        spark.experimental.extraOptimizations :+ graft.plans.PruneBarrieredDecode
   }
 
   private def foldableString(e: Expression, what: String): String = e match {
@@ -116,17 +118,16 @@ object GraftFunctions {
   * never substitutes the wrapped expression across operator boundaries.
   *
   * Why it exists: an inner join on a column produced by an expensive
-  * expression (e.g. `from_json` in relationalize pass 2) makes Catalyst push
+  * expression (e.g. the payload decode in relationalize pass 2) makes Catalyst push
   * `IsNotNull(col)` predicates down THROUGH the projection, substituting the
   * full expression into the filter — the payload was then parsed up to 10
   * times per row (once per guard branch in the filter plus once per output
   * column), with the filter copies evaluated interpreted (a fresh Jackson
   * parser + stream decoder per call). Wrapping the parse in a barrier keeps
   * exactly one evaluation per row; the join's null filter happens above the
-  * projection on the cheap attribute instead. Trade-off (deliberate):
-  * `OptimizeCsvJsonExprs` schema pruning no longer reaches the parse — a
-  * narrow select over a wide relationalized table parses the full payload.
-  * Evaluation and codegen simply forward to the child.
+  * projection on the cheap attribute instead. The barrier also hides the
+  * decode from column pruning; [[graft.plans.PruneBarrieredDecode]] restores
+  * it. Evaluation and codegen simply forward to the child.
   */
 case class OptimizationBarrier(child: Expression) extends UnaryExpression {
   override def dataType: DataType = child.dataType

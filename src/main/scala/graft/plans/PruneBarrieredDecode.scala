@@ -1,65 +1,41 @@
 package graft.plans
 
 import graft.functions.OptimizationBarrier
+import graft.relationalize.DecodeTaggedRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.StructType
 
-/** Restores `from_json` schema pruning through the [[OptimizationBarrier]].
+/** Restores column pruning of the pass-2 payload decode through the
+  * [[OptimizationBarrier]], which hides the decode from Spark's own pruning:
+  * without this rule a narrow select over a wide relationalized table
+  * decodes its FULL field list.
   *
-  * The barrier exists to stop join pushdown from multiplying the pass-2
-  * payload parse (one `IsNotNull` guard per output column used to re-parse
-  * the payload up to 10x per row), but it also hides the parse from Spark's
-  * own `OptimizeCsvJsonExprs`, so a narrow select over a wide relationalized
-  * table parsed the FULL payload — the profile every BI-style consumer of a
-  * wide table hits.
+  * For a consumer (Project / Aggregate, optionally over Filters) of a Project
+  * defining `r = barrier(`[[graft.relationalize.DecodeTaggedRow]]`(payload))`,
+  * it shrinks the decoder's field list to the struct fields the consumer
+  * chain extracts and remaps the `GetStructField` ordinals above. Still one
+  * decode per payload; idempotent. The routing projection's raise-on-bad-tag
+  * guards count as extractions, so frozen-schema errors survive pruning.
   *
-  * This rule reimplements the pruning across the barrier: for a consumer
-  * node (Project / Aggregate, optionally separated from the parse by
-  * Filters) over a Project that defines `r = barrier(from_json(payload))`,
-  * it collects the struct fields the consumer chain actually extracts and
-  * shrinks the parse schema to exactly those fields, remapping the
-  * `GetStructField` ordinals above. The barrier itself is preserved — still
-  * exactly one parse per payload — and the rule is idempotent (a second pass
-  * finds every field referenced). Guard fields referenced by the routing
-  * projection's raise-on-bad-tag checks count as referenced, so frozen-schema
-  * error semantics survive pruning.
+  * Window is NOT a consumer: `Window.output` passes the alias through to
+  * ancestors whose ordinals this local rewrite cannot see. That costs
+  * nothing, as `ExtractWindowExpressions` puts a window's inputs in a
+  * pruning Project below it (PlanSpec pins 8 fields for 2 of 50 columns).
   *
-  * Window is deliberately NOT a consumer: `Window.output` is
-  * `child.output ++ windowExprs`, so the parse alias would flow through to
-  * ancestor nodes whose `GetStructField` ordinals this local rewrite cannot
-  * see — pruning to the window's own uses would silently retype the struct
-  * under them. Project and Aggregate are safe because their output IS their
-  * expression list (a bare pass-through of the alias sets `whole` and bails).
-  * The exclusion costs nothing: Spark's `ExtractWindowExpressions` always
-  * materializes a window's inputs (partition/order keys, function args) in a
-  * Project BELOW the Window, and after ColumnPruning that projection is a
-  * narrow consumer directly over the defining project — window queries get
-  * pruning transitively. PlanSpec pins a window over 2 of 50 columns parsing
-  * an 8-field struct.
-  *
-  * Runs via `spark.experimental.extraOptimizations` (registered by
-  * [[graft.functions.GraftFunctions.registerAll]]), i.e. after the main
-  * operator-optimization batch: by then ColumnPruning + CollapseProject have
-  * already narrowed the consumer projection to the user's selected columns,
-  * so "fields the consumer extracts" is exactly the narrow set.
-  *
-  * Scale: on a 50-column table a 2-column select now parses 8 tag fields
-  * instead of 200 — Jackson still tokenizes the payload text once, but
-  * skips conversion and row materialization for everything unreferenced.
+  * Runs via `spark.experimental.extraOptimizations` (see
+  * [[graft.functions.GraftFunctions.registerAll]]), after ColumnPruning and
+  * CollapseProject have narrowed the consumer to the selected columns.
   */
-object PruneBarrieredJsonParse extends Rule[LogicalPlan] {
+object PruneBarrieredDecode extends Rule[LogicalPlan] {
 
   private final case class ParseAlias(alias: Alias, barrier: OptimizationBarrier,
-                                      parse: JsonToStructs, schema: StructType)
+                                      parse: DecodeTaggedRow)
 
   private def parseAliasOf(e: NamedExpression): Option[ParseAlias] = e match {
-    case a @ Alias(b @ OptimizationBarrier(j: JsonToStructs), _) =>
-      j.schema match {
-        case st: StructType => Some(ParseAlias(a, b, j, st))
-        case _ => None
-      }
+    case a @ Alias(b @ OptimizationBarrier(d: DecodeTaggedRow), _) =>
+      Some(ParseAlias(a, b, d))
     case _ => None
   }
 
@@ -88,18 +64,18 @@ object PruneBarrieredJsonParse extends Rule[LogicalPlan] {
               val needed = scala.collection.mutable.LinkedHashSet.empty[String]
               def scanUses(e: Expression): Unit = e match {
                 case GetStructField(ar: AttributeReference, ord, _) if ar.exprId == id =>
-                  needed += pa.schema(ord).name
+                  needed += pa.parse.schema(ord).name
                 case ar: AttributeReference if ar.exprId == id => whole = true
                 case other => other.children.foreach(scanUses)
               }
               consumerExprs.foreach(scanUses)
-              if (whole || needed.isEmpty || needed.size >= pa.schema.length) None
+              if (whole || needed.isEmpty || needed.size >= pa.parse.schema.length) None
               else {
-                val pruned = StructType(pa.schema.fields.filter(f => needed.contains(f.name)))
+                val pruned = StructType(pa.parse.schema.fields.filter(f => needed.contains(f.name)))
                 val newAlias = Alias(
                   pa.barrier.copy(child = pa.parse.copy(schema = pruned)),
                   pa.alias.name)(pa.alias.exprId, pa.alias.qualifier)
-                Some(id -> (pa.schema, pruned,
+                Some(id -> (pa.parse.schema, pruned,
                   newAlias.toAttribute.asInstanceOf[AttributeReference], newAlias))
               }
             }.toMap

@@ -3,15 +3,17 @@ package graft.relationalize
 import graft.core._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql._
-import org.apache.spark.sql.functions.{coalesce, col, from_json, lit, raise_error, timestamp_millis, when}
+import org.apache.spark.sql.functions.{call_function, coalesce, col, lit, raise_error, timestamp_millis, when}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-/** One emitted flat row: destination table + the row as a compact JSON object
-  * (scalar JSON text preserves the bool/int/float/str/null tags the choice
-  * type system needs — see [[graft.core.JValue]]).
+import java.nio.charset.StandardCharsets.UTF_8
+
+/** One emitted row: destination table + the row as a [[TaggedRow]], which
+  * keeps the bool/int/float/str tags the choice type system needs (see
+  * [[graft.core.JValue]]); or a schema marker row (see [[RelationalizeSpark.emit]]).
   */
-final case class Emitted(table: String, payload: String)
+final case class Emitted(table: String, payload: Array[Byte])
 
 final case class RelationalizeOptions(
     dropNullColumns: Boolean = false,
@@ -74,7 +76,9 @@ final case class RelationalizeOptions(
   */
 final case class RelationalizeResult(
     schemas: Map[String, ChoiceSchema],
-    private val emitted: Dataset[Emitted]) {
+    private val emitted: Dataset[Emitted],
+    /** Rows per table, folded from the marker rows: no extra job. */
+    rowCounts: Map[String, Long]) {
 
   lazy val tables: Map[String, DataFrame] =
     schemas.map { case (t, s) => t -> convert(t, s) }
@@ -101,15 +105,15 @@ final case class RelationalizeResult(
 /** Distributed relationalize, Spark-first:
   *
   *   - '''pass 1''' ([[emit]]) — one narrow `mapPartitions` over the raw
-  *     documents emits `(table, flatRowJson)` pairs and observes every row
+  *     documents emits `(table, taggedRow)` pairs and observes every row
   *     into a per-partition choice schema as it is written; the only thing
   *     that reaches the driver is those per-table ''schemas'' (KB-sized marker
   *     rows), folded with the reference's own associative shard-merge
   *     (`relationalize/schema.py:259-302`) by [[collectSchemas]] — this
   *     holds at 100 TB: no data shuffle, driver state is only the schemas.
-  *   - '''pass 2''' — with schemas broadcast back (implicitly, via closure:
-  *     they are tiny), each table's rows are converted (choice-split) and
-  *     decoded straight to `InternalRow`-friendly typed Rows. Tables are
+  *   - '''pass 2''' ([[toDataFrame]]) — per table, one filter on `table`, one
+  *     [[DecodeTaggedRow]] per row and a codegen'd routing projection into
+  *     the choice-split output columns: no text parse. Tables are
   *     either served from a cached emitted dataset (small/medium corpora) or
   *     from a single `partitionBy(table)` parquet materialization
   *     (large corpora / wide table fan-out), so N tables never cost N scans of
@@ -171,10 +175,11 @@ object RelationalizeSpark {
     * partition also observes every flat row into a local choice schema
     * ''before'' serialization (the reference's `on_object_write` fusion,
     * `relationalize.py:63`) and appends one [[SchemaMarker]]-prefixed row
-    * per discovered table at partition end. Schema inference then costs a
-    * collect of (partitions x tables) tiny rows — no second parse of any
-    * payload, no aggregation job over the data; [[toDataFrame]]'s table
-    * filter drops the marker rows.
+    * per discovered table at partition end: `"<row count> <schema>"` as
+    * UTF-8. Schema inference then costs a collect of
+    * (partitions x tables) tiny rows — no second parse of any payload, no
+    * aggregation job over the data; [[toDataFrame]]'s table filter drops the
+    * marker rows.
     *
     * The per-partition schema map is bounded: when a partition has observed
     * [[SchemaMapCap]] distinct tables, the accumulated schemas are flushed as
@@ -198,10 +203,11 @@ object RelationalizeSpark {
     ds.mapPartitions { iter =>
       val pid = TaskContext.getPartitionId()
       var ordinal = -1L
-      val localSchemas = scala.collection.mutable.Map.empty[String, ChoiceSchema]
+      val writer = new TaggedRow.Writer
+      val localSchemas = scala.collection.mutable.Map.empty[String, (ChoiceSchema, Long)]
       def flush(): Iterator[Emitted] = {
-        val rows = localSchemas.toVector.map { case (t, sch) =>
-          Emitted(s"$SchemaMarker$t", sch.serialize)
+        val rows = localSchemas.toVector.map { case (t, (sch, n)) =>
+          Emitted(s"$SchemaMarker$t", s"$n ${sch.serialize}".getBytes(UTF_8))
         }
         localSchemas.clear()
         rows.iterator
@@ -210,9 +216,9 @@ object RelationalizeSpark {
         ordinal += 1
         relLine(line, name, key(pid, ordinal, line), options.quarantine).iterator.flatMap {
           case (table, row) =>
-            localSchemas.update(table,
-              localSchemas.getOrElse(table, ChoiceSchema.empty).observe(row))
-            val data = Emitted(table, Json.writeTaggedRow(row))
+            val (sch, n) = localSchemas.getOrElse(table, (ChoiceSchema.empty, 0L))
+            localSchemas.update(table, (sch.observe(row), n + 1))
+            val data = Emitted(table, writer.write(row))
             if (localSchemas.size >= schemaMapCap) Iterator.single(data) ++ flush()
             else Iterator.single(data)
         }
@@ -231,33 +237,25 @@ object RelationalizeSpark {
 
   /** Collect + merge the per-partition schema marker rows of an [[emit]]. */
   def collectSchemas(emitted: Dataset[Emitted]): Map[String, ChoiceSchema] =
+    collectMarkers(emitted).map { case (t, (s, _)) => t -> s }
+
+  /** Per table: the merged schema and the summed row count of the markers. */
+  private[relationalize] def collectMarkers(emitted: Dataset[Emitted]): Map[String, (ChoiceSchema, Long)] =
     schemaRows(emitted)
       .collect()
       .groupBy(_.table.stripPrefix(SchemaMarker))
       .map { case (t, rows) =>
-        t -> rows.map(r => ChoiceSchema.deserialize(r.payload))
-          .reduce(_.merge(_))
+        t -> rows.map(r => new String(r.payload, UTF_8).span(_ != ' '))
+          .map { case (n, sch) => (ChoiceSchema.deserialize(sch.tail), n.toLong) }
+          .reduce((x, y) => (x._1.merge(y._1), x._2 + y._2))
       }
-
-  /** The scalar tags a payload value can carry (nulls are keyed `none` but
-    * need no parse field — a missing field already reads null).
-    */
-  private val BaseTags = Vector("bool", "int", "float", "str")
-
-  private def rawSparkType(tag: String): DataType = tag match {
-    case "bool" => BooleanType
-    case "int" => LongType
-    case "float" => DoubleType
-    case "str" => StringType
-    case other => throw new IllegalStateException(s"no raw Spark type for tag $other")
-  }
 
   /** Pass-2: convert one table's emitted rows to a typed DataFrame.
     *
-    * Expression-only — no lambda decode. Payload keys carry each value's
-    * scalar tag (written in pass 1, where the tag was observed into the
-    * schema anyway), so conversion is one `from_json` with a field per
-    * (column, tag) followed by a codegen'd routing projection: field
+    * Expression-only — no lambda decode. Each payload record carries its
+    * value's scalar tag (written in pass 1, where the tag was observed into
+    * the schema anyway), so conversion is one [[DecodeTaggedRow]] with a
+    * field per (column, tag) followed by a codegen'd routing projection: field
     * `k<sep>int` feeds output `k_int` of a choice column, `k<sep>int` IS
     * output `k` of an int column, etc. Fields for tags a schema column does
     * not admit exist only to be detected: a non-null there raises, matching
@@ -265,23 +263,18 @@ object RelationalizeSpark {
     * (`relationalize/schema.py:49-52`) — that is what makes frozen-schema
     * streaming fail loudly instead of silently nulling new choice members.
     *
-    * Scale: the whole pass is expression-level and the projection runs
-    * inside whole-stage codegen — the previous `mapPartitions` decode
-    * (JValue graph + VectorMap + Row encoder per row) was opaque to Catalyst
-    * and is gone. The parse itself sits behind an
-    * [[graft.functions.OptimizationBarrier]]: joins on converted columns
-    * would otherwise push `IsNotNull` predicates through this projection and
-    * re-evaluate `from_json` per guard branch per row (measured 10 parses
-    * per payload, 25x wall time on the explode round-trip).
+    * Scale: the decode is one pass over the payload bytes and the projection
+    * runs inside whole-stage codegen. The decode sits behind an
+    * [[graft.functions.OptimizationBarrier]]: joins on converted columns would
+    * otherwise push `IsNotNull` predicates through this projection and
+    * re-evaluate it per guard branch per row (10 parses per payload, 25x wall
+    * time on the explode round-trip, measured with `from_json`).
     */
   def toDataFrame(emitted: Dataset[Emitted], table: String, schema: ChoiceSchema): DataFrame = {
     import ColType._
     graft.functions.GraftFunctions.registerAll(emitted.sparkSession)
-    val parseStruct = StructType(schema.columns.keys.toArray.flatMap(k =>
-      BaseTags.map(t => StructField(Json.taggedKey(k, t), rawSparkType(t)))))
-    // FAILFAST: a malformed payload is an engine bug — raise, don't null
-    val parsed = graft.functions.GraftFunctions.barrier(
-      from_json(col("payload"), parseStruct, Map("mode" -> "FAILFAST"))).as("r")
+    val parsed = graft.functions.GraftFunctions.barrier(call_function("graft_decode_tagged",
+      col("payload"), lit(TaggedRow.fields(schema.columns.keys).json))).as("r")
 
     def fld(k: String, tag: String): Column = col("r").getField(Json.taggedKey(k, tag))
     // guard `value` with raises on tags the schema does not admit for k
@@ -295,7 +288,7 @@ object RelationalizeSpark {
       ct match {
         case CChoice(ms) =>
           val members = ms.filter(_ != "none")
-          val badTags = BaseTags.filterNot(members.contains)
+          val badTags = TaggedRow.Tags.filterNot(members.contains)
           members.zipWithIndex.map { case (m, i) =>
             val v = fld(k, m)
             s"${k}_$m" -> (if (i == 0) guarded(k, ct, badTags, v) else v)
@@ -313,7 +306,7 @@ object RelationalizeSpark {
               raise_error(lit(s"unparseable timestamp in column $k"))).otherwise(cast),
             timestamp_millis(fld(k, "int")))))
         case t @ (CBool | CInt | CStr) =>
-          Seq(k -> guarded(k, ct, BaseTags.filterNot(_ == t.repr), fld(k, t.repr)))
+          Seq(k -> guarded(k, ct, TaggedRow.Tags.filterNot(_ == t.repr), fld(k, t.repr)))
         case CUnsupported(tag) =>
           throw new IllegalStateException(s"no Spark type for unsupported:$tag (column $k)")
       }
@@ -326,7 +319,12 @@ object RelationalizeSpark {
 
   /** Full pipeline over a collection of raw JSON documents. */
   def apply(ds: Dataset[String], name: String,
-            options: RelationalizeOptions = RelationalizeOptions()): RelationalizeResult = {
+            options: RelationalizeOptions = RelationalizeOptions()): RelationalizeResult =
+    apply(ds, name, options, s"relationalize $name")
+
+  /** [[apply]] with its schema collect labelled `<label>: schemas`. */
+  private[graft] def apply(ds: Dataset[String], name: String, options: RelationalizeOptions,
+                           label: String): RelationalizeResult = {
     val spark = ds.sparkSession
     val emitted: Dataset[Emitted] = options.materializePath match {
       case Some(path) =>
@@ -343,24 +341,28 @@ object RelationalizeSpark {
         // schema inference on a data-file-less partitioned dir throws
         spark.read
           .schema(StructType(Seq(
-            StructField("payload", StringType), StructField("table", StringType))))
+            StructField("payload", BinaryType), StructField("table", StringType))))
           .parquet(path)
           .select(col("table").cast(StringType), col("payload")).as[Emitted]
       case None =>
         emit(ds, name, options).persist(StorageLevel.MEMORY_AND_DISK)
     }
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"$label: schemas")
     // a failed schema collect must not leave the emit cached: no result
     // (and so no release()) exists yet
     val raw =
-      try collectSchemas(emitted)
+      try collectMarkers(emitted)
       catch { case e: Throwable => emitted.unpersist(); throw e }
-    val schemas = raw.map { case (t, s0) =>
+      finally sc.setJobDescription(callerDescription)
+    val schemas = raw.map { case (t, (s0, _)) =>
       var s = s0
       if (options.dropNullColumns) s = s.dropNullColumns._1
       if (options.dropSpecialCharColumns) s = s.dropSpecialCharColumns()._1
       if (options.dropDuplicateColumns) s = s.dropDuplicateColumns._1
       t -> s
     }
-    RelationalizeResult(schemas, emitted)
+    RelationalizeResult(schemas, emitted, raw.map { case (t, (_, n)) => t -> n })
   }
 }

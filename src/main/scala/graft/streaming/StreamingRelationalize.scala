@@ -227,17 +227,14 @@ object StreamingRelationalize {
   private[graft] def processEvolvingBatch(batch: Dataset[String], batchId: Long,
                                           name: String, outDir: String): Unit = {
     val sc = batch.sparkSession.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"relationalize b$batchId $name: schemas")
     // batch-scoped docKeys: positional coordinates restart every batch,
     // so without the prefix two batches' docs could share a rid tree and
     // corrupt any join-back over the accumulated sink (gate-pinned by
     // stream_rel_explode); replay keeps the same id, so rids stay
     // idempotent like the b<batchId> data writes. An empty batch observes
     // no table, so it writes nothing.
-    val result =
-      try RelationalizeSpark(batch, name, RelationalizeOptions(docKeyPrefix = s"b$batchId:"))
-      finally sc.setJobDescription(callerDescription)
+    val result = RelationalizeSpark(batch, name,
+      RelationalizeOptions(docKeyPrefix = s"b$batchId:"), s"relationalize b$batchId $name")
     try {
       val chains = result.schemas.toSeq.sortBy(_._1).map { case (t, observed) =>
         new Callable[Unit] {

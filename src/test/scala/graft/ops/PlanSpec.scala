@@ -284,13 +284,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (node.nodeName.contains("MapPartitions") || node.nodeName.contains("DeserializeToObject"))
         lambdas += 1
       node.expressions.foreach(_.foreach {
-        case _: org.apache.spark.sql.catalyst.expressions.JsonToStructs => parses += 1
+        case _: graft.relationalize.DecodeTaggedRow => parses += 1
         case _ =>
       })
     }
-    // one from_json per row — CollapseProject must NOT inline it into every
-    // output column (6 outputs here would mean 6 parses per payload)
-    assert(parses == 1, s"expected exactly 1 JsonToStructs, got $parses:\n$optimized")
+    // one decode per row — CollapseProject must NOT inline it into every
+    // output column (6 outputs here would mean 6 decodes per payload)
+    assert(parses == 1, s"expected exactly 1 DecodeTaggedRow, got $parses:\n$optimized")
     // pass 2 is expression-only: the only object lambdas live in pass 1,
     // behind the persisted emit (InMemoryRelation leaf), not in this plan
     assert(lambdas == 0, s"pass-2 plan contains object-lambda nodes:\n$optimized")
@@ -335,18 +335,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("narrow select over a wide relationalized table prunes the payload parse") {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
-    import org.apache.spark.sql.types.StructType
+    import graft.relationalize.DecodeTaggedRow
     // 50-column documents; consumers select 2
     val doc = (0 until 50).map(i => s""""c$i": $i""").mkString("{", ", ", "}")
     val docs = spark.createDataset(Seq(doc, doc))(Encoders.STRING)
     val wide = graft.relationalize.RelationalizeSpark(docs, "w")("w")
     val narrow = wide.select("c3", "c7")
     val parses = narrow.queryExecution.optimizedPlan.collect { case n =>
-      n.expressions.flatMap(_.collect { case j: JsonToStructs => j })
+      n.expressions.flatMap(_.collect { case d: DecodeTaggedRow => d })
     }.flatten
     assert(parses.size == 1, s"expected 1 parse, got ${parses.size}")
-    val fields = parses.head.schema.asInstanceOf[StructType].fieldNames
+    val fields = parses.head.schema.fieldNames
     // 2 columns x 4 tag fields (value + 3 raise-on-bad-tag guards), not 200
     assert(fields.length == 8, s"parse schema not pruned: ${fields.length} fields")
     assert(fields.forall(f => f.startsWith(s"c3${graft.core.Json.TagSep}") ||
@@ -357,9 +356,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.toSeq == Seq((3L, 7L), (3L, 7L)))
     // an unpruned consumer still parses the full struct (rule is use-driven)
     val full = wide.queryExecution.optimizedPlan.collect { case n =>
-      n.expressions.flatMap(_.collect { case j: JsonToStructs => j })
+      n.expressions.flatMap(_.collect { case d: DecodeTaggedRow => d })
     }.flatten
-    assert(full.head.schema.asInstanceOf[StructType].length == 200)
+    assert(full.head.schema.length == 200)
   }
 
   test("tfidf and decontamination broadcast their bounded sides") {
@@ -437,22 +436,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hazard below), and does not need to: Spark's ExtractWindowExpressions
     // always materializes a window's inputs in a Project BELOW the Window,
     // and that projection IS a pruning consumer over the defining project.
-    // A window over 2 of 50 columns must parse 8 tag fields, not 200.
+    // A window over 2 of 50 columns must decode 8 tag fields, not 200.
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import graft.relationalize.DecodeTaggedRow
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions.{col, row_number}
-    import org.apache.spark.sql.types.StructType
     val doc = (0 until 50).map(i => s""""c$i": $i""").mkString("{", ", ", "}")
     val docs = spark.createDataset(Seq(doc, doc))(Encoders.STRING)
     val wide = graft.relationalize.RelationalizeSpark(docs, "w")("w")
     val out = wide.select(col("c7"),
       row_number().over(W.orderBy(col("c3"), col("c7"))).as("rk"))
     val parses = out.queryExecution.optimizedPlan.collect { case n =>
-      n.expressions.flatMap(_.collect { case j: JsonToStructs => j })
+      n.expressions.flatMap(_.collect { case d: DecodeTaggedRow => d })
     }.flatten
     assert(parses.size == 1, s"expected 1 parse, got ${parses.size}")
-    val fields = parses.head.schema.asInstanceOf[StructType].fieldNames
+    val fields = parses.head.schema.fieldNames
     assert(fields.length == 8,
       s"window consumer parse not pruned: ${fields.length} fields")
     assert(fields.forall(f => f.startsWith(s"c3${graft.core.Json.TagSep}") ||
@@ -482,19 +480,19 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("joining converted tables does not multiply the payload parse") {
     // the rid join-back: an inner join's IsNotNull pushdown must NOT
-    // substitute from_json into a filter (10 parses/row before the barrier);
+    // substitute the decode into a filter (10 parses/row before the barrier);
     // the lazy plan variant keeps the join visible (the public entry
     // checkpoints, hiding the plan under a LogicalRDD)
     val df = RelationalizeQueries.relExplodePlan(spark, dir)._1
     var parses = 0
     df.queryExecution.optimizedPlan.foreach { node =>
       node.expressions.foreach(_.foreach {
-        case _: org.apache.spark.sql.catalyst.expressions.JsonToStructs => parses += 1
+        case _: graft.relationalize.DecodeTaggedRow => parses += 1
         case _ =>
       })
     }
-    // one parse for the root table's projection + one for the child's
-    assert(parses == 2, s"expected 2 JsonToStructs (root + child), got $parses")
+    // one decode for the root table's projection + one for the child's
+    assert(parses == 2, s"expected 2 DecodeTaggedRow (root + child), got $parses")
   }
 
   test("a below-dial k-core round has no exchange and runs as one job") {

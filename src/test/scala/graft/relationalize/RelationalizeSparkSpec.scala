@@ -223,6 +223,35 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getLong(1) == 7L)
   }
 
+  test("row counts ride the marker rows: one per table, equal to each table's count") {
+    // 3 partitions; a schema-map cap of 1 flushes after every row, so each
+    // table's count is then folded from one marker row per row
+    val docs = lmsDocs ++ Seq(
+      """{"user_id": "u3", "enrollments": [{"course_id": "c3"}], "tags": ["a", "b", "c"]}""")
+    val input = ds(docs: _*).repartition(3)
+    val res = RelationalizeSpark(input, "users")
+    try {
+      assert(res.rowCounts.keySet == res.tables.keySet)
+      res.tables.foreach { case (t, df) => assert(res.rowCounts(t) == df.count(), t) }
+      assert(res.rowCounts == Map("users" -> 3L, "users_enrollments" -> 3L, "users_tags" -> 3L))
+    } finally res.release()
+    val capped = RelationalizeSpark.collectMarkers(
+      RelationalizeSpark.emit(input, "users", RelationalizeOptions(), schemaMapCap = 1))
+    assert(capped.map { case (t, (_, n)) => t -> n } == res.rowCounts)
+  }
+
+  test("the schema collect runs as 'relationalize <name>: schemas' and restores the caller's label") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val labels = graft.ops.KcoreSpec.jobDescriptions(spark) {
+        RelationalizeSpark(ds(lmsDocs: _*), "users").release()
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+      }
+      assert(labels.nonEmpty && labels.forall(_ == "relationalize users: schemas"), labels)
+    } finally sc.setJobDescription(null)
+  }
+
   test("schema-map cap: extreme table fan-out with a tiny cap equals uncapped result") {
     // 120 docs, each fanning to distinct child tables -> ~360 distinct tables,
     // forced through a cap of 16 (mid-stream flushes every few documents)

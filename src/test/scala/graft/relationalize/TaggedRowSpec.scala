@@ -1,0 +1,133 @@
+package graft.relationalize
+
+import graft.core._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The pass-1 -> pass-2 codec: [[TaggedRow.Writer]] bytes decoded by
+  * [[DecodeTaggedRow]], evaluated directly (no session).
+  */
+class TaggedRowSpec extends AnyFunSuite {
+
+  private def forAll[A](gen: Gen[A], n: Int = 300)(f: A => Unit): Unit = {
+    var seed = Seed(20261018L)
+    (0 until n).foreach { _ =>
+      f(gen.pureApply(Gen.Parameters.default, seed))
+      seed = seed.next
+    }
+  }
+
+  private def fields(keys: Seq[String]): StructType = TaggedRow.fields(keys.distinct)
+
+  /** Decoded non-null fields; doubles compared by their bits (-0.0 != 0.0). */
+  private def decode(payload: Array[Byte], schema: StructType): Map[String, Any] = {
+    val r = DecodeTaggedRow(BoundReference(0, BinaryType, nullable = false), schema)
+      .eval(InternalRow(payload)).asInstanceOf[InternalRow]
+    schema.fields.zipWithIndex.collect { case (f, i) if !r.isNullAt(i) =>
+      f.name -> (r.get(i, f.dataType) match {
+        case u: UTF8String => u.toString
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case other => other
+      })
+    }.toMap
+  }
+
+  /** What `decode` must return for `row` under the full field list. */
+  private def expected(row: Seq[(String, JValue)]): Map[String, Any] = row.collect {
+    case (k, JBool(b)) => Json.taggedKey(k, "bool") -> b
+    case (k, JLong(l)) => Json.taggedKey(k, "int") -> l
+    case (k, JDouble(d)) if !d.isNaN && !d.isInfinite =>
+      Json.taggedKey(k, "float") -> java.lang.Double.doubleToRawLongBits(d)
+    case (k, JString(s)) => Json.taggedKey(k, "str") -> s
+  }.toMap
+
+  private def roundTrip(row: Seq[(String, JValue)]): Unit = {
+    val payload = new TaggedRow.Writer().write(row)
+    assert(decode(payload, fields(row.map(_._1))) == expected(row), row)
+  }
+
+  test("integer extremes and zigzag boundaries round-trip") {
+    roundTrip(Seq("min" -> JLong(Long.MinValue), "max" -> JLong(Long.MaxValue),
+      "zero" -> JLong(0), "neg1" -> JLong(-1), "b63" -> JLong(63), "b64" -> JLong(64),
+      "nb64" -> JLong(-64), "nb65" -> JLong(-65)))
+  }
+
+  test("doubles keep every bit: -0.0, 17-digit values, subnormals") {
+    val row = Seq("negzero" -> JDouble(-0.0), "zero" -> JDouble(0.0),
+      "sum" -> JDouble(0.1 + 0.2), "long" -> JDouble(1.2345678901234567e-300),
+      "sub" -> JDouble(java.lang.Double.MIN_VALUE), "max" -> JDouble(Double.MaxValue),
+      "third" -> JDouble(1.0 / 3))
+    roundTrip(row)
+    val got = decode(new TaggedRow.Writer().write(row), fields(row.map(_._1)))
+    assert(got(Json.taggedKey("negzero", "float")) == java.lang.Double.doubleToRawLongBits(-0.0))
+    assert(got(Json.taggedKey("sum", "float")) ==
+      java.lang.Double.doubleToRawLongBits(0.30000000000000004))
+  }
+
+  test("NaN, Infinity and null write no record and read as null") {
+    val row = Seq("nan" -> JDouble(Double.NaN), "pinf" -> JDouble(Double.PositiveInfinity),
+      "ninf" -> JDouble(Double.NegativeInfinity), "null" -> JNull, "kept" -> JLong(1))
+    val payload = new TaggedRow.Writer().write(row)
+    assert(decode(payload, fields(row.map(_._1))) == Map(Json.taggedKey("kept", "int") -> 1L))
+    assert(new TaggedRow.Writer().write(row.take(4)).sameElements(Array[Byte](0)))
+  }
+
+  test("an integer beyond Long range stays a str value") {
+    val row = Json.parseRow("""{"big": 123456789012345678901234567890, "small": 5}""").toSeq
+    assert(row.head._2 == JString("123456789012345678901234567890"))
+    val got = decode(new TaggedRow.Writer().write(row), fields(row.map(_._1)))
+    assert(got == Map(Json.taggedKey("big", "str") -> "123456789012345678901234567890",
+      Json.taggedKey("small", "int") -> 5L))
+  }
+
+  test("empty, unicode, surrogate-pair and control-character keys and values") {
+    roundTrip(Seq("" -> JString(""), "ключ" -> JString("значение"),
+      "emoji😀" -> JString("a👍b"), "ctl\u0001\u001f" -> JString("\n\t\u0000\r"),
+      "中文" -> JBool(true), "q\"\\" -> JBool(false), "e" -> JString("é" * 300)))
+  }
+
+  test("random rows round-trip, and one writer serves many rows") {
+    val genKey = Gen.oneOf(Gen.alphaNumStr, Gen.const("unié中"), Gen.const("tab\there"),
+      Gen.const("😀"))
+    val genVal: Gen[JValue] = Gen.oneOf(
+      Gen.const(JNull), Gen.oneOf(true, false).map(JBool.apply),
+      Gen.chooseNum(Long.MinValue, Long.MaxValue).map(JLong.apply),
+      Gen.chooseNum(Double.MinValue, Double.MaxValue).map(JDouble.apply),
+      Gen.oneOf(Double.NaN, Double.NegativeInfinity, -0.0).map(JDouble.apply),
+      Gen.alphaStr.map(JString.apply), Gen.asciiStr.map(JString.apply))
+    val writer = new TaggedRow.Writer
+    forAll(Gen.listOf(Gen.zip(genKey, genVal))) { kvs =>
+      val row = kvs.toMap.toSeq // flat rows have distinct keys
+      assert(decode(writer.write(row), fields(row.map(_._1))) == expected(row), row)
+    }
+  }
+
+  test("a pruned field list decodes only the fields it names") {
+    val row = Seq("a" -> JLong(1), "b" -> JString("x"), "c" -> JDouble(2.5), "d" -> JBool(true))
+    val pruned = StructType(Seq(StructField(Json.taggedKey("b", "str"), StringType),
+      StructField(Json.taggedKey("c", "int"), LongType),
+      StructField(Json.taggedKey("d", "bool"), BooleanType)))
+    val got = decode(new TaggedRow.Writer().write(row), pruned)
+    assert(got == Map(Json.taggedKey("b", "str") -> "x", Json.taggedKey("d", "bool") -> true))
+  }
+
+  test("a truncated or overlong payload and an unknown tag byte raise") {
+    val row = Seq("k" -> JString("value"), "n" -> JLong(300), "f" -> JDouble(1.5))
+    val payload = new TaggedRow.Writer().write(row)
+    val schema = fields(row.map(_._1))
+    (0 until payload.length).foreach { cut =>
+      val e = intercept[IllegalStateException](decode(payload.take(cut), schema))
+      assert(e.getMessage.contains("truncated"), s"cut at $cut: ${e.getMessage}")
+    }
+    val long = intercept[IllegalStateException](decode(payload :+ 0.toByte, schema))
+    assert(long.getMessage.contains("longer than its records"))
+    // one record: key "k" (length 1), then tag byte 9
+    val e = intercept[IllegalStateException](decode(Array[Byte](1, 1, 'k', 9, 0), schema))
+    assert(e.getMessage.contains("unknown tag byte 9"))
+  }
+}

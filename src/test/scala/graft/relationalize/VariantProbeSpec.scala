@@ -5,20 +5,20 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ROADMAP probe: could Spark 4 `VariantType` (`parse_json` + `variant_get`)
+/** Settled probe: could Spark 4 `VariantType` (`parse_json` + `variant_get`)
   * replace the tagged-JSON `from_json` as the pass-2 payload representation?
   *
-  * The spec asserts the two extraction paths agree value-for-value on the
-  * payload shape pass 2 produces (wide object, scalar fields, narrow
-  * consumer), and prints relative timings to stderr for the record. The
-  * decision (see ROADMAP.md) keys off two facts this pins:
+  * Neither is the payload any more: pass 1 writes a binary tagged row and
+  * pass 2 decodes it in one pass per row ([[graft.relationalize.TaggedRow]],
+  * [[graft.relationalize.DecodeTaggedRow]]), with no text parse at all. The
+  * spec stays as a record of why variant was not chosen. It asserts the two
+  * JSON extraction paths agree value-for-value on a wide object with a
+  * narrow consumer, and prints relative timings to stderr:
   *   - correctness: variant_get with an explicit target type matches the
   *     pruned from_json extraction exactly on string/long fields;
-  *   - cost: timings are recorded, not asserted (sandbox noise), but the
-  *     structural costs are visible — variant parses the FULL object into
-  *     its binary encoding per row regardless of how few fields the
-  *     consumer reads, while `PruneBarrieredJsonParse` already narrows the
-  *     from_json schema to the consumed fields.
+  *   - cost: variant parses the FULL object into its binary encoding per
+  *     row regardless of how few fields the consumer reads, while a pruned
+  *     from_json (and now the decoder's pruned field list) skips the rest.
   */
 class VariantProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
