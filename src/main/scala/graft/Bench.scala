@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query flight recorder (round-11 verdict ask): the driver's r11 run
   * measured one query 40x its builder/judge time with reruns exhausted, and
   * the archive — seconds + loadavg only — could not distinguish a GC storm
@@ -176,38 +174,31 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // optional arg: comma-separated subset of the headline set (fast local
     // iteration on one query); the driver invokes with no args = full set
-    val wanted = args.headOption.map(_.split(",").map(_.trim).toSet)
+    val wanted = args.headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val catalog = SparkEntry.queries
+    val runnable = headline.filter(catalog.contains)
+    // a typo must fail, not time nothing and print an empty total
+    val unknown = wanted.getOrElse(Set.empty) -- runnable
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] not headline catalog entries: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // NOTE: do NOT lower spark.sql.files.maxPartitionBytes here: the sf0.1
-      // parquet files are single-row-group, so smaller splits cannot
-      // parallelize the scans, and empirically an 8 MB setting interacted
-      // with AQE to serialize rel_explode's intermediate stages (88 s vs
-      // 15 s cold). Parallelism begins at the first shuffle (32 partitions).
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // reliable checkpoints for Lifecycle.released (see Verify): the measured
-    // work then includes the materialize-and-release a production session
-    // pays. SPARK_GRAFT_LOCAL_CKPT=1 switches to the localCheckpoint
-    // fallback (in-memory materialization) for comparison.
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    if (!sys.env.contains("SPARK_GRAFT_LOCAL_CKPT"))
-      spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    // NOTE: do NOT lower spark.sql.files.maxPartitionBytes here: the sf0.1
+    // parquet files are single-row-group, so smaller splits cannot
+    // parallelize the scans, and empirically an 8 MB setting interacted
+    // with AQE to serialize rel_explode's intermediate stages (88 s vs
+    // 15 s cold). Parallelism begins at the first shuffle (32 partitions).
+    // The session's checkpoint dir makes Lifecycle.released use reliable
+    // checkpoints: the measured work includes the materialize-and-release
+    // a production session pays.
+    val spark = LocalSession(defaultCpus = "4")
 
     // JVM/codegen warmup outside the timed region
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val recorder = new BenchFlightRecorder
     spark.sparkContext.addSparkListener(recorder)
-
-    val catalog = SparkEntry.queries
 
     // 1 untimed warm-up + RunsPerQuery timed runs: the first execution of a
     // query pays JIT/codegen warm-up that can dominate (measured 40x on
@@ -244,8 +235,7 @@ object Bench {
     // pollution fingerprint: median far above the fastest observed run
     def polluted(med: Double, floor: Double): Boolean =
       med > RerunRatio * floor && med - floor > 0.5
-    val results = headline.filter(catalog.contains)
-      .filter(n => wanted.forall(_.contains(n))).map { name =>
+    val results = runnable.filter(n => wanted.forall(_.contains(n))).map { name =>
       val loadStart = load1()
       var (med, floor, cold, raw) = measure(name)
       // rerun guard: median >> fastest run = transient pollution, not the
@@ -326,6 +316,5 @@ object Bench {
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"cold":$colds,"cold_total":$coldTotal%.3f,"rerun_exhausted":$flagged,"loadavg_end":${load1()}%.2f,"sf":"$sfDir"}""")
     Console.out.flush()
     spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(ckptDir.toFile)
   }
 }

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
-/** Per-job profile of one catalog query: wall, summed task run/cpu time and
-  * task count per Spark job, in submission order — the "which of this
-  * query's ~N jobs is the expensive one" question Bench's per-query totals
-  * cannot answer. Diagnostic only.
+/** Per-job profile of one catalog query: its optimized and executed plans,
+  * then wall, summed task run/cpu time and task count per Spark job, in
+  * submission order — the "which of this query's ~N jobs is the expensive
+  * one" question Bench's per-query totals cannot answer. The printed times
+  * exclude the plan printing. Diagnostic only.
   *
   * `sbt "runMain graft.Diagnose <name> [sfDir]"`
   */
@@ -57,35 +57,33 @@ object Diagnose {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    val spark = LocalSession(defaultCpus = "32")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val prof = new JobProfiler
     spark.sparkContext.addSparkListener(prof)
     val catalog = SparkEntry.queries
-    // run 0 = warm-up (JIT), run 1 = profiled
+    // run 0 = warm-up (JIT), run 1 = profiled, after its plans are printed
     for (run <- 0 to 1) {
       spark.catalog.clearCache()
       prof.reset()
       val t0 = System.nanoTime()
-      catalog(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val df = catalog(name)(spark, sfDir)
+      val built = System.nanoTime() - t0
+      if (run == 1) {
+        println("=== optimizedPlan ===")
+        println(df.queryExecution.optimizedPlan.toString.take(8000))
+        println("=== executedPlan ===")
+        println(df.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==").head.take(8000))
+      }
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val dt = (built + System.nanoTime() - t1) / 1e9
       println(f"=== run $run: $name $dt%.2f s ===")
     }
     // listener bus is async — give trailing events a moment
     Thread.sleep(500)
     prof.report()
     spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(ckptDir.toFile)
   }
 }

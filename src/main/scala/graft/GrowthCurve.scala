@@ -104,17 +104,7 @@ object GrowthCurve {
     section.foreach(s => require(sections(s),
       s"unknown section '$s' — expected one of ${sections.mkString(", ")}"))
     def want(s: String): Boolean = section.forall(_ == s)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-growth-ckpt").toString)
+    val spark = LocalSession(defaultCpus = "8")
 
     val docScales = Seq(("1x", 5000L), ("10x", 50000L))
     val embScales = Seq(("1x", 2000L), ("10x", 20000L))

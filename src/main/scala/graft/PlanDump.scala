@@ -84,18 +84,7 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(1))
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    val spark = LocalSession(defaultCpus = "32")
     java.nio.file.Files.createDirectories(outDir)
     ops.Lifecycle.generations(spark) { g =>
       val kernels = kernelPlans(spark, sfDir, g)
@@ -109,6 +98,5 @@ object PlanDump {
       }
     }
     spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(ckptDir.toFile)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,29 +6,20 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (focused re-verify)
-    val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // checkpoint files are deleted when their DataFrame is GC'd (see
-      // README ops notes: reliable-checkpoint files otherwise outlive it)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // a checkpoint dir makes Lifecycle.released use RELIABLE checkpoints, so
-    // every op's persisted intermediates are dropped eagerly (localCheckpoint
-    // would keep the result blocks cached until GC)
-    val ckptDir = Files.createTempDirectory("graft-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    val only: Option[Set[String]] = args.lift(2).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val live = SparkEntry.queries.keySet ++ SparkEntry.oracleBaselines.keySet
+    // a typo must not run nothing and read as a clean 0-fail compare
+    val unknown = only.getOrElse(Set.empty) -- live
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown entries: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
+    val spark = LocalSession(defaultCpus = "4")
     new java.io.File(outDir).mkdirs()
     // drop result dirs for queries outside this run's scope: renamed/removed
     // catalog entries, and — in focused mode — leftovers from earlier runs
     // (a stale dump would otherwise be compared as if this run produced it)
-    val live = SparkEntry.queries.keySet ++ SparkEntry.oracleBaselines.keySet
-    val keep = only.map(_.intersect(live)).getOrElse(live)
+    val keep = only.getOrElse(live)
     Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && !keep.contains(f.getName))
       .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d))
@@ -66,6 +56,5 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(ckptDir.toFile)
   }
 }

@@ -32,8 +32,8 @@ import org.apache.spark.storage.StorageLevel
   * the RESULT blocks cached until the DataFrame is GC'd (the ContextCleaner
   * releases them) — bounded by the result size, not the intermediates.
   * Reliable-checkpoint FILES outlive the DataFrame unless
-  * `spark.cleaner.referenceTracking.cleanCheckpoints` is enabled; Verify and
-  * Bench set it (see README ops notes).
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is enabled;
+  * [[graft.LocalSession]] sets it (see README ops notes).
   */
 object Lifecycle {
 

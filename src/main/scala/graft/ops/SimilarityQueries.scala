@@ -47,11 +47,17 @@ object SimilarityQueries {
     * each candidate pair evaluates exactly one higher-order fold (the dot)
     * instead of three.
     */
-  def annBruteForce(s: SparkSession, dir: String): DataFrame = {
+  def annBruteForce(s: SparkSession, dir: String): DataFrame =
+    bruteForceFrom(embNormed(s, dir))
+
+  /** The exact-search projection of the corpus: (vec_id, v, nv), the
+    * widened vector and its norm, computed once per vector. Callers that
+    * read it more than once put it behind their own persist barrier.
+    */
+  private def embNormed(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.registerAll(s)
-    val emb = Tables(s, dir, "embeddings").selectExpr("vec_id", s"$toDouble AS v")
+    Tables(s, dir, "embeddings").selectExpr("vec_id", s"$toDouble AS v")
       .selectExpr("vec_id", "v", s"${norm("v")} AS nv")
-    bruteForceFrom(emb)
   }
 
   /** The brute-force kernel over any (vec_id, v, nv) frame — shared between
@@ -72,6 +78,38 @@ object SimilarityQueries {
     sims.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select(col("query_id"), col("neighbor_id"), col("rk"))
+  }
+
+  /** One approximate arm of a recall monitor: its top-5 `got`, the names of
+    * its two output columns, and the exact top-5 it is scored against when
+    * that is not the monitor's own truth (the delete monitor's before arm).
+    * `A` is a DataFrame for [[recallAt]] and a CTE name for [[duckRecall]],
+    * so a monitor reads the same on both sides.
+    */
+  private[ops] final case class RecallArm[A](got: A, hits: String = "hits",
+      recall: String = "recall", truth: Option[A] = None)
+
+  /** Recall@5 of approximate top-5 arms against an exact top-5, the one
+    * measure every `ann_*_recall` monitor reports. For every query of
+    * `truth` (query_id, neighbor_id) it emits, per arm, the hit count
+    * (BIGINT) and hits / 5 (DOUBLE); a query with no hit reads 0 / 0.0, and
+    * approximate rows outside the truth count for nothing. Plan: per arm a
+    * left-semi join of the arm's truth on the arm, a `groupBy(query_id)`
+    * count, then the distinct truth queries left-join each arm's counts.
+    */
+  private[ops] def recallAt(truth: DataFrame, arms: RecallArm[DataFrame]*): DataFrame = {
+    val pair = Seq("query_id", "neighbor_id")
+    val joined = arms.zipWithIndex.foldLeft(truth.select(col("query_id")).distinct()) {
+      case (acc, (arm, i)) =>
+        val hits = arm.truth.getOrElse(truth).select(pair.map(col): _*)
+          .join(arm.got.select(pair.map(col): _*), pair, "left_semi")
+          .groupBy(col("query_id")).agg(count(lit(1)).as(s"hits$i"))
+        acc.join(hits, Seq("query_id"), "left")
+    }
+    joined.selectExpr("query_id" +: arms.zipWithIndex.flatMap { case (arm, i) =>
+      Seq(s"CAST(coalesce(hits$i, 0) AS BIGINT) AS ${arm.hits}",
+        s"CAST(coalesce(hits$i, 0) AS DOUBLE) / 5.0 AS ${arm.recall}")
+    }: _*)
   }
 
   /** Metadata-FILTERED vector search — the production retrieval pattern
@@ -98,12 +136,8 @@ object SimilarityQueries {
     * frame and the normalized embedding frame — ONE definition, so the
     * monitor can never drift from the entry it monitors.
     */
-  private def filteredSearchParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.registerAll(s)
-    val emb = Tables(s, dir, "embeddings").selectExpr("vec_id", s"$toDouble AS v")
-      .selectExpr("vec_id", "v", s"${norm("v")} AS nv")
-    (eligibleIds(s, dir), emb)
-  }
+  private def filteredSearchParts(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (eligibleIds(s, dir), embNormed(s, dir))
 
   /** The eligibility predicate of the whole filtered-search family — the
     * ONE place the 'en' rule lives.
@@ -136,18 +170,11 @@ object SimilarityQueries {
   def annFilteredRecall(s: SparkSession, dir: String): DataFrame = {
     val (keep, embRaw) = filteredSearchParts(s, dir)
     val emb = embRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val truth = filteredTruthFrom(keep, emb)
-      .select(col("query_id"), col("neighbor_id"))
     val post = bruteForceFrom(emb)
       .join(broadcast(keep.withColumnRenamed("vec_id", "neighbor_id")),
         Seq("neighbor_id"), "left_semi")
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = truth.join(post, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = truth.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS post_hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS post_recall")
+    val recall = recallAt(filteredTruthFrom(keep, emb),
+      RecallArm(post, hits = "post_hits", recall = "post_recall"))
     Lifecycle.released(recall, emb)
   }
 
@@ -178,16 +205,8 @@ object SimilarityQueries {
                            cfg: IvfConfig = IvfConfig()): DataFrame = {
     val (emb, centroids) = buildIndex(s, dir, cfg)
     val keep = eligibleIds(s, dir)
-    val truth = filteredTruthFrom(keep, emb)
-      .select(col("query_id"), col("neighbor_id"))
-    val got = ivfFrom(emb, centroids, cfg, keep = keep)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = truth.join(got, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = truth.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS recall")
+    val recall = recallAt(filteredTruthFrom(keep, emb),
+      RecallArm(ivfFrom(emb, centroids, cfg, keep = keep)))
     Lifecycle.released(recall, emb, centroids)
   }
 
@@ -390,14 +409,7 @@ object SimilarityQueries {
     */
   def annRecall(s: SparkSession, dir: String, cfg: IvfConfig = IvfConfig()): DataFrame = {
     val (emb, centroids) = buildIndex(s, dir, cfg)
-    val bf = bruteForceFrom(emb).select(col("query_id"), col("neighbor_id"))
-    val ivf = ivfFrom(emb, centroids, cfg).select(col("query_id"), col("neighbor_id"))
-    val hits = bf.join(ivf, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = bf.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS recall")
+    val recall = recallAt(bruteForceFrom(emb), RecallArm(ivfFrom(emb, centroids, cfg)))
     Lifecycle.released(recall, emb, centroids)
   }
 
@@ -449,19 +461,9 @@ object SimilarityQueries {
     * PQ worst case and the honest number IS the report).
     */
   def annPqRecall(s: SparkSession, dir: String, cfg: PqConfig = PqConfig()): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val (subs, cb, top) = pqTop(s, dir, cfg)
-    val emb = Tables(s, dir, "embeddings").selectExpr("vec_id", s"$toDouble AS v")
-      .selectExpr("vec_id", "v", s"${norm("v")} AS nv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bf = bruteForceFrom(emb).select(col("query_id"), col("neighbor_id"))
-    val hits = bf.join(top.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = bf.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS recall")
+    val emb = embNormed(s, dir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val recall = recallAt(bruteForceFrom(emb), RecallArm(top))
     Lifecycle.released(recall, subs, cb, emb)
   }
 
@@ -590,15 +592,7 @@ object SimilarityQueries {
   def annIvfPqRecall(s: SparkSession, dir: String, ivfCfg: IvfConfig = IvfConfig(),
                      pqCfg: PqConfig = PqConfig()): DataFrame = {
     val (barriers, emb, top) = ivfPqTop(s, dir, ivfCfg, pqCfg)
-    val bf = bruteForceFrom(emb).select(col("query_id"), col("neighbor_id"))
-    val hits = bf.join(top.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = bf.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS recall")
-    Lifecycle.released(recall, barriers: _*)
+    Lifecycle.released(recallAt(bruteForceFrom(emb), RecallArm(top)), barriers: _*)
   }
 
   /** The composed search: (persisted barriers, the shared per-vector
@@ -741,23 +735,12 @@ object SimilarityQueries {
                          cfg: IvfConfig = IvfConfig()): DataFrame = {
     val (barriers, centroids, embAlive, assignedAlive) = ivfDeleteParts(s, dir, cfg)
     val (emb, assigned) = (barriers.head, barriers(2))
-    def hitsOf(truth: DataFrame, got: DataFrame): DataFrame =
-      truth.join(got, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val truthB = bruteForceFrom(emb).select(col("query_id"), col("neighbor_id"))
-    val gotB = ivfFrom(emb, centroids, cfg, preAssigned = assigned)
-      .select(col("query_id"), col("neighbor_id"))
-    val truthA = bruteForceFrom(embAlive).select(col("query_id"), col("neighbor_id"))
-    val gotA = ivfFrom(embAlive, centroids, cfg, preAssigned = assignedAlive)
-      .select(col("query_id"), col("neighbor_id"))
-    val out = truthA.select(col("query_id")).distinct() // surviving queries only
-      .join(hitsOf(truthB, gotB).withColumnRenamed("hits", "hb"), Seq("query_id"), "left")
-      .join(hitsOf(truthA, gotA).withColumnRenamed("hits", "ha"), Seq("query_id"), "left")
-      .selectExpr("query_id",
-        "CAST(coalesce(hb, 0) AS BIGINT) AS hits_before",
-        "CAST(coalesce(hb, 0) AS DOUBLE) / 5.0 AS recall_before",
-        "CAST(coalesce(ha, 0) AS BIGINT) AS hits_after",
-        "CAST(coalesce(ha, 0) AS DOUBLE) / 5.0 AS recall_after")
+    // the after-arm truth supplies the query set: surviving queries only
+    val out = recallAt(bruteForceFrom(embAlive),
+      RecallArm(ivfFrom(emb, centroids, cfg, preAssigned = assigned),
+        hits = "hits_before", recall = "recall_before", truth = Some(bruteForceFrom(emb))),
+      RecallArm(ivfFrom(embAlive, centroids, cfg, preAssigned = assignedAlive),
+        hits = "hits_after", recall = "recall_after"))
     Lifecycle.released(out, barriers: _*)
   }
 
@@ -789,16 +772,7 @@ object SimilarityQueries {
                              pqCfg: PqConfig = PqConfig()): DataFrame = {
     val keep = eligibleIds(s, dir)
     val (barriers, emb, top) = ivfPqTop(s, dir, ivfCfg, pqCfg, keep = keep)
-    val truth = filteredTruthFrom(keep, emb)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = truth.join(top.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = truth.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS recall")
-    Lifecycle.released(recall, barriers: _*)
+    Lifecycle.released(recallAt(filteredTruthFrom(keep, emb), RecallArm(top)), barriers: _*)
   }
 
   /** Array-column surface: dimension, element extraction, label. */
@@ -913,18 +887,8 @@ object SimilarityQueries {
     */
   def annSq8Recall(s: SparkSession, dir: String): DataFrame = {
     val recon = sq8ReconNormed(s, dir)
-    val top = sq8TopFrom(recon)
-    val emb = Tables(s, dir, "embeddings").selectExpr("vec_id", s"$toDouble AS v")
-      .selectExpr("vec_id", "v", s"${norm("v")} AS nv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bf = bruteForceFrom(emb).select(col("query_id"), col("neighbor_id"))
-    val hits = bf.join(top.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = bf.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS recall")
+    val emb = embNormed(s, dir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val recall = recallAt(bruteForceFrom(emb), RecallArm(sq8TopFrom(recon)))
     Lifecycle.released(recall, recon, emb)
   }
 
@@ -995,16 +959,8 @@ object SimilarityQueries {
     */
   def annMatryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
     val emb = matIndex(s, dir)
-    val top = matTopFrom(emb)
-    val bf = bruteForceFrom(emb.select(col("vec_id"), col("v"), col("nv")))
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = bf.join(top.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = bf.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS recall")
+    val recall = recallAt(bruteForceFrom(emb.select(col("vec_id"), col("v"), col("nv"))),
+      RecallArm(matTopFrom(emb)))
     Lifecycle.released(recall, emb)
   }
 
@@ -1281,11 +1237,14 @@ object SimilarityQueries {
     */
   def embPcaProjectTopk(s: SparkSession, dir: String, k: Int = PcaK): DataFrame = {
     graft.functions.GraftFunctions.registerAll(s)
-    Tables(s, dir, "embeddings")
-      .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
-      .crossJoin(broadcast(pcaChainCached(s, dir, k)))
-      .selectExpr("vec_id" +: (1 to k).map(c => s"vec_dot(v, v$c) AS pc$c"): _*)
+    pcaReducedFrom(s, dir, k, Tables(s, dir, "embeddings")
+      .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v"))
   }
+
+  /** Any (vec_id, v) frame projected onto the top-k chain: pc1..pck. */
+  private def pcaReducedFrom(s: SparkSession, dir: String, k: Int, v: DataFrame): DataFrame =
+    v.crossJoin(broadcast(pcaChainCached(s, dir, k)))
+      .selectExpr("vec_id" +: (1 to k).map(c => s"vec_dot(v, v$c) AS pc$c"): _*)
 
   /** PCA whitening: each component projection scaled by 1/sqrt(eigenvalue)
     * so the reduced representation has unit variance per axis — the
@@ -1315,22 +1274,24 @@ object SimilarityQueries {
     * composes exactly like [[annIvf]]).
     */
   def annPcaReduced(s: SparkSession, dir: String, k: Int = PcaK): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
-    val red = Tables(s, dir, "embeddings")
-      .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
-      .crossJoin(broadcast(pcaChainCached(s, dir, k)))
-      .selectExpr("vec_id" +: (1 to k).map(c => s"vec_dot(v, v$c) AS pc$c"): _*)
+    val red = embPcaProjectTopk(s, dir, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Lifecycle.released(pcaTopFrom(red, k), red)
+  }
+
+  /** The reduced-space top-5 over a persisted pc1..pck frame: queries
+    * broadcast, score = the k-term dot, fully tie-broken rank.
+    */
+  private def pcaTopFrom(red: DataFrame, k: Int): DataFrame = {
     val queries = red.filter(col("vec_id") < 10)
       .selectExpr("vec_id AS query_id" +: (1 to k).map(c => s"pc$c AS qc$c"): _*)
     val score = (1 to k).map(c => s"qc$c * pc$c").mkString(" + ")
     val sims = broadcast(queries).join(red, col("vec_id") =!= col("query_id"))
       .selectExpr("query_id", "vec_id AS neighbor_id", s"$score AS score")
     val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id").asc)
-    val out = sims.withColumn("rk", row_number().over(w).cast("int"))
+    sims.withColumn("rk", row_number().over(w).cast("int"))
       .filter(col("rk") <= 5)
       .select(col("query_id"), col("neighbor_id"), col("rk"))
-    Lifecycle.released(out, red)
   }
 
   /** Recall monitor for the reduced-space search — the same continuous
@@ -1344,31 +1305,10 @@ object SimilarityQueries {
     * pinned output.
     */
   def annPcaRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
-    val emb = Tables(s, dir, "embeddings").selectExpr("vec_id", s"$toDouble AS v")
-      .selectExpr("vec_id", "v", s"${norm("v")} AS nv")
+    val emb = embNormed(s, dir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val red = pcaReducedFrom(s, dir, PcaK, emb.select(col("vec_id"), col("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val red = emb.select(col("vec_id"), col("v"))
-      .crossJoin(broadcast(pcaChainCached(s, dir, PcaK)))
-      .selectExpr("vec_id" +: (1 to PcaK).map(c => s"vec_dot(v, v$c) AS pc$c"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val queries = red.filter(col("vec_id") < 10)
-      .selectExpr("vec_id AS query_id" +: (1 to PcaK).map(c => s"pc$c AS qc$c"): _*)
-    val score = (1 to PcaK).map(c => s"qc$c * pc$c").mkString(" + ")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id").asc)
-    val top = broadcast(queries).join(red, col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id AS neighbor_id", s"$score AS score")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("query_id"), col("neighbor_id"))
-    val bf = bruteForceFrom(emb).select(col("query_id"), col("neighbor_id"))
-    val hits = bf.join(top, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val recall = bf.select(col("query_id")).distinct()
-      .join(hits, Seq("query_id"), "left")
-      .selectExpr("query_id", "CAST(coalesce(hits, 0) AS BIGINT) AS hits",
-        "CAST(coalesce(hits, 0) AS DOUBLE) / 5.0 AS recall")
-    Lifecycle.released(recall, emb, red)
+    Lifecycle.released(recallAt(bruteForceFrom(emb), RecallArm(pcaTopFrom(red, PcaK))), emb, red)
   }
 
   /** Non-default exercise config for the parameterized surface: fewer,
@@ -1420,6 +1360,58 @@ object SimilarityQueries {
   private def duckDot(a: String, b: String): String =
     s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
 
+  /** The widened corpus `e(vec_id, v)` the exact oracles rank over. */
+  private val duckEmb = s"e AS (SELECT vec_id, $duckV AS v FROM embeddings)"
+
+  /** The eligible ('en') ids — [[eligibleIds]] re-derived. */
+  private val duckKeep = "keep AS (SELECT doc_id AS vec_id FROM documents WHERE lang = 'en')"
+
+  /** DuckDB twin of [[bruteForceFrom]]: CTE `name(query_id, neighbor_id,
+    * rk)`, the exact cosine top-5 of every query (vec_id < 10) of
+    * `queries` over `corpus`, self excluded, ties to the lower id. Both
+    * relations expose (vec_id, v).
+    */
+  private def duckExactTop(name: String, queries: String, corpus: String): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT query_id, neighbor_id, rk FROM (
+       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |      CAST(row_number() OVER (PARTITION BY q.vec_id ORDER BY
+       |        ${duckDot("q.v", "c.v")} / (sqrt(${duckDot("q.v", "q.v")}) * sqrt(${duckDot("c.v", "c.v")})) DESC,
+       |        c.vec_id ASC) AS INT) AS rk
+       |    FROM $queries q JOIN $corpus c ON c.vec_id <> q.vec_id WHERE q.vec_id < 10) t
+       |  WHERE rk <= 5)""".stripMargin
+
+  /** The PRE-filter truth `truth` over the eligible corpus `c` — the
+    * [[filteredTruthFrom]] twin; needs `e` and `keep` in scope.
+    */
+  private val duckFilteredTruth =
+    s"""c AS (SELECT e.vec_id, e.v FROM e JOIN keep USING (vec_id)),
+       |${duckExactTop("truth", "e", "c")}""".stripMargin
+
+  /** DuckDB twin of [[recallAt]]: after the CTE chain `ctes`, each arm's
+    * hit count of its truth CTE in its approximate CTE, then per query of
+    * `truth` the hits (BIGINT) and hits / 5 (DOUBLE).
+    */
+  private def duckRecall(ctes: String, truth: String, arms: RecallArm[String]*): String = {
+    val counts = arms.zipWithIndex.map { case (arm, i) =>
+      s"""hit_counts$i AS (
+         |  SELECT t.query_id, count(1) AS hits
+         |  FROM ${arm.truth.getOrElse(truth)} t JOIN ${arm.got} a
+         |    ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
+         |  GROUP BY 1)""".stripMargin
+    }
+    val cols = arms.zipWithIndex.map { case (arm, i) =>
+      s"""  CAST(coalesce(h$i.hits, 0) AS BIGINT) AS ${arm.hits},
+         |  CAST(coalesce(h$i.hits, 0) AS DOUBLE) / 5.0 AS ${arm.recall}""".stripMargin
+    }
+    s"""WITH $ctes,
+       |${counts.mkString(",\n")}
+       |SELECT qy.query_id,
+       |${cols.mkString(",\n")}
+       |FROM (SELECT DISTINCT query_id FROM $truth) qy
+       |${arms.indices.map(i => s"LEFT JOIN hit_counts$i h$i ON h$i.query_id = qy.query_id").mkString("\n")}""".stripMargin
+  }
+
   /** One DuckDB Lloyd step: assign by mean-dot (exact int dot cast DOUBLE /
     * count, cid-asc ties), then component sums + counts per bucket.
     */
@@ -1446,8 +1438,7 @@ object SimilarityQueries {
     val cFinal = s"c${cfg.iters}"
     // the filtered variant restricts bucket-assigned candidates to the
     // eligible ids BEFORE ranking — ivfFrom's `keep` arm, re-derived
-    val keepCte = if (filtered)
-      "keep AS (SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'),\n" else ""
+    val keepCte = if (filtered) s"$duckKeep,\n" else ""
     val assignedF = if (filtered)
       ",\nassigned_f AS (SELECT a.* FROM assigned a JOIN keep USING (vec_id))" else ""
     val candSrc = if (filtered) "assigned_f" else "assigned"
@@ -1482,22 +1473,12 @@ object SimilarityQueries {
     * assignment), the SemDeDup pair rule + policy stratum as the delete
     * stream, the anti-join, and the post-delete probed top-5 — the
     * re-derivation of [[ivfDeleteParts]] + [[ivfFrom]]'s preAssigned arm.
-    * Ends with CTEs `assigned` (full), `alive`, and `top_after`.
+    * Extends the IVF chain (`assigned` and the full-corpus `ivf_top`) with
+    * `alive` and the post-delete `top_after`.
     */
   private def duckIvfDeleteCtes(cfg: IvfConfig): String = {
-    val lloyds = (1 to cfg.iters)
-      .map(i => duckLloyd(s"c${i - 1}", s"a$i", s"c$i") + ",\n").mkString
     val cFinal = s"c${cfg.iters}"
-    s"""e AS (SELECT vec_id, $duckV AS v,
-       |  list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS q
-       |  FROM embeddings),
-       |c0 AS (SELECT vec_id AS cid, q AS s, CAST(1 AS BIGINT) AS cnt FROM e WHERE vec_id < ${cfg.k}),
-       |${lloyds}assigned AS (
-       |  SELECT vec_id, v, q, bucket FROM (
-       |    SELECT e.vec_id, e.v, e.q, c.cid AS bucket,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY CAST(${duckDot("e.q", "c.s")} AS DOUBLE) / c.cnt DESC, c.cid ASC) AS rk
-       |    FROM e CROSS JOIN $cFinal c) t WHERE rk = 1),
+    s"""${duckIvfCtes(cfg)},
        |del_pairs AS (
        |  SELECT a.vec_id AS va, b.vec_id AS vb
        |  FROM assigned a JOIN assigned b
@@ -1531,25 +1512,8 @@ object SimilarityQueries {
     * alternative catalog entries).
     */
   private def duckRecallSql(cfg: IvfConfig): String =
-    s"""WITH ${duckIvfCtes(cfg)},
-       |bf_sims AS (
-       |  SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-       |    ${duckDot("q.v", "e2.v")} / (sqrt(${duckDot("q.v", "q.v")}) * sqrt(${duckDot("e2.v", "e2.v")})) AS sim
-       |  FROM e q JOIN e e2 ON e2.vec_id <> q.vec_id WHERE q.vec_id < 10),
-       |bf_top AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-       |    FROM bf_sims) t WHERE rk <= 5),
-       |hit_counts AS (
-       |  SELECT b.query_id, count(1) AS hits
-       |  FROM bf_top b JOIN ivf_top i
-       |    ON i.query_id = b.query_id AND i.neighbor_id = b.neighbor_id
-       |  GROUP BY 1)
-       |SELECT q.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-       |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS recall
-       |FROM (SELECT DISTINCT query_id FROM bf_top) q
-       |LEFT JOIN hit_counts h ON h.query_id = q.query_id""".stripMargin
+    duckRecall(s"${duckIvfCtes(cfg)},\n${duckExactTop("bf_top", "e", "e")}", "bf_top",
+      RecallArm("ivf_top"))
 
   /** The incremental-maintenance oracle: quantizer trained on the base
     * stratum only (seeds + Lloyd over `b`), delta vectors assigned to the
@@ -1740,7 +1704,7 @@ object SimilarityQueries {
       else ""
       solve + deflate
     }.mkString(",\n")
-    s"""WITH cells AS MATERIALIZED ($covCellsSql),
+    s"""cells AS MATERIALIZED ($covCellsSql),
        |m AS (SELECT i, j, cov FROM cells
        |      UNION ALL SELECT j AS i, i AS j, cov FROM cells WHERE i <> j),
        |mr1 AS MATERIALIZED (SELECT i, list(cov ORDER BY j) AS mr FROM m GROUP BY i),
@@ -1749,14 +1713,14 @@ object SimilarityQueries {
 
   /** DuckDB twin of [[embPcaTopk]]. */
   private def pcaTopkOracle(k: Int, iters: Int): String =
-    s"""${pcaTopkCtes(k, iters)}
+    s"""WITH ${pcaTopkCtes(k, iters)}
        |${(1 to k).map(c =>
       s"SELECT $c AS comp, CAST(kk AS INT) AS i, v[kk] AS loading, eigenvalue " +
         s"FROM ray$c, (SELECT unnest(range(1, 65)) AS kk)").mkString("\nUNION ALL\n")}""".stripMargin
 
   /** DuckDB twin of [[embPcaProjectTopk]]. */
   private def pcaProjectTopkOracle(k: Int, iters: Int): String =
-    s"""${pcaTopkCtes(k, iters)}
+    s"""WITH ${pcaTopkCtes(k, iters)}
        |SELECT vec_id,
        |${(1 to k).map(c =>
       s"  ${sumFold(s"list_transform(range(1, 65), k -> CAST(embedding[k] AS DOUBLE) * ray$c.v[k])")} AS pc$c")
@@ -1765,36 +1729,17 @@ object SimilarityQueries {
 
   /** DuckDB twin of [[embPcaWhiten]]. */
   private def pcaWhitenOracle(k: Int, iters: Int): String =
-    s"""${pcaTopkCtes(k, iters)}
+    s"""WITH ${pcaTopkCtes(k, iters)}
        |SELECT vec_id,
        |${(1 to k).map(c =>
       s"  ${sumFold(s"list_transform(range(1, 65), k -> CAST(embedding[k] AS DOUBLE) * ray$c.v[k])")} / sqrt(ray$c.eigenvalue) AS w$c")
       .mkString(",\n")}
        |FROM embeddings${(1 to k).map(c => s", ray$c").mkString}""".stripMargin
 
-  /** DuckDB twin of [[annPcaReduced]]. */
-  private def annPcaReducedOracle(k: Int, iters: Int): String = {
-    val projCols = (1 to k).map(c =>
-      s"  ${sumFold(s"list_transform(range(1, 65), k -> CAST(embedding[k] AS DOUBLE) * ray$c.v[k])")} AS pc$c")
-      .mkString(",\n")
-    val score = (1 to k).map(c => s"q.qc$c * r.pc$c").mkString(" + ")
-    s"""${pcaTopkCtes(k, iters)},
-       |red AS MATERIALIZED (
-       |  SELECT vec_id,
-       |$projCols
-       |  FROM embeddings${(1 to k).map(c => s", ray$c").mkString}),
-       |q AS (SELECT vec_id AS query_id${(1 to k).map(c => s", pc$c AS qc$c").mkString}
-       |      FROM red WHERE vec_id < 10)
-       |SELECT query_id, neighbor_id, rk FROM (
-       |  SELECT q.query_id, r.vec_id AS neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY $score DESC, r.vec_id ASC) AS INT) AS rk
-       |  FROM q JOIN red r ON r.vec_id <> q.query_id) t
-       |WHERE rk <= 5""".stripMargin
-  }
-
-  /** DuckDB twin of [[annPcaRecall]]. */
-  private def annPcaRecallOracle(k: Int, iters: Int): String = {
+  /** The reduced-space search chain through `pca_top(query_id,
+    * neighbor_id, rk)` — [[pcaTopFrom]] over the projected corpus.
+    */
+  private def pcaTopCtes(k: Int, iters: Int): String = {
     val projCols = (1 to k).map(c =>
       s"  ${sumFold(s"list_transform(range(1, 65), k -> CAST(embedding[k] AS DOUBLE) * ray$c.v[k])")} AS pc$c")
       .mkString(",\n")
@@ -1807,30 +1752,11 @@ object SimilarityQueries {
        |q AS (SELECT vec_id AS query_id${(1 to k).map(c => s", pc$c AS qc$c").mkString}
        |      FROM red WHERE vec_id < 10),
        |pca_top AS (
-       |  SELECT query_id, neighbor_id FROM (
+       |  SELECT query_id, neighbor_id, rk FROM (
        |    SELECT q.query_id, r.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.query_id
-       |        ORDER BY $score DESC, r.vec_id ASC) AS rk
-       |    FROM q JOIN red r ON r.vec_id <> q.query_id) t WHERE rk <= 5),
-       |ev AS (SELECT vec_id, $duckV AS v FROM embeddings),
-       |bf_sims AS (
-       |  SELECT qq.vec_id AS query_id, e2.vec_id AS neighbor_id,
-       |    ${duckDot("qq.v", "e2.v")} / (sqrt(${duckDot("qq.v", "qq.v")}) * sqrt(${duckDot("e2.v", "e2.v")})) AS sim
-       |  FROM ev qq JOIN ev e2 ON e2.vec_id <> qq.vec_id WHERE qq.vec_id < 10),
-       |bf_top AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-       |    FROM bf_sims) t WHERE rk <= 5),
-       |hit_counts AS (
-       |  SELECT b.query_id, count(1) AS hits
-       |  FROM bf_top b JOIN pca_top p
-       |    ON p.query_id = b.query_id AND p.neighbor_id = b.neighbor_id
-       |  GROUP BY 1)
-       |SELECT qd.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-       |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS recall
-       |FROM (SELECT DISTINCT query_id FROM bf_top) qd
-       |LEFT JOIN hit_counts h ON h.query_id = qd.query_id""".stripMargin
+       |      CAST(row_number() OVER (PARTITION BY q.query_id
+       |        ORDER BY $score DESC, r.vec_id ASC) AS INT) AS rk
+       |    FROM q JOIN red r ON r.vec_id <> q.query_id) t WHERE rk <= 5)""".stripMargin
   }
 
   /** DuckDB twin of [[embPcaPower]]: the same left-to-right +0.0-seeded
@@ -1966,78 +1892,22 @@ object SimilarityQueries {
     "ann_matryoshka" ->
       s"""WITH $matTopCtes
          |SELECT query_id, neighbor_id, rk FROM mat_top""".stripMargin,
-    "ann_matryoshka_recall" ->
-      s"""WITH $matTopCtes,
-         |e AS (SELECT vec_id, $duckV AS v FROM embeddings),
-         |bq AS (SELECT vec_id AS query_id, v AS bqv FROM e WHERE vec_id < 10),
-         |bsims AS (
-         |  SELECT query_id, e.vec_id AS neighbor_id,
-         |    ${duckDot("bqv", "v")} / (sqrt(${duckDot("bqv", "bqv")}) * sqrt(${duckDot("v", "v")})) AS sim
-         |  FROM bq JOIN e ON e.vec_id <> bq.query_id),
-         |bf_top AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM bsims) t WHERE rk <= 5),
-         |hit_counts AS (
-         |  SELECT b.query_id, count(1) AS hits
-         |  FROM bf_top b JOIN mat_top p
-         |    ON p.query_id = b.query_id AND p.neighbor_id = b.neighbor_id
-         |  GROUP BY 1)
-         |SELECT qy.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-         |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM bf_top) qy
-         |LEFT JOIN hit_counts h ON h.query_id = qy.query_id""".stripMargin,
+    "ann_matryoshka_recall" -> duckRecall(
+      s"$matTopCtes,\n$duckEmb,\n${duckExactTop("bf_top", "e", "e")}", "bf_top",
+      RecallArm("mat_top")),
     "ann_pq" ->
       s"""WITH $duckPqCtes
          |SELECT query_id, neighbor_id, rk FROM pq_top""".stripMargin,
-    "ann_pq_recall" ->
-      s"""WITH $duckPqCtes,
-         |bf_sims AS (
-         |  SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |    ${duckDot("q.v", "e2.v")} / (sqrt(${duckDot("q.v", "q.v")}) * sqrt(${duckDot("e2.v", "e2.v")})) AS sim
-         |  FROM e q JOIN e e2 ON e2.vec_id <> q.vec_id WHERE q.vec_id < 10),
-         |bf_top AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM bf_sims) t WHERE rk <= 5),
-         |hit_counts AS (
-         |  SELECT b.query_id, count(1) AS hits
-         |  FROM bf_top b JOIN pq_top p
-         |    ON p.query_id = b.query_id AND p.neighbor_id = b.neighbor_id
-         |  GROUP BY 1)
-         |SELECT q.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-         |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM bf_top) q
-         |LEFT JOIN hit_counts h ON h.query_id = q.query_id""".stripMargin,
+    "ann_pq_recall" -> duckRecall(s"$duckPqCtes,\n${duckExactTop("bf_top", "e", "e")}",
+      "bf_top", RecallArm("pq_top")),
     // all-integer SQ8: codes and reconstruction error on the exact
     // floor(x*10000) grid — non-negative operands, so // matches Spark div
     "ann_sq8" ->
       s"""WITH $sq8TopCtes
          |SELECT query_id, neighbor_id, rk FROM sq_top""".stripMargin,
-    "ann_sq8_recall" ->
-      s"""WITH $sq8TopCtes,
-         |e AS (SELECT vec_id, $duckV AS v FROM embeddings),
-         |bq AS (SELECT vec_id AS query_id, v AS bqv FROM e WHERE vec_id < 10),
-         |bsims AS (
-         |  SELECT query_id, e.vec_id AS neighbor_id,
-         |    ${duckDot("bqv", "v")} / (sqrt(${duckDot("bqv", "bqv")}) * sqrt(${duckDot("v", "v")})) AS sim
-         |  FROM bq JOIN e ON e.vec_id <> bq.query_id),
-         |bf_top AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM bsims) t WHERE rk <= 5),
-         |hit_counts AS (
-         |  SELECT b.query_id, count(1) AS hits
-         |  FROM bf_top b JOIN sq_top p
-         |    ON p.query_id = b.query_id AND p.neighbor_id = b.neighbor_id
-         |  GROUP BY 1)
-         |SELECT qy.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-         |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM bf_top) qy
-         |LEFT JOIN hit_counts h ON h.query_id = qy.query_id""".stripMargin,
+    "ann_sq8_recall" -> duckRecall(
+      s"$sq8TopCtes,\n$duckEmb,\n${duckExactTop("bf_top", "e", "e")}", "bf_top",
+      RecallArm("sq_top")),
     "emb_quantize" ->
       """WITH q AS (
         |  SELECT vec_id,
@@ -2060,63 +1930,23 @@ object SimilarityQueries {
         |FROM q CROSS JOIN s""".stripMargin,
     // pre-filter semantics: rank over the eligible ('en') corpus only
     "ann_filtered" ->
-      s"""WITH keep AS (SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'),
-         |e AS (SELECT vec_id, $duckV AS v FROM embeddings),
-         |c AS (SELECT e.vec_id, e.v FROM e JOIN keep USING (vec_id)),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-         |sims AS (
-         |  SELECT query_id, c.vec_id AS neighbor_id,
-         |    ${duckDot("qv", "v")} / (sqrt(${duckDot("qv", "qv")}) * sqrt(${duckDot("v", "v")})) AS sim
-         |  FROM q JOIN c ON c.vec_id <> q.query_id)
-         |SELECT query_id, neighbor_id, rk FROM (
-         |  SELECT query_id, neighbor_id,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rk
-         |  FROM sims) t WHERE rk <= 5""".stripMargin,
+      s"""WITH $duckKeep,
+         |$duckEmb,
+         |$duckFilteredTruth
+         |SELECT query_id, neighbor_id, rk FROM truth""".stripMargin,
     // post-filter-the-unfiltered-top-5 measured against the pre-filter
     // ground truth (which has recall 1 by construction)
-    "ann_filtered_recall" ->
-      s"""WITH keep AS (SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'),
-         |e AS MATERIALIZED (SELECT vec_id, $duckV AS v FROM embeddings),
-         |c AS (SELECT e.vec_id, e.v FROM e JOIN keep USING (vec_id)),
-         |q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-         |tsims AS (
-         |  SELECT query_id, c.vec_id AS neighbor_id,
-         |    ${duckDot("qv", "v")} / (sqrt(${duckDot("qv", "qv")}) * sqrt(${duckDot("v", "v")})) AS sim
-         |  FROM q JOIN c ON c.vec_id <> q.query_id),
-         |truth AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM tsims) t WHERE rk <= 5),
-         |usims AS (
-         |  SELECT query_id, e.vec_id AS neighbor_id,
-         |    ${duckDot("qv", "v")} / (sqrt(${duckDot("qv", "qv")}) * sqrt(${duckDot("v", "v")})) AS sim
-         |  FROM q JOIN e ON e.vec_id <> q.query_id),
-         |utop AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM usims) t WHERE rk <= 5),
-         |post AS (SELECT u.query_id, u.neighbor_id FROM utop u JOIN keep k ON k.vec_id = u.neighbor_id),
-         |hit_counts AS (
-         |  SELECT t.query_id, count(1) AS hits
-         |  FROM truth t JOIN post p ON p.query_id = t.query_id AND p.neighbor_id = t.neighbor_id
-         |  GROUP BY 1)
-         |SELECT qy.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS post_hits,
-         |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS post_recall
-         |FROM (SELECT DISTINCT query_id FROM truth) qy
-         |LEFT JOIN hit_counts h ON h.query_id = qy.query_id""".stripMargin,
+    "ann_filtered_recall" -> duckRecall(
+      s"""$duckKeep,
+         |$duckEmb,
+         |$duckFilteredTruth,
+         |${duckExactTop("utop", "e", "e")},
+         |post AS (SELECT u.query_id, u.neighbor_id FROM utop u JOIN keep k ON k.vec_id = u.neighbor_id)""".stripMargin,
+      "truth", RecallArm("post", hits = "post_hits", recall = "post_recall")),
     "ann_bruteforce" ->
-      s"""WITH e AS (SELECT vec_id, $duckV AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-         |sims AS (
-         |  SELECT query_id, e.vec_id AS neighbor_id,
-         |    ${duckDot("qv", "v")} / (sqrt(${duckDot("qv", "qv")}) * sqrt(${duckDot("v", "v")})) AS sim
-         |  FROM q JOIN e ON e.vec_id <> q.query_id)
-         |SELECT query_id, neighbor_id, rk FROM (
-         |  SELECT query_id, neighbor_id,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rk
-         |  FROM sims) t WHERE rk <= 5""".stripMargin,
+      s"""WITH $duckEmb,
+         |${duckExactTop("bf_top", "e", "e")}
+         |SELECT query_id, neighbor_id, rk FROM bf_top""".stripMargin,
     "ann_ivf" ->
       s"""WITH ${duckIvfCtes(IvfConfig())}
          |SELECT query_id, CAST(bucket AS BIGINT) AS bucket, neighbor_id, rk
@@ -2125,29 +1955,9 @@ object SimilarityQueries {
       s"""WITH ${duckIvfCtes(IvfConfig(), filtered = true)}
          |SELECT query_id, CAST(bucket AS BIGINT) AS bucket, neighbor_id, rk
          |FROM ivf_top""".stripMargin,
-    // filtered-IVF quality vs the exact PRE-filter truth over the
-    // eligible corpus (the same truth CTEs as ann_filtered_recall)
-    "ann_filtered_ivf_recall" ->
-      s"""WITH ${duckIvfCtes(IvfConfig(), filtered = true)},
-         |c AS (SELECT e.vec_id, e.v FROM e JOIN keep USING (vec_id)),
-         |tsims AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${duckDot("q.v", "c.v")} / (sqrt(${duckDot("q.v", "q.v")}) * sqrt(${duckDot("c.v", "c.v")})) AS sim
-         |  FROM e q JOIN c ON c.vec_id <> q.vec_id WHERE q.vec_id < 10),
-         |truth AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM tsims) t WHERE rk <= 5),
-         |hit_counts AS (
-         |  SELECT t.query_id, count(1) AS hits
-         |  FROM truth t JOIN ivf_top i
-         |    ON i.query_id = t.query_id AND i.neighbor_id = t.neighbor_id
-         |  GROUP BY 1)
-         |SELECT qy.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-         |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM truth) qy
-         |LEFT JOIN hit_counts h ON h.query_id = qy.query_id""".stripMargin,
+    "ann_filtered_ivf_recall" -> duckRecall(
+      s"${duckIvfCtes(IvfConfig(), filtered = true)},\n$duckFilteredTruth", "truth",
+      RecallArm("ivf_top")),
     "ann_ivfpq" ->
       s"""WITH $duckIvfPqCtes
          |SELECT query_id, neighbor_id, rk FROM ivfpq_top""".stripMargin,
@@ -2175,96 +1985,17 @@ object SimilarityQueries {
          |FROM top_after""".stripMargin,
     // recall before/after the deletes, exact truth recomputed per arm,
     // surviving queries only
-    "ann_ivf_delete_recall" ->
-      s"""WITH ${duckIvfDeleteCtes(IvfConfig())},
-         |probes_b AS (
-         |  SELECT query_id, qv, bucket FROM (
-         |    SELECT e.vec_id AS query_id, e.v AS qv, c.cid AS bucket,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY CAST(${duckDot("e.q", "c.s")} AS DOUBLE) / c.cnt DESC, c.cid ASC) AS rk
-         |    FROM e CROSS JOIN c2 c WHERE e.vec_id < 10) t WHERE rk <= 3),
-         |sims_b AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |    ${duckDot("p.qv", "a.v")} / (sqrt(${duckDot("p.qv", "p.qv")}) * sqrt(${duckDot("a.v", "a.v")})) AS sim
-         |  FROM probes_b p JOIN assigned a ON a.bucket = p.bucket AND a.vec_id <> p.query_id),
-         |top_b AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM sims_b) t WHERE rk <= 5),
-         |bf_b AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |        ${duckDot("q.v", "e2.v")} / (sqrt(${duckDot("q.v", "q.v")}) * sqrt(${duckDot("e2.v", "e2.v")})) DESC,
-         |        e2.vec_id ASC) AS rk
-         |    FROM e q JOIN e e2 ON e2.vec_id <> q.vec_id WHERE q.vec_id < 10) t WHERE rk <= 5),
-         |bf_a AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |        ${duckDot("q.v", "e2.v")} / (sqrt(${duckDot("q.v", "q.v")}) * sqrt(${duckDot("e2.v", "e2.v")})) DESC,
-         |        e2.vec_id ASC) AS rk
-         |    FROM alive q JOIN alive e2 ON e2.vec_id <> q.vec_id WHERE q.vec_id < 10) t WHERE rk <= 5),
-         |hb AS (
-         |  SELECT b.query_id, count(1) AS hits FROM bf_b b
-         |  JOIN top_b i ON i.query_id = b.query_id AND i.neighbor_id = b.neighbor_id
-         |  GROUP BY 1),
-         |ha AS (
-         |  SELECT b.query_id, count(1) AS hits FROM bf_a b
-         |  JOIN top_after i ON i.query_id = b.query_id AND i.neighbor_id = b.neighbor_id
-         |  GROUP BY 1)
-         |SELECT q.query_id,
-         |  CAST(coalesce(hb.hits, 0) AS BIGINT) AS hits_before,
-         |  CAST(coalesce(hb.hits, 0) AS DOUBLE) / 5.0 AS recall_before,
-         |  CAST(coalesce(ha.hits, 0) AS BIGINT) AS hits_after,
-         |  CAST(coalesce(ha.hits, 0) AS DOUBLE) / 5.0 AS recall_after
-         |FROM (SELECT DISTINCT query_id FROM bf_a) q
-         |LEFT JOIN hb ON hb.query_id = q.query_id
-         |LEFT JOIN ha ON ha.query_id = q.query_id""".stripMargin,
-    // filtered IVF-PQ quality vs the exact PRE-filter truth over the
-    // eligible corpus (the same truth CTEs as ann_filtered_ivf_recall)
-    "ann_filtered_ivfpq_recall" ->
-      s"""WITH ${duckIvfPqCtesFor(filtered = true)},
-         |c AS (SELECT e.vec_id, e.v FROM e JOIN keep USING (vec_id)),
-         |tsims AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${duckDot("q.v", "c.v")} / (sqrt(${duckDot("q.v", "q.v")}) * sqrt(${duckDot("c.v", "c.v")})) AS sim
-         |  FROM e q JOIN c ON c.vec_id <> q.vec_id WHERE q.vec_id < 10),
-         |truth AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM tsims) t WHERE rk <= 5),
-         |hit_counts AS (
-         |  SELECT t.query_id, count(1) AS hits
-         |  FROM truth t JOIN ivfpq_top i
-         |    ON i.query_id = t.query_id AND i.neighbor_id = t.neighbor_id
-         |  GROUP BY 1)
-         |SELECT qy.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-         |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM truth) qy
-         |LEFT JOIN hit_counts h ON h.query_id = qy.query_id""".stripMargin,
-    "ann_ivfpq_recall" ->
-      s"""WITH $duckIvfPqCtes,
-         |bf_sims AS (
-         |  SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |    ${duckDot("q.v", "e2.v")} / (sqrt(${duckDot("q.v", "q.v")}) * sqrt(${duckDot("e2.v", "e2.v")})) AS sim
-         |  FROM e q JOIN e e2 ON e2.vec_id <> q.vec_id WHERE q.vec_id < 10),
-         |bf_top AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-         |    FROM bf_sims) t WHERE rk <= 5),
-         |hit_counts AS (
-         |  SELECT b.query_id, count(1) AS hits
-         |  FROM bf_top b JOIN ivfpq_top i
-         |    ON i.query_id = b.query_id AND i.neighbor_id = b.neighbor_id
-         |  GROUP BY 1)
-         |SELECT q.query_id, CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-         |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 5.0 AS recall
-         |FROM (SELECT DISTINCT query_id FROM bf_top) q
-         |LEFT JOIN hit_counts h ON h.query_id = q.query_id""".stripMargin,
+    "ann_ivf_delete_recall" -> duckRecall(
+      s"""${duckIvfDeleteCtes(IvfConfig())},
+         |${duckExactTop("bf_b", "e", "e")},
+         |${duckExactTop("bf_a", "alive", "alive")}""".stripMargin, "bf_a",
+      RecallArm("ivf_top", hits = "hits_before", recall = "recall_before", truth = Some("bf_b")),
+      RecallArm("top_after", hits = "hits_after", recall = "recall_after")),
+    "ann_filtered_ivfpq_recall" -> duckRecall(
+      s"${duckIvfPqCtesFor(filtered = true)},\n$duckFilteredTruth", "truth",
+      RecallArm("ivfpq_top")),
+    "ann_ivfpq_recall" -> duckRecall(s"$duckIvfPqCtes,\n${duckExactTop("bf_top", "e", "e")}",
+      "bf_top", RecallArm("ivfpq_top")),
     "ann_recall" -> duckRecallSql(IvfConfig()),
     "ann_recall_alt" -> duckRecallSql(AltConfig),
     "ann_ivf_incremental" -> duckIvfIncrementalSql(IvfConfig(), DeltaMod),
@@ -2283,8 +2014,11 @@ object SimilarityQueries {
     "emb_pca_topk" -> pcaTopkOracle(PcaK, 12),
     "emb_pca_project_topk" -> pcaProjectTopkOracle(PcaK, 12),
     "emb_pca_whiten" -> pcaWhitenOracle(PcaK, 12),
-    "ann_pca_reduced" -> annPcaReducedOracle(PcaK, 12),
-    "ann_pca_recall" -> annPcaRecallOracle(PcaK, 12),
+    "ann_pca_reduced" ->
+      s"WITH ${pcaTopCtes(PcaK, 12)}\nSELECT query_id, neighbor_id, rk FROM pca_top",
+    "ann_pca_recall" -> duckRecall(
+      s"${pcaTopCtes(PcaK, 12)},\n$duckEmb,\n${duckExactTop("bf_top", "e", "e")}", "bf_top",
+      RecallArm("pca_top")),
     "emb_covariance" ->
       """WITH e AS (
         |  SELECT list_transform(embedding,

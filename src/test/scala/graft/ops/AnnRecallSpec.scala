@@ -21,6 +21,45 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  // --- the recallAt combinator on hand-built (query_id, neighbor_id) frames
+
+  private def pairs(rows: (Long, Long)*) = {
+    import spark.implicits._
+    rows.toDF("query_id", "neighbor_id")
+  }
+  private def top5(q: Long, from: Long) = (from until from + 5).map(n => (q, n))
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+
+  test("recallAt: zero hits still get a row, full hits read 1.0, foreign rows are ignored") {
+    import SimilarityQueries.{RecallArm, recallAt}
+    val truth = pairs(top5(1, 10) ++ top5(2, 20) ++ top5(3, 30): _*)
+    val got = pairs(
+      top5(1, 10) ++                        // every neighbor a hit
+      top5(2, 90) ++                        // no hit at all
+      Seq((3L, 30L), (3L, 34L), (3L, 99L)) ++ // two hits, one miss
+      top5(7, 10): _*)                      // a query outside the truth
+    val out = recallAt(truth, RecallArm(got))
+    assert(out.columns.toSeq == Seq("query_id", "hits", "recall"))
+    assert(out.schema("hits").dataType == org.apache.spark.sql.types.LongType)
+    assert(out.schema("recall").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(rowsOf(out) == Seq(Seq(1L, 5L, 1.0), Seq(2L, 0L, 0.0), Seq(3L, 2L, 0.4)))
+  }
+
+  test("recallAt: two arms with their own truths keep only the truth frame's queries") {
+    import SimilarityQueries.{RecallArm, recallAt}
+    val before = pairs(top5(1, 10) ++ top5(2, 20) ++ top5(3, 30): _*)
+    val after = pairs(top5(1, 11) ++ top5(3, 30): _*) // query 2 was deleted
+    val gotBefore = pairs(top5(1, 10) ++ top5(2, 20) ++ top5(3, 32): _*)
+    val gotAfter = pairs(top5(1, 10) ++ top5(3, 30): _*)
+    val out = recallAt(after,
+      RecallArm(gotBefore, hits = "hits_before", recall = "recall_before", truth = Some(before)),
+      RecallArm(gotAfter, hits = "hits_after", recall = "recall_after"))
+    assert(out.columns.toSeq ==
+      Seq("query_id", "hits_before", "recall_before", "hits_after", "recall_after"))
+    assert(rowsOf(out) == Seq(Seq(1L, 5L, 1.0, 4L, 0.8), Seq(3L, 3L, 0.6, 5L, 1.0)))
+  }
+
   test("IVF multi-probe recall@5 >= 0.9 vs brute force at sf0.01") {
     val rec = SimilarityQueries.annRecall(spark, "/root/testdata/sf0.01")
     val overall = rec.agg(avg(col("recall"))).head().getDouble(0)
