@@ -54,12 +54,6 @@ object PlanDump {
         val (edgesDeg, hinted) = I.pagerankDirectedPrepare(g, I.coOccurrence(s, dir, "y > src"))
         I.pagerankDirectedRound(edgesDeg, g.current, hinted)
       },
-      // a below-dial k-core round (round 2) over the cached edges
-      "q_kcore_round" -> { () =>
-        val edges = g.persist(I.kcoreEdges(ops.Tables(s, dir, "lineitem")))
-        val round1 = I.kcoreRound(edges).collect().map(_.getLong(0)).sorted
-        I.kcoreRound(I.kcoreKept(edges, Some(round1)))
-      },
       "emb_dup_clusters_propagate" -> (() => ccRound._1),
       "emb_dup_clusters_double" -> (() => ccRound._2),
       // the triangles kernel (the public entry checkpoints)

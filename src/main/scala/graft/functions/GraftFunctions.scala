@@ -4,7 +4,7 @@ import graft.core.Json
 import graft.relationalize.Relationalizer
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -54,13 +54,17 @@ object GraftFunctions {
     "graft_might_contain" -> (exprs =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
 
-  /** Register all engine functions on a session (idempotent). Synchronized:
-    * concurrent table conversions call it from several driver threads, and
-    * the optimizer-rule registration below is a check-then-set.
+  /** Register all engine functions on a session (idempotent: only the
+    * missing names, so a repeat call replaces nothing and logs no "replaced
+    * a previously registered function" warning). Synchronized: concurrent
+    * table conversions call it from several driver threads, and both
+    * registrations below are check-then-set.
     */
   def registerAll(spark: SparkSession): Unit = synchronized {
+    val registry = spark.sessionState.functionRegistry
     SqlFunctions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
     // parse-schema pruning through the barrier (idempotent registration):
     // runs after the main operator-optimization batch, where ColumnPruning

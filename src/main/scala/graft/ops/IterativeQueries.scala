@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterate-to-fixpoint query surface: the recursive-CTE workloads
   * (hierarchy resolution, transitive reachability) a warehouse answers with
@@ -538,14 +541,14 @@ object IterativeQueries {
     * Scale shape: the symmetrized edges are partitioned on src ONCE and
     * persisted; one distinct count of their srcs is the dial. Below
     * `nodeCap` the survivors live on the DRIVER as a sorted `Array[Long]`
-    * and each round is ONE exchange-free job over the edge cache
-    * ([[kcoreRound]]) that collects the next set — no per-round persist,
-    * broadcast or re-wrap. Above it the survivors are a persisted,
-    * lineage-truncated generation feeding two shuffled semi joins. The
-    * survivor count is the fixpoint check (S_r ⊆ S_{r-1}, so an unchanged
-    * size is an unchanged set; converged rounds are no-ops, so exiting
-    * early cannot diverge from the oracle's full unroll). Jobs are
-    * labelled `q_kcore: edges | round <r> | result`.
+    * and each round is ONE plan-free job over the edge cache's rows
+    * ([[kcoreDegrees]]) that collects the (survivor, degree) pairs; the
+    * fixpoint round's pairs are the result, a local relation. Above it the
+    * survivors are a persisted, lineage-truncated generation feeding two
+    * shuffled semi joins. The survivor count is the fixpoint check
+    * (S_r ⊆ S_{r-1}, so an unchanged size is an unchanged set; converged
+    * rounds are no-ops, so exiting early cannot diverge from the oracle's
+    * full unroll). Jobs are labelled `q_kcore: edges | round <r> | result`.
     */
   def kcore(s: SparkSession, dir: String): DataFrame =
     kcoreFrom(s, Tables(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")))
@@ -558,61 +561,71 @@ object IterativeQueries {
       val edges = g.persist(kcoreEdges(li))
       // RDD count: one job after the cache build (Dataset.count adds an exchange)
       val n0 = edges.select(col("src")).distinct().rdd.count()
-      // peels until the survivor count stops changing, or maxRounds
-      def peelToFixpoint(peel: () => Long, size: Long = n0, round: Int = 1): Unit =
-        if (round <= maxRounds) {
+      // true once the survivor count stops changing, false after maxRounds
+      def peelToFixpoint(peel: () => Long, size: Long = n0, round: Int = 1): Boolean =
+        round <= maxRounds && {
           phase(s"round $round")
           val cur = peel()
-          if (cur != size) peelToFixpoint(peel, cur, round + 1)
+          cur == size || peelToFixpoint(peel, cur, round + 1)
         }
-      val kept =
-        if (n0 <= nodeCap) {
-          var survivors: Option[Array[Long]] = None // round 1 keeps every edge
-          peelToFixpoint { () =>
-            survivors = Some(kcoreRound(kcoreKept(edges, survivors), k)
-              .collect().map(_.getLong(0)).sorted)
-            survivors.get.length
-          }
-          kcoreKept(edges, survivors)
-        } else {
-          def semi(surv: DataFrame): DataFrame = edges.join(surv, Seq("src"), "left_semi")
-            .join(surv.select(col("src").as("dst")), Seq("dst"), "left_semi")
-          g.start(edges.select(col("src")).distinct(), truncate = true)
-          peelToFixpoint(() =>
-            g.advance(kcoreRound(semi(g.current), k), truncate = true)(_.count()))
-          semi(g.current)
+      if (n0 <= nodeCap) {
+        val rows = edges.queryExecution.toRdd
+        var survivors: Option[Array[Long]] = None // round 1 keeps every edge
+        var pairs = Array.empty[(Long, Long)]
+        val fixpoint = peelToFixpoint { () =>
+          pairs = kcoreDegrees(rows, survivors, k)
+          survivors = Some(pairs.map(_._1))
+          pairs.length
         }
-      phase("result")
-      g.released(kept.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
-        .select(col("src").as("node"), col("core_deg")))
+        // an unchanged set means the last round counted the in-core
+        // degrees; a maxRounds exit recounts over the final set
+        if (!fixpoint) {
+          phase("result")
+          pairs = kcoreDegrees(rows, survivors, 0)
+        }
+        val schema = StructType(Seq(edges.schema("src").copy(name = "node"),
+          StructField("core_deg", LongType, nullable = false)))
+        val result = pairs.map { case (node, d) => Row(node, d) }
+        spark.createDataFrame(java.util.Arrays.asList(result: _*), schema)
+      } else {
+        def degrees(surv: DataFrame): DataFrame = edges.join(surv, Seq("src"), "left_semi")
+          .join(surv.select(col("src").as("dst")), Seq("dst"), "left_semi")
+          .groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
+        g.start(edges.select(col("src")).distinct(), truncate = true)
+        peelToFixpoint(() => g.advance(degrees(g.current).filter(col("core_deg") >= k)
+          .select(col("src")), truncate = true)(_.count()))
+        phase("result")
+        g.released(degrees(g.current).select(col("src").as("node"), col("core_deg")))
+      }
     }
 
   /** [[kcore]]'s edges: (u, v) and (v, u) per support-2 pair from ONE
     * explode over one scan of the pair build, partitioned on src.
     */
-  private[graft] def kcoreEdges(li: DataFrame): DataFrame =
+  private def kcoreEdges(li: DataFrame): DataFrame =
     supportPairs(li)
       .select(explode(array(struct(col("u").as("src"), col("v").as("dst")),
         struct(col("v").as("src"), col("u").as("dst")))).as("e"))
       .select(col("e.src"), col("e.dst"))
       .repartition(col("src"))
 
-  /** The edges with both ends in the sorted `survivors` (all when None).
-    * The binary-searched array rides in the udf's closure, i.e. in the task
-    * binary Spark broadcasts per stage anyway: no job, nothing to release.
+  /** A below-dial [[kcore]] round over the edge cache's `(src, dst)` rows:
+    * (src, degree ≥ `min`) over the edges with both ends in the sorted
+    * `survivors` (all when None), sorted by src. The cache is partitioned
+    * on src, so each partition counts its srcs whole, and the array rides
+    * the task binary: one job, no shuffle, no plan, nothing to release.
     */
-  private[graft] def kcoreKept(edges: DataFrame, survivors: Option[Array[Long]]): DataFrame =
-    survivors.fold(edges) { s =>
-      val member = udf((x: Long) => java.util.Arrays.binarySearch(s, x) >= 0)
-      edges.filter(member(col("src")) && member(col("dst")))
-    }
-
-  /** One [[kcore]] peel: the srcs with ≥ k `kept` edges. Over [[kcoreKept]]
-    * the degree groupBy reuses the edge cache's src partitioning, so the
-    * plan has no exchange. Shared by both branches and `PlanDump`.
-    */
-  private[graft] def kcoreRound(kept: DataFrame, k: Int = KcoreK): DataFrame =
-    kept.groupBy(col("src")).agg(count(lit(1)).as("d")).filter(col("d") >= k).select(col("src"))
+  private def kcoreDegrees(edges: RDD[InternalRow], survivors: Option[Array[Long]],
+      min: Int): Array[(Long, Long)] =
+    edges.mapPartitions { rows =>
+      val member = survivors.fold((_: Long) => true)(s => java.util.Arrays.binarySearch(s, _) >= 0)
+      val deg = scala.collection.mutable.LongMap.empty[Long]
+      rows.foreach { r =>
+        val u = r.getLong(0)
+        if (member(u) && member(r.getLong(1))) deg(u) = deg.getOrElse(u, 0L) + 1
+      }
+      deg.iterator.filter(_._2 >= min)
+    }.collect().sortBy(_._1)
 
   /** The [[kcore]] rounds unrolled as a MATERIALIZED CTE chain (same
     * discipline as the pagerank oracle).

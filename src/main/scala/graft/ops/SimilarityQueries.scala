@@ -635,6 +635,11 @@ object SimilarityQueries {
     (Seq(emb, centroids, subs, cb), emb, top)
   }
 
+  /** SemDeDup's within-bucket pair cut τ: [[embSemanticDedup]]'s default,
+    * [[ivfDeleteParts]]' delete stream and both of their oracles.
+    */
+  private final val SemDedupMinCosine = 0.4
+
   /** SemDeDup-style SEMANTIC dedup (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding corpus with the SAME
     * quantized k-means the IVF index uses, compare pairs only WITHIN a
@@ -657,7 +662,7 @@ object SimilarityQueries {
     */
   def embSemanticDedup(s: SparkSession, dir: String,
                        cfg: IvfConfig = IvfConfig(),
-                       minCosine: Double = 0.4): DataFrame = {
+                       minCosine: Double = SemDedupMinCosine): DataFrame = {
     val (emb, centroids) = buildIndex(s, dir, cfg)
     val assigned = assignBuckets(emb, centroids)
       .select(col("vec_id"), col("bucket"), col("v"), col("nv"))
@@ -700,7 +705,7 @@ object SimilarityQueries {
     // delete stream an index maintainer consumes
     val pruned = assigned.as("a").join(assigned.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .filter(expr(s"${dot("a.v", "b.v")} / (a.nv * b.nv) >= 0.4"))
+      .filter(expr(s"${dot("a.v", "b.v")} / (a.nv * b.nv) >= $SemDedupMinCosine"))
       .select(col("b.vec_id").as("vec_id"))
     val deleted = pruned
       .unionAll(emb.filter(col("vec_id") % DeletePolicyMod === 3).select(col("vec_id")))
@@ -1484,7 +1489,7 @@ object SimilarityQueries {
        |  FROM assigned a JOIN assigned b
        |    ON a.bucket = b.bucket AND a.vec_id < b.vec_id
        |  WHERE ${duckDot("a.v", "b.v")} /
-       |    (sqrt(${duckDot("a.v", "a.v")}) * sqrt(${duckDot("b.v", "b.v")})) >= 0.4),
+       |    (sqrt(${duckDot("a.v", "a.v")}) * sqrt(${duckDot("b.v", "b.v")})) >= $SemDedupMinCosine),
        |del AS MATERIALIZED (
        |  SELECT DISTINCT vec_id FROM (
        |    SELECT vb AS vec_id FROM del_pairs
@@ -1973,7 +1978,7 @@ object SimilarityQueries {
          |  FROM assigned a JOIN assigned b
          |    ON a.bucket = b.bucket AND a.vec_id < b.vec_id
          |  WHERE ${duckDot("a.v", "b.v")} /
-         |    (sqrt(${duckDot("a.v", "a.v")}) * sqrt(${duckDot("b.v", "b.v")})) >= 0.4),
+         |    (sqrt(${duckDot("a.v", "a.v")}) * sqrt(${duckDot("b.v", "b.v")})) >= $SemDedupMinCosine),
          |sd_dup AS (SELECT vb AS vec_id, min(va) AS dup_of FROM sd_pairs GROUP BY 1)
          |SELECT s.vec_id, CAST(s.bucket AS BIGINT) AS bucket, d.dup_of,
          |  d.dup_of IS NULL AS kept

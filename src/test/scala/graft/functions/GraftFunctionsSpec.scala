@@ -1,6 +1,9 @@
 package graft.functions
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,6 +21,41 @@ class GraftFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = spark.stop()
+
+  test("a second registerAll replaces no function and logs nothing") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val registry = spark.sessionState.functionRegistry
+    def registered = GraftFunctions.SqlFunctions.map { case (name, _) =>
+      val id = FunctionIdentifier(name)
+      registry.lookupFunction(id) -> registry.lookupFunctionBuilder(id)
+    }
+    val before = registered
+    assert(before.forall { case (info, builder) => info.isDefined && builder.isDefined })
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val logger = LogManager.getLogger(registry.getClass.getName).asInstanceOf[Logger]
+    val capture = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try {
+      GraftFunctions.registerAll(spark)
+      assert(registered.zip(before).forall { case ((info, builder), (info0, builder0)) =>
+        (info.get eq info0.get) && (builder.get eq builder0.get)
+      })
+      assert(logged.isEmpty, logged)
+      // the capture does see a replacement
+      val (name, builder) = GraftFunctions.SqlFunctions.head
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+      assert(logged.asScala.exists(_.contains("replaced a previously registered function")), logged)
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+  }
 
   test("hash60 equals the portable md5-prefix composite (and survives codegen)") {
     import spark.implicits._

@@ -1,11 +1,13 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -83,14 +85,19 @@ class KcoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sc = spark.sparkContext
     sc.setJobDescription("outer")
     try {
-      val labels = jobDescriptions(spark) {
-        IterativeQueries.kcoreFrom(spark, chainAndK4(spark))
+      // a result job runs above the dial and after a maxRounds exit; below
+      // the dial a fixpoint exit returns its last round's pairs (PlanSpec)
+      for ((nodeCap, maxRounds, result) <- Seq((Long.MaxValue, 12, false),
+          (ForceShuffled, 12, true), (Long.MaxValue, 1, true))) {
+        val labels = jobDescriptions(spark) {
+          IterativeQueries.kcoreFrom(spark, chainAndK4(spark), maxRounds = maxRounds,
+            nodeCap = nodeCap)
+        }
+        assert(labels.forall(_.startsWith("q_kcore: ")), labels)
+        assert(Seq("q_kcore: edges", "q_kcore: round 1").forall(labels.contains), labels)
+        assert(labels.contains("q_kcore: result") == result, labels)
+        assert(sc.getLocalProperty("spark.job.description") == "outer")
       }
-      assert(labels.nonEmpty)
-      assert(labels.forall(_.startsWith("q_kcore: ")), labels)
-      assert(Seq("q_kcore: edges", "q_kcore: round 1", "q_kcore: result").forall(labels.contains),
-        labels)
-      assert(sc.getLocalProperty("spark.job.description") == "outer")
       val dir = "/root/testdata/sf0.001"
       IterativeQueries.kcore(spark, dir)
       assert(sc.getLocalProperty("spark.job.description") == "outer", "after q_kcore")
@@ -129,27 +136,63 @@ object KcoreSpec {
   /** The descriptions of the jobs `body` starts, in start order (an unset
     * description reads as ""). The caller's description is left as it was.
     */
-  def jobDescriptions(spark: SparkSession)(body: => Unit): Seq[String] = {
+  def jobDescriptions(spark: SparkSession)(body: => Unit): Seq[String] =
+    record(spark)(body).jobs.map(_.description)
+
+  /** A job `body` started: its description, whether it ran inside a SQL
+    * execution, and the shuffle bytes its stages wrote.
+    */
+  final case class Job(description: String, inSqlExecution: Boolean, shuffleBytes: Long)
+
+  /** `body`'s jobs in start order, and the descriptions of the SQL
+    * executions it started (Spark describes an execution by the job
+    * description set when it starts).
+    */
+  final case class Recording(jobs: Seq[Job], sqlExecutions: Seq[String])
+
+  /** Records what `body` runs. The caller's description is left as it was. */
+  def record(spark: SparkSession)(body: => Unit): Recording = {
     val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(Int, String, Boolean)]()
+    val stageJob = new ConcurrentHashMap[Int, Int]()
+    val shuffleBytes = new ConcurrentHashMap[Int, Long]()
+    val executions = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        jobs.add((e.jobId,
+          p.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""),
+          p.exists(_.getProperty("spark.sql.execution.id") != null)))
+        e.stageIds.foreach(stageJob.put(_, e.jobId))
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val stage = e.stageInfo.stageId
+        if (stageJob.containsKey(stage)) shuffleBytes.merge(stageJob.get(stage),
+          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten, _ + _)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.add(s.description)
+        case _ =>
+      }
     }
     val Sentinel = "kcore-spec-sentinel"
+    def sentinelSeen = jobs.asScala.exists(_._2 == Sentinel)
     sc.addSparkListener(listener)
     try {
       body
       // the listener bus delivers in order: once the sentinel job is seen,
-      // so are all of body's jobs
+      // so are all of body's events
       val caller = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(Sentinel)
       try spark.range(1).collect() finally sc.setJobDescription(caller)
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains(Sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.contains(Sentinel), "listener bus did not deliver the sentinel job")
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinelSeen, "listener bus did not deliver the sentinel job")
     } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq.takeWhile(_ != Sentinel)
+    Recording(
+      jobs.asScala.toSeq.takeWhile(_._2 != Sentinel).map { case (id, description, sql) =>
+        Job(description, sql, shuffleBytes.getOrDefault(id, 0L))
+      },
+      executions.asScala.toSeq.takeWhile(_ != Sentinel))
   }
 }

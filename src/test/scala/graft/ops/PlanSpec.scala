@@ -496,26 +496,30 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a below-dial k-core round has no exchange and runs as one job") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.Exchange
     val li = KcoreSpec.chainAndK4(spark)
-    val edges = IterativeQueries.kcoreEdges(li).persist()
-    try {
-      edges.count()
-      // Exchange covers shuffle and broadcast exchanges; the helper walks
-      // AQE's final plan and its query stages, not the cached edges' plan
-      val walker = new AdaptiveSparkPlanHelper {}
-      for (survivors <- Seq(None, Some(Array(10L, 11L, 12L, 13L)))) {
-        val kept = IterativeQueries.kcoreKept(edges, survivors)
-        val plan = executedPlan(IterativeQueries.kcoreRound(kept))
-        val exchanges = walker.collectWithSubqueries(plan) { case e: Exchange => e }
-        assert(exchanges.isEmpty, s"round over ${survivors.map(_.length)} survivors has an exchange:\n$plan")
-      }
-    } finally edges.unpersist()
-    val labels = KcoreSpec.jobDescriptions(spark)(IterativeQueries.kcoreFrom(spark, li))
-    val perRound = labels.filter(_.startsWith("q_kcore: round ")).groupBy(identity)
+    val rec = KcoreSpec.record(spark)(IterativeQueries.kcoreFrom(spark, li))
+    val rounds = rec.jobs.filter(_.description.startsWith("q_kcore: round "))
     // round 1 peels the chain; round 2 keeps all four clique nodes: fixpoint
-    assert(perRound.keySet == Set("q_kcore: round 1", "q_kcore: round 2"), labels)
-    assert(perRound.values.forall(_.size == 1), s"a round ran more than one job: $labels")
+    assert(rounds.map(_.description) == Seq("q_kcore: round 1", "q_kcore: round 2"), rec)
+    // a plan-free job over the edge cache: no shuffle, no SQL execution
+    assert(rounds.forall(j => !j.inSqlExecution && j.shuffleBytes == 0), rec)
+    assert(!rec.sqlExecutions.exists(_.startsWith("q_kcore: round ")), rec)
+    // the fixpoint round's pairs are the result: no job after it
+    assert(rec.jobs.last == rounds.last, rec)
+  }
+
+  test("Tables reads a one-file table with no Spark job and Spark's inferred schema") {
+    val names = Seq("customer", "documents", "embeddings", "events", "lineitem", "nation",
+      "orders", "part", "region", "supplier")
+    val rec = KcoreSpec.record(spark)(names.foreach(Tables(spark, dir, _)))
+    assert(rec.jobs.isEmpty, rec)
+    for (name <- names.filter(_ != "events")) {
+      val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      assert(Tables(spark, dir, name).schema == inferred, name)
+    }
+    // events adapts ts to one TIMESTAMP column whatever the file holds
+    val events = Tables(spark, dir, "events")
+    assert(events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(events.count() == spark.read.parquet(s"$dir/events.parquet").count())
   }
 }
