@@ -28,6 +28,7 @@ object GraftFunctions {
     "graft_barrier" -> (exprs => OptimizationBarrier(exprs.head)),
     "graft_decode_tagged" -> (exprs => graft.relationalize.DecodeTaggedRow(exprs.head,
       DataType.fromJson(foldableString(exprs(1), "graft_decode_tagged schema")).asInstanceOf[StructType])),
+    "graft_unpack_tagged" -> (exprs => graft.relationalize.UnpackTaggedChunk(exprs.head)),
     "vec_dot" -> (exprs => VecDot(exprs.head, exprs(1))),
     "graft_overlap" -> (exprs => ArrayOverlap(exprs.head, exprs(1))),
     "ahash60" -> (exprs => AHash60(exprs.head)),

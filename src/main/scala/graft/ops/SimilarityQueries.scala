@@ -291,16 +291,23 @@ object SimilarityQueries {
 
   private[graft] def indexMemoInvalidate(): Unit = indexMemo.invalidate()
 
-  /** Shared IVF index build: per-vector projections (widened, quantized,
-    * norm) behind a persist barrier, seeded centroids, `cfg.iters` Lloyd
-    * rounds. Returns (emb [persisted], centroids [memoized local relation]).
+  /** The IVF index's per-vector projection (vec_id, v, q, nv): widened,
+    * quantized and norm, once per vector behind a persist barrier.
+    */
+  private def indexEmb(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.registerAll(s)
+    Tables(s, dir, "embeddings")
+      .selectExpr("vec_id", s"$toDouble AS v", s"$qExpr AS q")
+      .selectExpr("vec_id", "v", "q", s"${norm("v")} AS nv")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Shared IVF index build: [[indexEmb]], seeded centroids, `cfg.iters`
+    * Lloyd rounds. Returns (emb [persisted], centroids [memoized local
+    * relation]).
     */
   private def buildIndex(s: SparkSession, dir: String, cfg: IvfConfig): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.registerAll(s)
-    val emb = Tables(s, dir, "embeddings")
-      .selectExpr("vec_id", s"$toDouble AS v", s"$qExpr AS q")
-      .selectExpr("vec_id", "v", "q", s"${norm("v")} AS nv") // once per vector, behind the persist
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val emb = indexEmb(s, dir)
     val centroids = indexMemo.cached(s, (dir, s"ivf-${cfg.k}-${cfg.iters}")) {
       var c = emb.filter(col("vec_id") < cfg.k)
         .selectExpr("vec_id AS cid", "q AS s", "CAST(1 AS BIGINT) AS cnt")
@@ -335,11 +342,7 @@ object SimilarityQueries {
   def annIvfIncremental(s: SparkSession, dir: String,
                         cfg: IvfConfig = IvfConfig(), deltaMod: Int = DeltaMod): DataFrame = {
     require(deltaMod >= 2, "deltaMod must be >= 2 (deltaMod - 1 selects the delta stratum)")
-    graft.functions.GraftFunctions.registerAll(s)
-    val emb = Tables(s, dir, "embeddings")
-      .selectExpr("vec_id", s"$toDouble AS v", s"$qExpr AS q")
-      .selectExpr("vec_id", "v", "q", s"${norm("v")} AS nv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val emb = indexEmb(s, dir)
     val base = emb.filter(col("vec_id") % deltaMod =!= (deltaMod - 1))
     // base-corpus quantizer, memoized like [[buildIndex]]'s (distinct key:
     // it is trained on the base stratum only)
@@ -1005,9 +1008,7 @@ object SimilarityQueries {
       .withColumn("lrk", row_number().over(lw))
       .filter(col("lrk") <= 20)
       .select(col("query_id"), col("doc_id"), col("lrk"))
-    val emb = Tables(s, dir, "embeddings")
-      .selectExpr("vec_id AS doc_id", s"$toDouble AS v")
-      .selectExpr("doc_id", "v", s"${norm("v")} AS nv")
+    val emb = embNormed(s, dir).withColumnRenamed("vec_id", "doc_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val qv = emb.filter(col("doc_id") < 5)
       .selectExpr("doc_id AS query_id", "v AS qv", "nv AS qn")
@@ -1871,12 +1872,12 @@ object SimilarityQueries {
          |    SELECT query_id, doc_id,
          |      row_number() OVER (PARTITION BY query_id ORDER BY shared DESC, doc_id ASC) AS lrk
          |    FROM lex) t WHERE lrk <= 20),
-         |e AS (SELECT vec_id AS doc_id, $duckV AS v FROM embeddings),
-         |qv AS (SELECT doc_id AS query_id, v AS qvec FROM e WHERE doc_id < 5),
+         |$duckEmb,
+         |qv AS (SELECT vec_id AS query_id, v AS qvec FROM e WHERE vec_id < 5),
          |sims AS (
-         |  SELECT query_id, e.doc_id,
+         |  SELECT query_id, e.vec_id AS doc_id,
          |    ${duckDot("qvec", "v")} / (sqrt(${duckDot("qvec", "qvec")}) * sqrt(${duckDot("v", "v")})) AS sim
-         |  FROM qv JOIN e ON e.doc_id <> qv.query_id),
+         |  FROM qv JOIN e ON e.vec_id <> qv.query_id),
          |vec_top AS MATERIALIZED (
          |  SELECT query_id, doc_id, vrk FROM (
          |    SELECT query_id, doc_id,

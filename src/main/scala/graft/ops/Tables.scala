@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,18 +39,28 @@ object Tables {
       parquet(spark, s"$sfDir/$name.parquet")
     }
 
-  /** A parquet read. When `path` is one file, its schema is the footer's,
-    * converted on the driver as Spark's inference converts it (inference
-    * runs a one-task job per read); directories and globs keep inference.
+  /** A parquet read whose schema is one data file's footer, converted on the
+    * driver as Spark's inference converts it (inference runs a one-task job
+    * per read, and without `mergeSchema` it also reads one footer). The file
+    * is `path` itself or, with `recursive`, the first data file under it in
+    * listing order (`_` and `.` names skipped), and the read then recurses
+    * too. Other directories, globs and data-less trees keep inference.
     */
-  private def parquet(spark: SparkSession, path: String): DataFrame = {
-    val p = new Path(path)
+  private[graft] def parquet(spark: SparkSession, path: String,
+                             recursive: Boolean = false): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
-    if (Try(p.getFileSystem(conf).getFileStatus(p).isFile).getOrElse(false)) {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      val footer = try new Footer(p, reader.getFooter) finally reader.close()
-      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
+    val fs = new Path(path).getFileSystem(conf)
+    def dataFile(st: FileStatus): Option[Path] =
+      if (st.isFile) Some(st.getPath)
+      else if (recursive) fs.listStatus(st.getPath).iterator
+        .filterNot(c => "_.".contains(c.getPath.getName.head)).flatMap(dataFile).nextOption()
+      else None
+    val read = spark.read.option("recursiveFileLookup", recursive)
+    Try(fs.getFileStatus(new Path(path))).toOption.flatMap(dataFile).fold(read.parquet(path)) { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val footer = try new Footer(f, reader.getFooter) finally reader.close()
+      read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(path)
-    } else spark.read.parquet(path)
+    }
   }
 }

@@ -9,9 +9,10 @@ import org.apache.spark.storage.StorageLevel
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** One emitted row: destination table + the row as a [[TaggedRow]], which
-  * keeps the bool/int/float/str tags the choice type system needs (see
-  * [[graft.core.JValue]]); or a schema marker row (see [[RelationalizeSpark.emit]]).
+/** One emitted row: destination table + a chunk of that table's rows as
+  * [[TaggedRow]]s, which keep the bool/int/float/str tags the choice type
+  * system needs (see [[graft.core.JValue]]); or a schema marker row (see
+  * [[RelationalizeSpark.emit]]).
   */
 final case class Emitted(table: String, payload: Array[Byte])
 
@@ -105,15 +106,17 @@ final case class RelationalizeResult(
 /** Distributed relationalize, Spark-first:
   *
   *   - '''pass 1''' ([[emit]]) — one narrow `mapPartitions` over the raw
-  *     documents emits `(table, taggedRow)` pairs and observes every row
+  *     documents emits `(table, chunk)` rows, each an LZ4 block of one
+  *     table's [[TaggedRow]]s, and observes every row
   *     into a per-partition choice schema as it is written; the only thing
   *     that reaches the driver is those per-table ''schemas'' (KB-sized marker
   *     rows), folded with the reference's own associative shard-merge
   *     (`relationalize/schema.py:259-302`) by [[collectSchemas]] — this
   *     holds at 100 TB: no data shuffle, driver state is only the schemas.
   *   - '''pass 2''' ([[toDataFrame]]) — per table, one filter on `table`, one
-  *     [[DecodeTaggedRow]] per row and a codegen'd routing projection into
-  *     the choice-split output columns: no text parse. Tables are
+  *     [[UnpackTaggedChunk]] per chunk, one [[DecodeTaggedRow]] per row and
+  *     a codegen'd routing projection into the choice-split output columns:
+  *     no text parse. Tables are
   *     either served from a cached emitted dataset (small/medium corpora) or
   *     from a single `partitionBy(table)` parquet materialization
   *     (large corpora / wide table fan-out), so N tables never cost N scans of
@@ -169,9 +172,17 @@ object RelationalizeSpark {
   /** Max distinct tables held in a partition's local schema map before the
     * accumulated schemas are flushed as marker rows and the map cleared.
     */
-  private val SchemaMapCap = 8192
+  private[relationalize] val SchemaMapCap = 8192
 
-  /** Pass 1: raw JSON lines -> emitted (table, flatRow) pairs. Each
+  /** Uncompressed row bytes a pass-1 task holds before it flushes every
+    * table's buffer as a chunk, whatever the table fan-out.
+    */
+  private[relationalize] val ChunkBudget = 1 << 20
+
+  /** Pass 1: raw JSON lines -> emitted (table, chunk) rows. A task appends
+    * each flat row to its table's buffer, and once it holds [[ChunkBudget]]
+    * bytes (and at partition end) flushes every buffer as one chunk, so a
+    * table's rows never share a cached row with another table's. Each
     * partition also observes every flat row into a local choice schema
     * ''before'' serialization (the reference's `on_object_write` fusion,
     * `relationalize.py:63`) and appends one [[SchemaMarker]]-prefixed row
@@ -191,21 +202,23 @@ object RelationalizeSpark {
     */
   def emit(ds: Dataset[String], name: String,
            options: RelationalizeOptions = RelationalizeOptions()): Dataset[Emitted] =
-    emit(ds, name, options, SchemaMapCap)
+    emit(ds, name, options, SchemaMapCap, ChunkBudget)
 
-  /** [[emit]] with an explicit schema-map cap (specs force flushes with it). */
+  /** [[emit]] with an explicit schema-map cap and chunk budget (specs force
+    * flushes with them).
+    */
   private[relationalize] def emit(ds: Dataset[String], name: String,
                                   options: RelationalizeOptions,
-                                  schemaMapCap: Int): Dataset[Emitted] = {
-    require(schemaMapCap > 0)
+                                  schemaMapCap: Int, chunkBudget: Int): Dataset[Emitted] = {
+    require(schemaMapCap > 0 && chunkBudget > 0)
     implicit val enc: Encoder[Emitted] = Encoders.product[Emitted]
     val key = docKeyFn(options)
     ds.mapPartitions { iter =>
       val pid = TaskContext.getPartitionId()
       var ordinal = -1L
-      val writer = new TaggedRow.Writer
+      val chunker = new TaggedRow.Chunker(chunkBudget)
       val localSchemas = scala.collection.mutable.Map.empty[String, (ChoiceSchema, Long)]
-      def flush(): Iterator[Emitted] = {
+      def flushSchemas(): Iterator[Emitted] = {
         val rows = localSchemas.toVector.map { case (t, (sch, n)) =>
           Emitted(s"$SchemaMarker$t", s"$n ${sch.serialize}".getBytes(UTF_8))
         }
@@ -218,14 +231,14 @@ object RelationalizeSpark {
           case (table, row) =>
             val (sch, n) = localSchemas.getOrElse(table, (ChoiceSchema.empty, 0L))
             localSchemas.update(table, (sch.observe(row), n + 1))
-            val data = Emitted(table, writer.write(row))
-            if (localSchemas.size >= schemaMapCap) Iterator.single(data) ++ flush()
-            else Iterator.single(data)
+            val chunks = chunker.append(table, row).map(Emitted.tupled)
+            if (localSchemas.size >= schemaMapCap) chunks ++ flushSchemas() else chunks
         }
       }
       // the trailing flatMap is only evaluated after dataRows is exhausted,
-      // so the final flush sees every remaining table
-      dataRows ++ Iterator.single(()).flatMap(_ => flush())
+      // so the final flush sees every remaining row and table
+      dataRows ++ Iterator.single(()).flatMap(_ =>
+        chunker.flush().map(Emitted.tupled) ++ flushSchemas())
     }
   }
 
@@ -252,7 +265,9 @@ object RelationalizeSpark {
 
   /** Pass-2: convert one table's emitted rows to a typed DataFrame.
     *
-    * Expression-only — no lambda decode. Each payload record carries its
+    * Expression-only — no lambda decode. The `table` filter keeps the
+    * table's chunks, [[UnpackTaggedChunk]] yields their rows, and each row
+    * record carries its
     * value's scalar tag (written in pass 1, where the tag was observed into
     * the schema anyway), so conversion is one [[DecodeTaggedRow]] with a
     * field per (column, tag) followed by a codegen'd routing projection: field
@@ -274,7 +289,7 @@ object RelationalizeSpark {
     import ColType._
     graft.functions.GraftFunctions.registerAll(emitted.sparkSession)
     val parsed = graft.functions.GraftFunctions.barrier(call_function("graft_decode_tagged",
-      col("payload"), lit(TaggedRow.fields(schema.columns.keys).json))).as("r")
+      col("row"), lit(TaggedRow.fields(schema.columns.keys).json))).as("r")
 
     def fld(k: String, tag: String): Column = col("r").getField(Json.taggedKey(k, tag))
     // guard `value` with raises on tags the schema does not admit for k
@@ -313,6 +328,7 @@ object RelationalizeSpark {
     }
     val byName = outputs.toMap
     emitted.filter(col("table") === table)
+      .select(call_function("graft_unpack_tagged", col("payload")))
       .select(parsed)
       .select(schema.outputColumns.map(n => byName(n).as(n)): _*)
   }
@@ -322,10 +338,18 @@ object RelationalizeSpark {
             options: RelationalizeOptions = RelationalizeOptions()): RelationalizeResult =
     apply(ds, name, options, s"relationalize $name")
 
-  /** [[apply]] with its schema collect labelled `<label>: schemas`. */
+  /** [[apply]] with its jobs labelled `<label>: materialize` (the
+    * [[RelationalizeOptions.materializePath]] write) and `<label>: schemas`.
+    */
   private[graft] def apply(ds: Dataset[String], name: String, options: RelationalizeOptions,
                            label: String): RelationalizeResult = {
     val spark = ds.sparkSession
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    def labelled[A](step: String)(body: => A): A = {
+      sc.setJobDescription(s"$label: $step")
+      try body finally sc.setJobDescription(callerDescription)
+    }
     val emitted: Dataset[Emitted] = options.materializePath match {
       case Some(path) =>
         val fresh = emit(ds, name, options)
@@ -335,7 +359,8 @@ object RelationalizeSpark {
               org.apache.spark.sql.functions.hash(col("payload")),
               lit(options.materializeFilesPerTable)))
           else fresh
-        toWrite.write.mode(SaveMode.Overwrite).partitionBy("table").parquet(path)
+        labelled("materialize")(
+          toWrite.write.mode(SaveMode.Overwrite).partitionBy("table").parquet(path))
         implicit val enc: Encoder[Emitted] = Encoders.product[Emitted]
         // explicit schema: an empty corpus writes no data files, and
         // schema inference on a data-file-less partitioned dir throws
@@ -347,15 +372,11 @@ object RelationalizeSpark {
       case None =>
         emit(ds, name, options).persist(StorageLevel.MEMORY_AND_DISK)
     }
-    val sc = spark.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"$label: schemas")
     // a failed schema collect must not leave the emit cached: no result
     // (and so no release()) exists yet
     val raw =
-      try collectMarkers(emitted)
+      try labelled("schemas")(collectMarkers(emitted))
       catch { case e: Throwable => emitted.unpersist(); throw e }
-      finally sc.setJobDescription(callerDescription)
     val schemas = raw.map { case (t, (s0, _)) =>
       var s = s0
       if (options.dropNullColumns) s = s.dropNullColumns._1

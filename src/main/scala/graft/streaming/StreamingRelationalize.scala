@@ -111,8 +111,9 @@ object StreamingRelationalize {
     val newStruct = to.toStructType
     val types = newStruct.fields.map(f => f.name -> f.dataType).toMap
     // recursive lookup: appended batches live in b<batchId> subdirectories
-    // (the replay-idempotence layout); the rewrite flattens them
-    val existing = spark.read.option("recursiveFileLookup", "true").parquet(path)
+    // (the replay-idempotence layout); the rewrite flattens them. Every file
+    // holds the one stored layout, so one footer gives the schema: no job.
+    val existing = graft.ops.Tables.parquet(spark, path, recursive = true)
     val present = existing.columns.toSet
     val exprs = to.outputBindings.map { case (out, k, tag) =>
       val source: Option[String] =

@@ -506,6 +506,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!rec.sqlExecutions.exists(_.startsWith("q_kcore: round ")), rec)
     // the fixpoint round's pairs are the result: no job after it
     assert(rec.jobs.last == rounds.last, rec)
+    // the edge phase: one job per shuffle, then one job that builds the
+    // cache and counts the nodes, all in one SQL execution
+    val edges = rec.jobs.filter(_.description == "q_kcore: edges")
+    assert(edges.size == 4 && edges.init.forall(_.shuffleBytes > 0), rec)
+    assert(edges.last.shuffleBytes == 0 && edges.forall(_.inSqlExecution), rec)
+    assert(rec.sqlExecutions.count(_ == "q_kcore: edges") == 1, rec)
   }
 
   test("Tables reads a one-file table with no Spark job and Spark's inferred schema") {

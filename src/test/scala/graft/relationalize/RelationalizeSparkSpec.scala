@@ -236,7 +236,8 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(res.rowCounts == Map("users" -> 3L, "users_enrollments" -> 3L, "users_tags" -> 3L))
     } finally res.release()
     val capped = RelationalizeSpark.collectMarkers(
-      RelationalizeSpark.emit(input, "users", RelationalizeOptions(), schemaMapCap = 1))
+      RelationalizeSpark.emit(input, "users", RelationalizeOptions(), schemaMapCap = 1,
+        chunkBudget = RelationalizeSpark.ChunkBudget))
     assert(capped.map { case (t, (_, n)) => t -> n } == res.rowCounts)
   }
 
@@ -252,6 +253,61 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.setJobDescription(null)
   }
 
+  test("the materializePath write runs as 'relationalize <name>: materialize' and restores the caller's label") {
+    val sc = spark.sparkContext
+    val tmp = Files.createTempDirectory("graft-mat-label").toString
+    sc.setJobDescription("caller")
+    try {
+      val labels = graft.ops.KcoreSpec.jobDescriptions(spark) {
+        RelationalizeSpark(ds(lmsDocs: _*), "users",
+          RelationalizeOptions(materializePath = Some(s"$tmp/emitted")))
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+      }
+      assert(labels.contains("relationalize users: materialize"), labels)
+      assert(labels.toSet ==
+        Set("relationalize users: materialize", "relationalize users: schemas"), labels)
+    } finally sc.setJobDescription(null)
+  }
+
+  test("an emit that flushes after every row yields the same tables, row by row in order") {
+    val docs = lmsDocs ++ (0 until 40).map(i =>
+      s"""{"user_id": "u$i", "n": $i, "enrollments": [{"course_id": "c$i"}, """ +
+        s"""{"course_id": "d$i", "timestamp": $i}], "tags": ["a$i", "b", null]}""")
+    val input = ds(docs: _*).repartition(3)
+    def emitted(budget: Int) = RelationalizeSpark.emit(input, "users", RelationalizeOptions(),
+      schemaMapCap = RelationalizeSpark.SchemaMapCap, chunkBudget = budget)
+    def tables(budget: Int): Map[String, Seq[org.apache.spark.sql.Row]] = {
+      val e = emitted(budget)
+      RelationalizeSpark.collectSchemas(e).map { case (t, s) =>
+        t -> RelationalizeSpark.toDataFrame(e, t, s).collect().toSeq
+      }
+    }
+    val perRow = tables(1)
+    assert(perRow.keySet == Set("users", "users_enrollments", "users_tags"))
+    assert(perRow == tables(RelationalizeSpark.ChunkBudget))
+    // a one-byte budget puts each row in a chunk of its own
+    val chunks = emitted(1).filter(!col("table").startsWith(RelationalizeSpark.SchemaMarker))
+    assert(chunks.count() == perRow.values.map(_.size).sum)
+  }
+
+  test("the cached emit of a repetitive corpus is at most half its TaggedRow bytes") {
+    val docs = (0 until 3000).map(i =>
+      s"""{"id": $i, "status": "shipped", "customer": {"name": "customer ${i % 50}", """ +
+        s""""tier": "gold"}, "items": [{"sku": "sku-${i % 100}", "qty": ${i % 5}, """ +
+        s""""price": 9.99}, {"sku": "sku-7", "qty": 1, "price": 19.5}]}""")
+    val input = ds(docs: _*)
+    val rowBytes = RelationalizeSpark.emit(input, "orders")
+      .filter(!col("table").startsWith(RelationalizeSpark.SchemaMarker))
+      .collect().flatMap(e => TaggedRow.unpack(e.payload)).map(_.length.toLong).sum
+    spark.catalog.clearCache()
+    val res = RelationalizeSpark(input, "orders")
+    try {
+      assert(res.rowCounts == Map("orders" -> 3000L, "orders_items" -> 6000L))
+      val cached = spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+      assert(cached > 0 && cached <= rowBytes / 2, s"cached $cached of $rowBytes row bytes")
+    } finally res.release()
+  }
+
   test("schema-map cap: extreme table fan-out with a tiny cap equals uncapped result") {
     // 120 docs, each fanning to distinct child tables -> ~360 distinct tables,
     // forced through a cap of 16 (mid-stream flushes every few documents)
@@ -260,7 +316,7 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"""{"id": $i, $arrays}"""
     }
     val cappedEmit = RelationalizeSpark.emit(ds(docs: _*), "fan",
-      RelationalizeOptions(), schemaMapCap = 16)
+      RelationalizeOptions(), schemaMapCap = 16, chunkBudget = RelationalizeSpark.ChunkBudget)
     val capped = RelationalizeSpark.collectSchemas(cappedEmit)
     val uncapped = RelationalizeSpark(ds(docs: _*), "fan")
     assert(capped.keySet == uncapped.schemas.keySet)

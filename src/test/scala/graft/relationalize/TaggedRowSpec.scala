@@ -10,7 +10,8 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The pass-1 -> pass-2 codec: [[TaggedRow.Writer]] bytes decoded by
-  * [[DecodeTaggedRow]], evaluated directly (no session).
+  * [[DecodeTaggedRow]], and the chunks of [[TaggedRow.Chunker]] unpacked by
+  * [[TaggedRow.unpack]], evaluated directly (no session).
   */
 class TaggedRowSpec extends AnyFunSuite {
 
@@ -129,5 +130,83 @@ class TaggedRowSpec extends AnyFunSuite {
     // one record: key "k" (length 1), then tag byte 9
     val e = intercept[IllegalStateException](decode(Array[Byte](1, 1, 'k', 9, 0), schema))
     assert(e.getMessage.contains("unknown tag byte 9"))
+  }
+
+  test("chunks round-trip their rows in order across a flush boundary") {
+    // rows under 128 bytes and under 16 KiB (a two-byte length prefix), and
+    // one over 16 KiB, whose prefix widens in place
+    val rows = Seq(Seq("a" -> JLong(1)), Seq.empty[(String, JValue)],
+      Seq("s" -> JString("x" * 200), "f" -> JDouble(0.5)), Seq("b" -> JBool(true)),
+      Seq("big" -> JString("é" * 9000), "n" -> JNull), Seq("z" -> JLong(-7)))
+    val writer = new TaggedRow.Writer
+    val (first, second) = rows.splitAt(3)
+    val chunks = Seq(first, second).map { part =>
+      val w = new TaggedRow.Writer
+      part.foreach(w.append)
+      w.chunk()
+    }
+    val unpacked = chunks.flatMap(TaggedRow.unpack)
+    assert(unpacked.map(_.toSeq) == rows.map(r => writer.write(r).toSeq))
+    unpacked.zip(rows).foreach { case (bytes, row) =>
+      assert(decode(bytes, fields(row.map(_._1))) == expected(row), row)
+    }
+    assert(TaggedRow.unpack(new TaggedRow.Writer().chunk()).isEmpty)
+  }
+
+  test("1,000 tables flush within the chunk budget, each table's rows in order") {
+    val budget = 1 << 20
+    val chunker = new TaggedRow.Chunker(budget)
+    def row(t: Int, i: Int) =
+      Seq("t" -> JLong(t), "i" -> JLong(i), "pad" -> JString("p" * (100 + (t + i) % 200)))
+    val got = scala.collection.mutable.Map.empty[String, Vector[Array[Byte]]]
+    def take(chunks: Iterator[(String, Array[Byte])]): Long = chunks.map { case (t, c) =>
+      val rows = TaggedRow.unpack(c).toVector
+      got(t) = got.getOrElse(t, Vector.empty) ++ rows
+      rows.map(_.length + 2L).sum
+    }.sum
+    var flushes = 0
+    for (i <- 0 until 40; t <- 0 until 1000) {
+      val flushed = take(chunker.append(s"t$t", row(t, i)))
+      // a flush empties every table's buffer at once, having held the budget
+      if (flushed > 0) { flushes += 1; assert(flushed >= budget && chunker.size == 0) }
+      assert(chunker.size < budget)
+    }
+    take(chunker.flush())
+    assert(flushes >= 5 && chunker.size == 0)
+    val writer = new TaggedRow.Writer
+    assert(got.keySet == (0 until 1000).map(t => s"t$t").toSet)
+    (0 until 1000).foreach { t =>
+      assert(got(s"t$t").map(_.toSeq) == (0 until 40).map(i => writer.write(row(t, i)).toSeq))
+    }
+  }
+
+  test("a truncated chunk or a corrupt LZ4 block raises") {
+    val w = new TaggedRow.Writer
+    (0 until 50).foreach(i => w.append(Seq("k" -> JString(s"value $i"), "n" -> JLong(i))))
+    val chunk = w.chunk()
+    def unpacks(c: Array[Byte]): String =
+      intercept[IllegalStateException](TaggedRow.unpack(c).foreach(_ => ())).getMessage
+    (0 until chunk.length).foreach { cut =>
+      assert(unpacks(chunk.take(cut)).contains("tagged chunk"), s"cut at $cut")
+    }
+    // not an LZ4 block: literal-length runs past the end
+    assert(unpacks(Array[Byte](0, 0, 0, 40) ++ Array.fill[Byte](12)(-1)).contains("corrupt"))
+    // a length header the block does not fill, and an impossible one
+    val header = java.nio.ByteBuffer.wrap(chunk).getInt
+    val longer = chunk.clone()
+    java.nio.ByteBuffer.wrap(longer).putInt(header + 1)
+    assert(unpacks(longer).contains("corrupt"))
+    java.nio.ByteBuffer.wrap(longer).putInt(-1)
+    assert(unpacks(longer).contains("corrupt"))
+    // a valid block whose last record claims more bytes than remain
+    val cut = new TaggedRow.Writer
+    cut.append(Seq("k" -> JString("abc")))
+    val rows = TaggedRow.unpack(cut.chunk()).next()
+    val broken = new Array[Byte](4 + 64)
+    val block = net.jpountz.lz4.LZ4Factory.fastestInstance().fastCompressor()
+    val raw = Array[Byte]((rows.length + 5 | 0x80).toByte, 0) ++ rows
+    java.nio.ByteBuffer.wrap(broken).putInt(raw.length)
+    val n = block.compress(raw, 0, raw.length, broken, 4)
+    assert(unpacks(broken.take(4 + n)).contains("truncated tagged chunk"))
   }
 }

@@ -165,6 +165,19 @@ class EvolvingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(labels.contains(("1", t, step)), (t, step))
   }
 
+  test("a migrating batch runs one migrate job per widened table: its rewrite, no inference") {
+    val out = Files.createTempDirectory("graft-migrate-jobs").resolve("out").toString
+    StreamingRelationalize.processEvolvingBatch(ds(batch1), 0L, "orders", out)
+    val labels = graft.ops.KcoreSpec.jobDescriptions(spark) {
+      StreamingRelationalize.processEvolvingBatch(ds(batch2), 1L, "orders", out)
+    }
+    // batch 1 widens the root and the child; the grandchild keeps its layout
+    for (t <- Seq("orders", "orders_items"))
+      assert(labels.count(_ == s"relationalize b1 $t: migrate") == 1, labels)
+    assert(!labels.contains("relationalize b1 orders_items_tags: migrate"), labels)
+    assertEqualsBatchRun(out, batch1 ++ batch2)
+  }
+
   test("a failing table write fails the batch after the other tables finish; a replay converges") {
     val out = Files.createTempDirectory("graft-fail").resolve("out")
     // a regular file where the grandchild table's directory must go
