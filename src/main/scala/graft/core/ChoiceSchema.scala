@@ -72,44 +72,33 @@ final case class ChoiceSchema(columns: VectorMap[String, ColType]) {
     out
   }
 
-  /** Final output column names: sorted; choice columns expanded per member
-    * (`schema.py:98-114`).
-    */
-  def outputColumns: Vector[String] =
-    columns.iterator.flatMap {
-      case (k, CChoice(ms)) => ms.filter(_ != "none").map(m => s"${k}_$m")
-      case (k, _) => Vector(k)
-    }.toVector.sorted
-
-  /** (output column, source column, member tag) triples, output-sorted —
-    * the structural map a sink migration needs to re-route data written
-    * under an older, narrower schema into this schema's layout.
+  /** (output column, source column, member tag) triples, output-sorted:
+    * choice columns expand per member (`schema.py:98-114`). The one owner
+    * of the output layout — pass 2's decode, the Spark schema, the DDL and
+    * a sink migration's re-routing all read it.
     */
   def outputBindings: Vector[(String, String, String)] =
     columns.iterator.flatMap {
-      case (k, ColType.CChoice(ms)) => ms.filter(_ != "none").map(m => (s"${k}_$m", k, m))
+      case (k, CChoice(ms)) => ms.filter(_ != "none").map(m => (s"${k}_$m", k, m))
       case (k, t) => Vector((k, k, t.repr))
     }.toVector.sortBy(_._1)
 
-  /** (output column -> base tag), unsorted helper for typing. */
-  private def outputTags: Map[String, String] =
-    columns.iterator.flatMap {
-      case (k, CChoice(ms)) => ms.filter(_ != "none").map(m => s"${k}_$m" -> m)
-      case (k, t) => Vector(k -> t.repr)
-    }.toMap
+  /** Final output column names, sorted. */
+  def outputColumns: Vector[String] = outputBindings.map(_._1)
+
+  /** Output column -> its base tag. */
+  def outputTags: Map[String, String] = outputBindings.map(b => b._1 -> b._3).toMap
 
   /** Spark schema of the converted output (sorted columns, all nullable). */
-  def toStructType: StructType = {
-    val tags = outputTags
-    StructType(outputColumns.map(c => StructField(c, ColType.sparkTypeOf(tags(c)), nullable = true)))
-  }
+  def toStructType: StructType = StructType(outputBindings.map { case (c, _, tag) =>
+    StructField(c, ColType.sparkTypeOf(tag), nullable = true)
+  })
 
   def generateDdl(table: String, schemaName: String = "public",
                   dialect: SqlDialect = PostgresDialect): String = {
-    val tags = outputTags
-    val cols = outputColumns.map { c =>
-      val sqlType = dialect.typeMapping.getOrElse(tags(c),
-        throw new IllegalStateException(s"no DDL mapping for type ${tags(c)} (column $c)"))
+    val cols = outputBindings.map { case (c, _, tag) =>
+      val sqlType = dialect.typeMapping.getOrElse(tag,
+        throw new IllegalStateException(s"no DDL mapping for type $tag (column $c)"))
       dialect.ddlColumn(c, sqlType)
     }
     // reference sorts the rendered column definitions (`schema.py:141`);

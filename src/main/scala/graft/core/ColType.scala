@@ -98,6 +98,21 @@ object ColType {
       else CChoice(ms.toVector.sorted)
   }
 
+  /** The value tags a column of type `t` accepts at convert time: its own,
+    * a choice's members, an int in a float column (widened) or a datetime
+    * one (epoch millis), a str in a datetime column (parsed) and a bool in
+    * a `none` column (its placeholder type). Any other tag raises, as the
+    * reference's convert does for an out-of-choice value
+    * (`relationalize/schema.py:49-52`).
+    */
+  def admits(t: ColType): Set[String] = t match {
+    case CChoice(ms) => ms.toSet
+    case CFloat => Set("float", "int")
+    case CDatetime => Set("str", "int")
+    case CNone => Set("bool")
+    case other => Set(other.repr)
+  }
+
   /** Spark type for a base tag (`sql_dialects.py:52-59` analog: the
     * all-null placeholder maps to boolean).
     */

@@ -108,17 +108,18 @@ object Json {
     sb.append('"')
   }
 
-  /** Separator in the field names `k<TagSep>tag` of pass 2's decoded struct
-    * ([[graft.relationalize.DecodeTaggedRow]]): one field per (column, tag),
-    * so pass 2 reads types structurally. Keys containing it are unsupported
-    * (compare the reference's `_` choice-suffix caveat, `schema.py:49-52`).
+  /** Separator in the tag-carrying keys `k<TagSep>tag` of
+    * [[writeTaggedRow]]. Keys containing it are unsupported (compare the
+    * reference's `_` choice-suffix caveat, `schema.py:49-52`).
     */
   val TagSep = '\u0000'
 
   def taggedKey(k: String, tag: String): String = s"$k$TagSep$tag"
 
   /** Serialize a flat row as JSON with tag-carrying keys (`k<TagSep>tag`):
-    * a readable twin of [[graft.relationalize.TaggedRow]], which pass 1 writes.
+    * a readable twin of [[graft.relationalize.TaggedRow]], which pass 1
+    * writes. Pass 2 does not read it; it stays as the JSON-writer baseline
+    * the benchmark's kernel probe times (`kernel.write_rows_per_s`).
     */
   def writeTaggedRow(row: Iterable[(String, JValue)]): String = write(row, tagged = true)
 

@@ -26,8 +26,11 @@ object GraftFunctions {
       exprs.lift(1).map(foldableString(_, "relationalize name")).getOrElse("t"))),
     "hash60" -> (exprs => Hash60(exprs.head)),
     "graft_barrier" -> (exprs => OptimizationBarrier(exprs.head)),
-    "graft_decode_tagged" -> (exprs => graft.relationalize.DecodeTaggedRow(exprs.head,
-      DataType.fromJson(foldableString(exprs(1), "graft_decode_tagged schema")).asInstanceOf[StructType])),
+    "graft_decode_tagged" -> { exprs =>
+      val schema = foldableString(exprs(1), "graft_decode_tagged schema")
+      graft.relationalize.DecodeTaggedRow(exprs.head, schema,
+        graft.core.ChoiceSchema.deserialize(schema).outputColumns)
+    },
     "graft_unpack_tagged" -> (exprs => graft.relationalize.UnpackTaggedChunk(exprs.head)),
     "vec_dot" -> (exprs => VecDot(exprs.head, exprs(1))),
     "graft_overlap" -> (exprs => ArrayOverlap(exprs.head, exprs(1))),
@@ -70,9 +73,9 @@ object GraftFunctions {
     // parse-schema pruning through the barrier (idempotent registration):
     // runs after the main operator-optimization batch, where ColumnPruning
     // has already narrowed consumer projections
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.PruneBarrieredDecode))
+    if (!spark.experimental.extraOptimizations.contains(graft.relationalize.PruneBarrieredDecode))
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PruneBarrieredDecode
+        spark.experimental.extraOptimizations :+ graft.relationalize.PruneBarrieredDecode
   }
 
   private def foldableString(e: Expression, what: String): String = e match {
@@ -123,16 +126,15 @@ object GraftFunctions {
   * never substitutes the wrapped expression across operator boundaries.
   *
   * Why it exists: an inner join on a column produced by an expensive
-  * expression (e.g. the payload decode in relationalize pass 2) makes Catalyst push
-  * `IsNotNull(col)` predicates down THROUGH the projection, substituting the
-  * full expression into the filter — the payload was then parsed up to 10
-  * times per row (once per guard branch in the filter plus once per output
-  * column), with the filter copies evaluated interpreted (a fresh Jackson
-  * parser + stream decoder per call). Wrapping the parse in a barrier keeps
-  * exactly one evaluation per row; the join's null filter happens above the
-  * projection on the cheap attribute instead. The barrier also hides the
-  * decode from column pruning; [[graft.plans.PruneBarrieredDecode]] restores
-  * it. Evaluation and codegen simply forward to the child.
+  * expression (e.g. the row decode in relationalize pass 2) makes Catalyst
+  * push `IsNotNull(col)` predicates down THROUGH the projection that reads
+  * the column, substituting the full expression into the filter — the
+  * payload was then parsed up to 10 times per row, with the filter copies
+  * evaluated interpreted. Wrapping the decode in a barrier keeps exactly one
+  * evaluation per row; the join's null filter happens above the projection
+  * on the cheap attribute instead. The barrier also hides the decode from
+  * column pruning; [[graft.relationalize.PruneBarrieredDecode]] restores it.
+  * Evaluation and codegen simply forward to the child.
   */
 case class OptimizationBarrier(child: Expression) extends UnaryExpression {
   override def dataType: DataType = child.dataType

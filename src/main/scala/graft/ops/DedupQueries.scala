@@ -1244,15 +1244,10 @@ object DedupQueries {
     * params) and replay as a local relation — bit-identical rows, no cached
     * partitions, the rest of the family broadcasts the statistic. Kernels
     * over arbitrary frames keep calling [[dedupSubstringFrom]] directly.
+    * Regenerating data under an already-extracted dir within one session
+    * needs [[DriverMemo.invalidateAll]].
     */
   private val substringMemo = new DriverMemo[(String, String, Int, Int, Int, Int)]
-
-  /** Drop memoized extractions — call after regenerating data under an
-    * already-extracted dir within one session (the
-    * [[SimilarityQueries.pcaChainInvalidate]] twin; [[DriverMemo.invalidateAll]]
-    * hits every family at once).
-    */
-  private[graft] def substringChainInvalidate(): Unit = substringMemo.invalidate()
 
   private def substringRunsCached(s: SparkSession, dir: String,
       corpus: String): DataFrame =

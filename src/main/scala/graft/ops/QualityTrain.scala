@@ -179,15 +179,10 @@ object QualityTrain {
     * catalog entries — memoized per (session, dir, solver) and replayed as
     * a local relation ([[DriverMemo]], the PCA-chain discipline; kernels
     * over arbitrary frames keep calling [[trainChainFrom]] directly).
+    * Regenerating data under a dir already trained on within the same
+    * session needs [[DriverMemo.invalidateAll]].
     */
   private val trainMemo = new DriverMemo[(String, String)]
-
-  /** Drop every memoized trained chain — call after regenerating data under
-    * a dir already trained on within the same session (the
-    * [[SimilarityQueries.pcaChainInvalidate]] twin; [[DriverMemo.invalidateAll]]
-    * hits every family at once).
-    */
-  private[graft] def trainChainInvalidate(): Unit = trainMemo.invalidate()
 
   private def trainChainCached(s: SparkSession, dir: String,
       solver: String = "gd"): DataFrame =

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.core.ColType
 import graft.relationalize.RelationalizeSpark
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Harness queries exercising the relationalize transform end-to-end against
@@ -30,6 +30,16 @@ object RelationalizeQueries {
     Lifecycle.releasedBy(df)(res.release())
   }
 
+  /** One JSON document per lineitem order: `{"orderkey", "items": [{"l_linenumber",
+    * "l_quantity"}, ...]}`, items sorted.
+    */
+  private def orderDocs(spark: SparkSession, dir: String): Dataset[String] =
+    Tables(spark, dir, "lineitem")
+      .groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_list(struct(col("l_linenumber"), col("l_quantity")))).as("items"))
+      .select(to_json(struct(col("l_orderkey").as("orderkey"), col("items"))).as("doc"))
+      .as(Encoders.STRING)
+
   /** Lazy plan + the result handle, for plan inspection and for
     * [[relExplode]]'s materialize-then-release wrapper.
     */
@@ -38,13 +48,7 @@ object RelationalizeQueries {
       options: graft.relationalize.RelationalizeOptions =
         graft.relationalize.RelationalizeOptions())
       : (DataFrame, graft.relationalize.RelationalizeResult) = {
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-    val docs = li.groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_list(struct(col("l_linenumber"), col("l_quantity")))).as("items"))
-      .select(to_json(struct(col("l_orderkey").as("orderkey"), col("items"))).as("doc"))
-      .as(Encoders.STRING)
-    val res = RelationalizeSpark(docs, "orders", options)
+    val res = RelationalizeSpark(orderDocs(spark, dir), "orders", options)
     val root = res("orders").select(col("orderkey"), col("items"))
     val child = res("orders_items")
     val joined = root.join(child, root("items") === child("items__rid_"))
@@ -89,13 +93,7 @@ object RelationalizeQueries {
     * pipeline; no new shuffles beyond the joins.
     */
   def relDeleteCascade(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-    val docs = li.groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_list(struct(col("l_linenumber"), col("l_quantity")))).as("items"))
-      .select(to_json(struct(col("l_orderkey").as("orderkey"), col("items"))).as("doc"))
-      .as(Encoders.STRING)
-    val res = RelationalizeSpark(docs, "orders")
+    val res = RelationalizeSpark(orderDocs(spark, dir), "orders")
     val root = res("orders").select(col("orderkey"), col("items"))
     val child = res("orders_items")
     // the cascade: the deletion set's RIDs drive the child-side anti join
@@ -180,7 +178,7 @@ object RelationalizeQueries {
     def outTags(docs: DataFrame): Map[String, String] =
       RelationalizeSpark.collectSchemas(
         RelationalizeSpark.emit(docs.as(Encoders.STRING), "events"))("events")
-        .outputBindings.map(b => b._1 -> b._3).toMap
+        .outputTags
     val (oldDocs, newDocs) = driftDocs(spark, dir)
     val old = outTags(oldDocs)
     val nw = outTags(newDocs)

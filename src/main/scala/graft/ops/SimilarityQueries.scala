@@ -285,11 +285,10 @@ object SimilarityQueries {
     * nested-broadcast cascade for bit-identical rows. The first consumer
     * pays the full chain (Bench archives it as the `cold` number); replays
     * are a local relation — statistics-bearing, trivially broadcastable,
-    * nothing cached (CacheLifecycleSpec's contract).
+    * nothing cached (CacheLifecycleSpec's contract). Regenerating data
+    * under the same dir within one session needs [[DriverMemo.invalidateAll]].
     */
   private val indexMemo = new DriverMemo[(String, String)]
-
-  private[graft] def indexMemoInvalidate(): Unit = indexMemo.invalidate()
 
   /** The IVF index's per-vector projection (vec_id, v, q, nv): widened,
     * quantized and norm, once per vector behind a persist barrier.
@@ -1185,11 +1184,9 @@ object SimilarityQueries {
     * broadcast the statistic. The cache key holds the session reference, so
     * a new session (or new data under a NEW dir) recomputes; regenerating
     * data under the SAME dir inside one session is the one case that must
-    * call [[pcaChainInvalidate]].
+    * call [[DriverMemo.invalidateAll]].
     */
   private val pcaChainMemo = new DriverMemo[(String, Int, Int)]
-
-  private[graft] def pcaChainInvalidate(): Unit = pcaChainMemo.invalidate()
 
   /** The memoized chain for catalog entries (kernels over arbitrary frames
     * keep calling [[pcaChainFrom]] directly).

@@ -3,7 +3,7 @@ package graft.relationalize
 import graft.core._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql._
-import org.apache.spark.sql.functions.{call_function, coalesce, col, lit, raise_error, timestamp_millis, when}
+import org.apache.spark.sql.functions.{call_function, col, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -114,9 +114,8 @@ final case class RelationalizeResult(
   *     (`relationalize/schema.py:259-302`) by [[collectSchemas]] — this
   *     holds at 100 TB: no data shuffle, driver state is only the schemas.
   *   - '''pass 2''' ([[toDataFrame]]) — per table, one filter on `table`, one
-  *     [[UnpackTaggedChunk]] per chunk, one [[DecodeTaggedRow]] per row and
-  *     a codegen'd routing projection into the choice-split output columns:
-  *     no text parse. Tables are
+  *     [[UnpackTaggedChunk]] per chunk and one [[DecodeTaggedRow]] per row
+  *     straight into the choice-split output columns: no text parse. Tables are
   *     either served from a cached emitted dataset (small/medium corpora) or
   *     from a single `partitionBy(table)` parquet materialization
   *     (large corpora / wide table fan-out), so N tables never cost N scans of
@@ -266,71 +265,28 @@ object RelationalizeSpark {
   /** Pass-2: convert one table's emitted rows to a typed DataFrame.
     *
     * Expression-only — no lambda decode. The `table` filter keeps the
-    * table's chunks, [[UnpackTaggedChunk]] yields their rows, and each row
-    * record carries its
-    * value's scalar tag (written in pass 1, where the tag was observed into
-    * the schema anyway), so conversion is one [[DecodeTaggedRow]] with a
-    * field per (column, tag) followed by a codegen'd routing projection: field
-    * `k<sep>int` feeds output `k_int` of a choice column, `k<sep>int` IS
-    * output `k` of an int column, etc. Fields for tags a schema column does
-    * not admit exist only to be detected: a non-null there raises, matching
-    * the reference's convert-time error on out-of-choice values
-    * (`relationalize/schema.py:49-52`) — that is what makes frozen-schema
+    * table's chunks, [[UnpackTaggedChunk]] yields their rows, and one
+    * [[DecodeTaggedRow]] per row routes each record by the scalar tag pass 1
+    * wrote (where the tag was observed into the schema anyway) straight
+    * into the table's output columns, raising on a tag its column does not
+    * admit — the reference's convert-time error on out-of-choice values
+    * (`relationalize/schema.py:49-52`), which is what makes frozen-schema
     * streaming fail loudly instead of silently nulling new choice members.
     *
-    * Scale: the decode is one pass over the payload bytes and the projection
-    * runs inside whole-stage codegen. The decode sits behind an
-    * [[graft.functions.OptimizationBarrier]]: joins on converted columns would
-    * otherwise push `IsNotNull` predicates through this projection and
-    * re-evaluate it per guard branch per row (10 parses per payload, 25x wall
-    * time on the explode round-trip, measured with `from_json`).
+    * Scale: the decode is one pass over the payload bytes. It sits behind
+    * an [[graft.functions.OptimizationBarrier]]: joins on converted columns
+    * would otherwise push `IsNotNull` predicates through the column
+    * projection and re-evaluate the decode per guard per row (10 parses per
+    * payload, 25x wall time on the explode round-trip, measured with
+    * `from_json`). [[PruneBarrieredDecode]] narrows it to the columns read.
     */
   def toDataFrame(emitted: Dataset[Emitted], table: String, schema: ChoiceSchema): DataFrame = {
-    import ColType._
     graft.functions.GraftFunctions.registerAll(emitted.sparkSession)
-    val parsed = graft.functions.GraftFunctions.barrier(call_function("graft_decode_tagged",
-      col("row"), lit(TaggedRow.fields(schema.columns.keys).json))).as("r")
-
-    def fld(k: String, tag: String): Column = col("r").getField(Json.taggedKey(k, tag))
-    // guard `value` with raises on tags the schema does not admit for k
-    def guarded(k: String, ct: ColType, badTags: Seq[String], value: Column): Column =
-      badTags.foldRight(value) { (t, v) =>
-        when(fld(k, t).isNotNull, raise_error(
-          lit(s"value type $t for column $k not admitted by schema type ${ct.repr}"))).otherwise(v)
-      }
-
-    val outputs: Seq[(String, Column)] = schema.columns.toSeq.flatMap { case (k, ct) =>
-      ct match {
-        case CChoice(ms) =>
-          val members = ms.filter(_ != "none")
-          val badTags = TaggedRow.Tags.filterNot(members.contains)
-          members.zipWithIndex.map { case (m, i) =>
-            val v = fld(k, m)
-            s"${k}_$m" -> (if (i == 0) guarded(k, ct, badTags, v) else v)
-          }
-        case CFloat => // an int observed under a float-typed frozen schema widens
-          Seq(k -> guarded(k, ct, Seq("bool", "str"),
-            coalesce(fld(k, "float"), fld(k, "int").cast(DoubleType))))
-        case CNone => // all-null column reads as its boolean placeholder type
-          Seq(k -> guarded(k, ct, Seq("int", "float", "str"), fld(k, "bool")))
-        case CDatetime => // only reachable via deserialized schemas (types.py:21)
-          val s = fld(k, "str")
-          val cast = s.cast(TimestampType)
-          Seq(k -> guarded(k, ct, Seq("bool", "float"), coalesce(
-            when(s.isNotNull && cast.isNull,
-              raise_error(lit(s"unparseable timestamp in column $k"))).otherwise(cast),
-            timestamp_millis(fld(k, "int")))))
-        case t @ (CBool | CInt | CStr) =>
-          Seq(k -> guarded(k, ct, TaggedRow.Tags.filterNot(_ == t.repr), fld(k, t.repr)))
-        case CUnsupported(tag) =>
-          throw new IllegalStateException(s"no Spark type for unsupported:$tag (column $k)")
-      }
-    }
-    val byName = outputs.toMap
     emitted.filter(col("table") === table)
       .select(call_function("graft_unpack_tagged", col("payload")))
-      .select(parsed)
-      .select(schema.outputColumns.map(n => byName(n).as(n)): _*)
+      .select(graft.functions.GraftFunctions.barrier(
+        call_function("graft_decode_tagged", col("row"), lit(schema.serialize))).as("r"))
+      .select(schema.outputColumns.map(c => col("r").getField(c).as(c)): _*)
   }
 
   /** Full pipeline over a collection of raw JSON documents. */

@@ -4,14 +4,19 @@ import graft.core._
 import net.jpountz.lz4.{LZ4Exception, LZ4Factory}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow,
-  UnaryExpression}
+import graft.functions.OptimizationBarrier
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId, Expression,
+  Generator, GenericInternalRow, GetStructField, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.{BufferUnderflowException, ByteBuffer}
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.mutable
 
 /** The binary tagged row: `varint(record count)`, then one record per
   * non-null value in row order — `varint(key length)`, the key's UTF-8
@@ -30,24 +35,12 @@ object TaggedRow {
   private val compressor = LZ4Factory.fastestInstance().fastCompressor()
   private val decompressor = LZ4Factory.fastestInstance().safeDecompressor()
 
-  /** One `k<TagSep>tag` field per (key, tag): pass 2's full field list. */
-  def fields(keys: Iterable[String]): StructType = StructType(keys.toSeq.flatMap(k => Tags
-    .zip(Seq(BooleanType, LongType, DoubleType, StringType))
-    .map { case (t, dt) => StructField(Json.taggedKey(k, t), dt) }))
-
   private def kept(v: JValue): Boolean =
     v match { case JNull => false; case JDouble(d) => !d.isNaN && !d.isInfinite; case _ => true }
 
   /** Encodes rows into one reused, growing buffer. */
   final class Writer {
     private var buf = ByteBuffer.allocate(256)
-
-    /** One row's bytes, in a fresh array. */
-    def write(row: Iterable[(String, JValue)]): Array[Byte] = {
-      buf.clear()
-      encode(row)
-      java.util.Arrays.copyOf(buf.array, buf.position)
-    }
 
     /** Appends `row` as `varint(length) ++ row`, encoded in place, and
       * returns its size: the length fills two reserved bytes (a padded varint
@@ -181,20 +174,41 @@ case class UnpackTaggedChunk(child: Expression)
     copy(child = newChild)
 }
 
-/** Pass-2 decoder: a [[TaggedRow]] to a struct of the `k<TagSep>tag` fields
-  * in `schema`; records without a field are skipped (so a pruned field list
-  * decodes only what it names). Malformed payloads and unknown tags raise.
+/** Pass-2 decoder, the reference's `convert_object`
+  * (`relationalize/schema.py:49-52`): a [[TaggedRow]] to the struct of the
+  * `kept` output columns of the serialized [[ChoiceSchema]] `schema`. A
+  * choice member goes to `<k>_<tag>`, an int widens in a float column, a
+  * `none` column reads bool, and a datetime column takes a string (parsed
+  * as `Cast` does, in the session time zone) or epoch millis. A tag its
+  * column does not admit ([[ColType.admits]]) raises for any key with a kept
+  * column; other keys are skipped. Malformed payloads and unknown tags raise.
   */
-case class DecodeTaggedRow(child: Expression, schema: StructType) extends UnaryExpression {
-  override def dataType: DataType = schema
+case class DecodeTaggedRow(child: Expression, schema: String, kept: Seq[String],
+                           timeZoneId: Option[String] = None)
+    extends UnaryExpression with TimeZoneAwareExpression {
+  @transient private lazy val choice = ChoiceSchema.deserialize(schema)
 
-  /** (key bytes ++ tag byte) -> ordinal; a record's key and tag are adjacent */
-  @transient private lazy val slots: java.util.HashMap[UTF8String, Integer] = {
-    val m = new java.util.HashMap[UTF8String, Integer]()
-    schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
-      val sep = f.lastIndexOf(Json.TagSep)
-      val tag = TaggedRow.Tags.indexOf(f.substring(sep + 1)).toByte
-      m.put(UTF8String.fromBytes(f.substring(0, sep).getBytes(UTF_8) :+ tag), i)
+  @transient override lazy val dataType: StructType = {
+    val all = choice.toStructType
+    StructType(kept.map(all(_)))
+  }
+
+  /** key bytes -> (column type, per tag byte: the output ordinal, -1 when
+    * not kept, -2 when not admitted), for the keys with a kept column
+    */
+  @transient private lazy val slots: java.util.HashMap[UTF8String, (ColType, Array[Int])] = {
+    val ordinal = kept.zipWithIndex.toMap
+    val m = new java.util.HashMap[UTF8String, (ColType, Array[Int])]()
+    choice.outputBindings.filter(b => ordinal.contains(b._1)).groupBy(_._2).foreach { case (k, bs) =>
+      val ct = choice.columns(k)
+      // a choice routes each member tag to its own column; any other type has one
+      def column(t: String) = ct match {
+        case _: ColType.CChoice => bs.find(_._3 == t)
+        case _ => bs.headOption
+      }
+      m.put(UTF8String.fromString(k), ct -> TaggedRow.Tags.toArray.map { t =>
+        if (!ColType.admits(ct)(t)) -2 else column(t).fold(-1)(b => ordinal(b._1))
+      })
     }
     m
   }
@@ -203,20 +217,35 @@ case class DecodeTaggedRow(child: Expression, schema: StructType) extends UnaryE
     val b = ByteBuffer.wrap(input.asInstanceOf[Array[Byte]])
     def varint(): Long = TaggedRow.readVarint(b)
     def skip(len: Int): Int = { b.position(b.position + len); b.position - len }
-    val out = new Array[Any](schema.length)
+    val out = new Array[Any](kept.length)
     try {
       var records = varint()
       while (records > 0) {
         val len = varint().toInt
-        val slot = slots.get(UTF8String.fromBytes(b.array, skip(len + 1), len + 1))
-        val v = b.get(b.position - 1) match {
+        val key = UTF8String.fromBytes(b.array, skip(len), len)
+        val tag = b.get()
+        val v = tag match {
           case 0 => b.get() != 0
           case 1 => val z = varint(); (z >>> 1) ^ -(z & 1)
           case 2 => b.getDouble
           case 3 => val n = varint().toInt; UTF8String.fromBytes(b.array, skip(n), n) // a view, no copy
           case t => throw new IllegalStateException(s"unknown tag byte $t in tagged payload")
         }
-        if (slot != null) out(slot) = v
+        val slot = slots.get(key)
+        if (slot != null) slot._2(tag) match {
+          case -2 => throw new IllegalStateException(s"value type ${TaggedRow.Tags(tag)} for " +
+            s"column $key not admitted by schema type ${slot._1.repr}")
+          case -1 =>
+          case o => out(o) = slot._1 match {
+            case ColType.CFloat => v match { case l: Long => l.toDouble; case _ => v }
+            case ColType.CDatetime => v match {
+              case l: Long => Math.multiplyExact(l, 1000L)
+              case s: UTF8String => DateTimeUtils.stringToTimestamp(s, zoneId).getOrElse(
+                throw new IllegalStateException(s"unparseable timestamp in column $key"))
+            }
+            case _ => v
+          }
+        }
         records -= 1
       }
     } catch { case e @ (_: BufferUnderflowException | _: IllegalArgumentException) =>
@@ -231,7 +260,46 @@ case class DecodeTaggedRow(child: Expression, schema: StructType) extends UnaryE
     defineCodeGen(ctx, ev, c => s"(InternalRow) $self.nullSafeEval($c)")
   }
 
+  override def withTimeZone(timeZoneId: String): DecodeTaggedRow = copy(timeZoneId = Some(timeZoneId))
   override def prettyName: String = "graft_decode_tagged"
   override protected def withNewChildInternal(newChild: Expression): DecodeTaggedRow =
     copy(child = newChild)
+}
+
+/** Restores column pruning of the pass-2 decode, which the
+  * [[graft.functions.OptimizationBarrier]] around it hides from Spark's own:
+  * for each `r = barrier(`[[DecodeTaggedRow]]`)` alias, every `r.<field>`
+  * read anywhere in the plan narrows the decode's kept columns to those
+  * read, and each read is re-pointed at the narrowed struct. An alias used
+  * whole (or not at all) is left as it is. Idempotent; runs after
+  * ColumnPruning and CollapseProject have narrowed the consumers
+  * ([[graft.functions.GraftFunctions.registerAll]], [[graft.GraftExtensions]]).
+  */
+object PruneBarrieredDecode extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val decodes = plan.flatMap(_.expressions.flatMap(_.collect {
+      case a @ Alias(OptimizationBarrier(d: DecodeTaggedRow), _) => a.exprId -> d
+    })).toMap
+    if (decodes.isEmpty) return plan
+    val reads = mutable.Map.empty[ExprId, Set[String]].withDefaultValue(Set.empty)
+    val whole = mutable.Set.empty[ExprId]
+    def scan(e: Expression): Unit = e match {
+      case GetStructField(a: AttributeReference, ord, _) if decodes.contains(a.exprId) =>
+        reads(a.exprId) += decodes(a.exprId).kept(ord)
+      case a: AttributeReference if decodes.contains(a.exprId) => whole += a.exprId
+      case other => other.children.foreach(scan)
+    }
+    plan.foreach(_.expressions.foreach(scan))
+    val narrowed = decodes.collect { case (id, d) if !whole(id) && reads(id).nonEmpty &&
+        reads(id).size < d.kept.size => id -> d.copy(kept = d.kept.filter(reads(id)))
+    }
+    if (narrowed.isEmpty) plan
+    else plan.transformAllExpressions {
+      case a @ Alias(b: OptimizationBarrier, _) if narrowed.contains(a.exprId) =>
+        a.withNewChildren(Seq(b.withNewChildren(Seq(narrowed(a.exprId)))))
+      case GetStructField(a: AttributeReference, ord, name) if narrowed.contains(a.exprId) =>
+        val d = narrowed(a.exprId)
+        GetStructField(a.withDataType(d.dataType), d.kept.indexOf(decodes(a.exprId).kept(ord)), name)
+    }
+  }
 }

@@ -68,6 +68,6 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("parse-pruning optimizer rule is installed") {
     val rules = spark.sessionState.optimizer.batches.flatMap(_.rules)
-    assert(rules.contains(graft.plans.PruneBarrieredDecode))
+    assert(rules.contains(graft.relationalize.PruneBarrieredDecode))
   }
 }

@@ -345,12 +345,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       n.expressions.flatMap(_.collect { case d: DecodeTaggedRow => d })
     }.flatten
     assert(parses.size == 1, s"expected 1 parse, got ${parses.size}")
-    val fields = parses.head.schema.fieldNames
-    // 2 columns x 4 tag fields (value + 3 raise-on-bad-tag guards), not 200
-    assert(fields.length == 8, s"parse schema not pruned: ${fields.length} fields")
-    assert(fields.forall(f => f.startsWith(s"c3${graft.core.Json.TagSep}") ||
-        f.startsWith(s"c7${graft.core.Json.TagSep}")),
-      s"unexpected fields: ${fields.mkString(",")}")
+    // the 2 selected output columns, not 50
+    val fields = parses.head.kept
+    assert(fields.length == 2, s"parse schema not pruned: ${fields.length} fields")
+    assert(fields.toSet == Set("c3", "c7"), s"unexpected fields: ${fields.mkString(",")}")
     // values survive pruning
     val rows = narrow.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.toSeq == Seq((3L, 7L), (3L, 7L)))
@@ -358,7 +356,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val full = wide.queryExecution.optimizedPlan.collect { case n =>
       n.expressions.flatMap(_.collect { case d: DecodeTaggedRow => d })
     }.flatten
-    assert(full.head.schema.length == 200)
+    assert(full.head.kept.length == 50)
   }
 
   test("tfidf and decontamination broadcast their bounded sides") {
@@ -432,11 +430,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("window consumers get parse pruning transitively (below-window projection)") {
-    // The rule never treats Window itself as a consumer (see the retype
-    // hazard below), and does not need to: Spark's ExtractWindowExpressions
-    // always materializes a window's inputs in a Project BELOW the Window,
-    // and that projection IS a pruning consumer over the defining project.
-    // A window over 2 of 50 columns must decode 8 tag fields, not 200.
+    // Spark's ExtractWindowExpressions materializes a window's inputs in a
+    // Project below the Window, whose reads the rule sees like any other.
+    // A window over 2 of 50 columns must decode 2 output columns, not 50.
     import org.apache.spark.sql.Encoders
     import graft.relationalize.DecodeTaggedRow
     import org.apache.spark.sql.expressions.{Window => W}
@@ -450,32 +446,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       n.expressions.flatMap(_.collect { case d: DecodeTaggedRow => d })
     }.flatten
     assert(parses.size == 1, s"expected 1 parse, got ${parses.size}")
-    val fields = parses.head.schema.fieldNames
-    assert(fields.length == 8,
+    val fields = parses.head.kept
+    assert(fields.length == 2,
       s"window consumer parse not pruned: ${fields.length} fields")
-    assert(fields.forall(f => f.startsWith(s"c3${graft.core.Json.TagSep}") ||
-        f.startsWith(s"c7${graft.core.Json.TagSep}")),
-      s"unexpected fields: ${fields.mkString(",")}")
+    assert(fields.toSet == Set("c3", "c7"), s"unexpected fields: ${fields.mkString(",")}")
     // and values survive
     val rows = out.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(rows == Seq((7L, 1), (7L, 2)), s"pruned window corrupted values: $rows")
-  }
-
-  test("window over a converted table keeps correct values (no pruning through Window)") {
-    // Window.output passes the parse alias through to ancestors; pruning on
-    // the window's own uses would retype the struct under an ancestor
-    // Project's stale GetStructField ordinals. The rule must leave Window
-    // consumers alone — pinned here on VALUES, the thing that broke.
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.expressions.{Window => W}
-    import org.apache.spark.sql.functions.{col, row_number}
-    val doc = (0 until 50).map(i => s""""c$i": $i""").mkString("{", ", ", "}")
-    val docs = spark.createDataset(Seq(doc, doc))(Encoders.STRING)
-    val wide = graft.relationalize.RelationalizeSpark(docs, "w")("w")
-    val out = wide.select(col("c7"),
-      row_number().over(W.orderBy(col("c3"), col("c7"))).as("rk"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    assert(out == Seq((7L, 1), (7L, 2)), s"window consumer corrupted values: $out")
   }
 
   test("joining converted tables does not multiply the payload parse") {

@@ -402,7 +402,7 @@ class RelationalizeSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // batch-mode toDataFrame with frozen schema: a str value for an int column throws
     val emitted = RelationalizeSpark.emit(ds("""{"v": "oops"}"""), "t")
     val df = RelationalizeSpark.toDataFrame(emitted, "t", schemas("t"))
-    // raise_error surfaces as a SparkThrowable (USER_RAISED_EXCEPTION)
+    // the decoder's raise fails the task; the job surfaces it as a SparkThrowable
     val e = intercept[Throwable](df.collect())
     assert(e.isInstanceOf[org.apache.spark.SparkThrowable])
     assert(e.getMessage.contains("not admitted"))

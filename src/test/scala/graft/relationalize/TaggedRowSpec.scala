@@ -2,16 +2,19 @@ package graft.relationalize
 
 import graft.core._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, MillisToTimestamp}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The pass-1 -> pass-2 codec: [[TaggedRow.Writer]] bytes decoded by
-  * [[DecodeTaggedRow]], and the chunks of [[TaggedRow.Chunker]] unpacked by
-  * [[TaggedRow.unpack]], evaluated directly (no session).
+import scala.collection.immutable.VectorMap
+
+/** The pass-1 -> pass-2 codec: [[TaggedRow.Writer]] rows decoded by
+  * [[DecodeTaggedRow]] into a schema's output columns, and the chunks of
+  * [[TaggedRow.Chunker]] unpacked by [[TaggedRow.unpack]], evaluated
+  * directly (no session).
   */
 class TaggedRowSpec extends AnyFunSuite {
 
@@ -23,13 +26,22 @@ class TaggedRowSpec extends AnyFunSuite {
     }
   }
 
-  private def fields(keys: Seq[String]): StructType = TaggedRow.fields(keys.distinct)
+  /** One row's bytes, through the path pass 1 runs: append, chunk, unpack. */
+  private def bytes(row: Seq[(String, JValue)]): Array[Byte] = {
+    val w = new TaggedRow.Writer
+    w.append(row)
+    TaggedRow.unpack(w.chunk()).next()
+  }
 
-  /** Decoded non-null fields; doubles compared by their bits (-0.0 != 0.0). */
-  private def decode(payload: Array[Byte], schema: StructType): Map[String, Any] = {
-    val r = DecodeTaggedRow(BoundReference(0, BinaryType, nullable = false), schema)
-      .eval(InternalRow(payload)).asInstanceOf[InternalRow]
-    schema.fields.zipWithIndex.collect { case (f, i) if !r.isNullAt(i) =>
+  /** Decoded non-null output columns; doubles compared by their bits
+    * (-0.0 != 0.0).
+    */
+  private def decode(payload: Array[Byte], schema: ChoiceSchema, kept: Seq[String],
+                     tz: String = "UTC"): Map[String, Any] = {
+    val d = DecodeTaggedRow(BoundReference(0, BinaryType, nullable = false), schema.serialize,
+      kept, Some(tz))
+    val r = d.eval(InternalRow(payload)).asInstanceOf[InternalRow]
+    d.dataType.fields.zipWithIndex.collect { case (f, i) if !r.isNullAt(i) =>
       f.name -> (r.get(i, f.dataType) match {
         case u: UTF8String => u.toString
         case d: Double => java.lang.Double.doubleToRawLongBits(d)
@@ -38,18 +50,23 @@ class TaggedRowSpec extends AnyFunSuite {
     }.toMap
   }
 
-  /** What `decode` must return for `row` under the full field list. */
-  private def expected(row: Seq[(String, JValue)]): Map[String, Any] = row.collect {
-    case (k, JBool(b)) => Json.taggedKey(k, "bool") -> b
-    case (k, JLong(l)) => Json.taggedKey(k, "int") -> l
-    case (k, JDouble(d)) if !d.isNaN && !d.isInfinite =>
-      Json.taggedKey(k, "float") -> java.lang.Double.doubleToRawLongBits(d)
-    case (k, JString(s)) => Json.taggedKey(k, "str") -> s
-  }.toMap
+  private def decode(payload: Array[Byte], schema: ChoiceSchema): Map[String, Any] =
+    decode(payload, schema, schema.outputColumns)
+
+  /** What `decode` must return for `row`: the reference's convert, minus
+    * the values the writer scrubs (null, NaN, ±Infinity).
+    */
+  private def expected(schema: ChoiceSchema, row: Seq[(String, JValue)]): Map[String, Any] =
+    schema.convert(row).toSeq.collect {
+      case (k, JBool(b)) => k -> b
+      case (k, JLong(l)) => k -> l
+      case (k, JDouble(d)) if !d.isNaN && !d.isInfinite => k -> java.lang.Double.doubleToRawLongBits(d)
+      case (k, JString(s)) => k -> s
+    }.toMap
 
   private def roundTrip(row: Seq[(String, JValue)]): Unit = {
-    val payload = new TaggedRow.Writer().write(row)
-    assert(decode(payload, fields(row.map(_._1))) == expected(row), row)
+    val schema = ChoiceSchema.empty.observe(row)
+    assert(decode(bytes(row), schema) == expected(schema, row), row)
   }
 
   test("integer extremes and zigzag boundaries round-trip") {
@@ -64,26 +81,23 @@ class TaggedRowSpec extends AnyFunSuite {
       "sub" -> JDouble(java.lang.Double.MIN_VALUE), "max" -> JDouble(Double.MaxValue),
       "third" -> JDouble(1.0 / 3))
     roundTrip(row)
-    val got = decode(new TaggedRow.Writer().write(row), fields(row.map(_._1)))
-    assert(got(Json.taggedKey("negzero", "float")) == java.lang.Double.doubleToRawLongBits(-0.0))
-    assert(got(Json.taggedKey("sum", "float")) ==
-      java.lang.Double.doubleToRawLongBits(0.30000000000000004))
+    val got = decode(bytes(row), ChoiceSchema.empty.observe(row))
+    assert(got("negzero") == java.lang.Double.doubleToRawLongBits(-0.0))
+    assert(got("sum") == java.lang.Double.doubleToRawLongBits(0.30000000000000004))
   }
 
   test("NaN, Infinity and null write no record and read as null") {
     val row = Seq("nan" -> JDouble(Double.NaN), "pinf" -> JDouble(Double.PositiveInfinity),
       "ninf" -> JDouble(Double.NegativeInfinity), "null" -> JNull, "kept" -> JLong(1))
-    val payload = new TaggedRow.Writer().write(row)
-    assert(decode(payload, fields(row.map(_._1))) == Map(Json.taggedKey("kept", "int") -> 1L))
-    assert(new TaggedRow.Writer().write(row.take(4)).sameElements(Array[Byte](0)))
+    assert(decode(bytes(row), ChoiceSchema.empty.observe(row)) == Map("kept" -> 1L))
+    assert(bytes(row.take(4)).sameElements(Array[Byte](0)))
   }
 
   test("an integer beyond Long range stays a str value") {
     val row = Json.parseRow("""{"big": 123456789012345678901234567890, "small": 5}""").toSeq
     assert(row.head._2 == JString("123456789012345678901234567890"))
-    val got = decode(new TaggedRow.Writer().write(row), fields(row.map(_._1)))
-    assert(got == Map(Json.taggedKey("big", "str") -> "123456789012345678901234567890",
-      Json.taggedKey("small", "int") -> 5L))
+    val got = decode(bytes(row), ChoiceSchema.empty.observe(row))
+    assert(got == Map("big" -> "123456789012345678901234567890", "small" -> 5L))
   }
 
   test("empty, unicode, surrogate-pair and control-character keys and values") {
@@ -93,34 +107,66 @@ class TaggedRowSpec extends AnyFunSuite {
   }
 
   test("random rows round-trip, and one writer serves many rows") {
-    val genKey = Gen.oneOf(Gen.alphaNumStr, Gen.const("unié中"), Gen.const("tab\there"),
-      Gen.const("😀"))
+    // a small key pool makes keys meet several value types: choice columns
+    val genKey = Gen.oneOf(Gen.alphaNumStr, Gen.const("a"), Gen.const("b"), Gen.const("unié中"),
+      Gen.const("tab\there"), Gen.const("😀"))
     val genVal: Gen[JValue] = Gen.oneOf(
       Gen.const(JNull), Gen.oneOf(true, false).map(JBool.apply),
       Gen.chooseNum(Long.MinValue, Long.MaxValue).map(JLong.apply),
       Gen.chooseNum(Double.MinValue, Double.MaxValue).map(JDouble.apply),
       Gen.oneOf(Double.NaN, Double.NegativeInfinity, -0.0).map(JDouble.apply),
       Gen.alphaStr.map(JString.apply), Gen.asciiStr.map(JString.apply))
+    val genRow = Gen.listOf(Gen.zip(genKey, genVal)).map(_.toMap.toSeq) // distinct keys
     val writer = new TaggedRow.Writer
-    forAll(Gen.listOf(Gen.zip(genKey, genVal))) { kvs =>
-      val row = kvs.toMap.toSeq // flat rows have distinct keys
-      assert(decode(writer.write(row), fields(row.map(_._1))) == expected(row), row)
+    forAll(Gen.zip(genRow, Gen.listOfN(3, genRow))) { case (row, others) =>
+      val schema = others.foldLeft(ChoiceSchema.empty.observe(row))(_.observe(_))
+      writer.append(row)
+      assert(decode(bytes(row), schema) == expected(schema, row), row)
     }
+    assert(TaggedRow.unpack(writer.chunk()).length == 300)
   }
 
   test("a pruned field list decodes only the fields it names") {
     val row = Seq("a" -> JLong(1), "b" -> JString("x"), "c" -> JDouble(2.5), "d" -> JBool(true))
-    val pruned = StructType(Seq(StructField(Json.taggedKey("b", "str"), StringType),
-      StructField(Json.taggedKey("c", "int"), LongType),
-      StructField(Json.taggedKey("d", "bool"), BooleanType)))
-    val got = decode(new TaggedRow.Writer().write(row), pruned)
-    assert(got == Map(Json.taggedKey("b", "str") -> "x", Json.taggedKey("d", "bool") -> true))
+    val got = decode(bytes(row), ChoiceSchema.empty.observe(row), Seq("b", "d"))
+    assert(got == Map("b" -> "x", "d" -> true))
+  }
+
+  test("a choice column with one member kept: another member reads null, a foreign tag raises") {
+    val schema = ChoiceSchema(VectorMap("v" -> ColType.CChoice(Vector("int", "str")),
+      "w" -> ColType.CInt))
+    val kept = Seq("v_str")
+    assert(decode(bytes(Seq("v" -> JString("x"))), schema, kept) == Map("v_str" -> "x"))
+    assert(decode(bytes(Seq("v" -> JLong(1))), schema, kept) == Map.empty)
+    val e = intercept[IllegalStateException](decode(bytes(Seq("v" -> JBool(true))), schema, kept))
+    assert(e.getMessage.contains("value type bool for column v not admitted"), e.getMessage)
+    intercept[IllegalStateException](schema.convert(Seq("v" -> JBool(true))))
+    // a key without a kept column is skipped, whatever its tag
+    assert(decode(bytes(Seq("w" -> JString("s"))), schema, kept) == Map.empty)
+  }
+
+  test("a frozen datetime column reads a string as cast does and an int as epoch millis") {
+    val schema = ChoiceSchema(VectorMap("ts" -> ColType.CDatetime, "f" -> ColType.CFloat,
+      "n" -> ColType.CNone))
+    val tz = "America/New_York"
+    def read(row: (String, JValue)*): Map[String, Any] = decode(bytes(row), schema, schema.outputColumns, tz)
+    val text = "2024-03-10 01:30:00"
+    assert(read("ts" -> JString(text)) == Map("ts" ->
+      Cast(Literal(text), TimestampType, Some(tz)).eval()))
+    assert(read("ts" -> JLong(1700000000123L)) == Map("ts" ->
+      MillisToTimestamp(Literal(1700000000123L)).eval()))
+    val bad = intercept[IllegalStateException](read("ts" -> JString("not a time")))
+    assert(bad.getMessage.contains("unparseable timestamp in column ts"))
+    intercept[IllegalStateException](read("ts" -> JBool(true)))
+    // an int widens in a float column; a none column reads bool
+    assert(read("f" -> JLong(3), "n" -> JBool(true)) ==
+      Map("f" -> java.lang.Double.doubleToRawLongBits(3.0), "n" -> true))
   }
 
   test("a truncated or overlong payload and an unknown tag byte raise") {
     val row = Seq("k" -> JString("value"), "n" -> JLong(300), "f" -> JDouble(1.5))
-    val payload = new TaggedRow.Writer().write(row)
-    val schema = fields(row.map(_._1))
+    val payload = bytes(row)
+    val schema = ChoiceSchema.empty.observe(row)
     (0 until payload.length).foreach { cut =>
       val e = intercept[IllegalStateException](decode(payload.take(cut), schema))
       assert(e.getMessage.contains("truncated"), s"cut at $cut: ${e.getMessage}")
@@ -138,7 +184,6 @@ class TaggedRowSpec extends AnyFunSuite {
     val rows = Seq(Seq("a" -> JLong(1)), Seq.empty[(String, JValue)],
       Seq("s" -> JString("x" * 200), "f" -> JDouble(0.5)), Seq("b" -> JBool(true)),
       Seq("big" -> JString("é" * 9000), "n" -> JNull), Seq("z" -> JLong(-7)))
-    val writer = new TaggedRow.Writer
     val (first, second) = rows.splitAt(3)
     val chunks = Seq(first, second).map { part =>
       val w = new TaggedRow.Writer
@@ -146,9 +191,10 @@ class TaggedRowSpec extends AnyFunSuite {
       w.chunk()
     }
     val unpacked = chunks.flatMap(TaggedRow.unpack)
-    assert(unpacked.map(_.toSeq) == rows.map(r => writer.write(r).toSeq))
-    unpacked.zip(rows).foreach { case (bytes, row) =>
-      assert(decode(bytes, fields(row.map(_._1))) == expected(row), row)
+    assert(unpacked.map(_.toSeq) == rows.map(r => bytes(r).toSeq))
+    unpacked.zip(rows).foreach { case (payload, row) =>
+      val schema = ChoiceSchema.empty.observe(row)
+      assert(decode(payload, schema) == expected(schema, row), row)
     }
     assert(TaggedRow.unpack(new TaggedRow.Writer().chunk()).isEmpty)
   }
@@ -173,10 +219,9 @@ class TaggedRowSpec extends AnyFunSuite {
     }
     take(chunker.flush())
     assert(flushes >= 5 && chunker.size == 0)
-    val writer = new TaggedRow.Writer
     assert(got.keySet == (0 until 1000).map(t => s"t$t").toSet)
     (0 until 1000).foreach { t =>
-      assert(got(s"t$t").map(_.toSeq) == (0 until 40).map(i => writer.write(row(t, i)).toSeq))
+      assert(got(s"t$t").map(_.toSeq) == (0 until 40).map(i => bytes(row(t, i)).toSeq))
     }
   }
 
