@@ -109,12 +109,11 @@ object Bench {
     "mm_resize_real",
     // round 10: the filtered-search recall monitor and the rich-arm jaccard
     // measurement (linear true pairs — the NON-output-bound PPJoin number).
-    // text_bpe_learn_rich stays out: 256 sequential argmax rounds are
-    // round-count-bound and corpus-size-INDEPENDENT (~40 s at any sf — a
-    // vocabulary property, measured and recorded in ROADMAP), so the
-    // headline would measure the same constant 5x. stream_* entries stay
-    // out too: they time the gate staging harness (write + availableNow
-    // drain), not an operator.
+    // text_bpe_learn_rich stays out: it has text_bpe_learn's shape (one
+    // corpus aggregation, then a driver merge loop over a vocab capped at
+    // 2048 words), so it would time nothing text_bpe_learn does not.
+    // stream_* entries stay out too: they time the gate staging harness
+    // (write + availableNow drain), not an operator.
     "ann_filtered_recall", "dedup_jaccard_rich", "dedup_jaccard_rich_stats",
     "ann_filtered_ivf", "ann_filtered_ivf_recall",
     // round 11: the content-keyed rid round-trip and the filtered IVF-PQ

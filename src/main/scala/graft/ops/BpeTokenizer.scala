@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Subword (BPE-style) tokenization, on-engine and oracle-twinned — the
   * upgrade from the `(length+3) div 4` token heuristic the curation entries
@@ -15,16 +16,15 @@ import org.apache.spark.sql.functions._
   *
   *  - LEARN ([[learnFrom]]): start from characters; each round counts every
   *    adjacent symbol pair (weighted by word frequency), picks the most
-  *    frequent (ties: lexicographically smallest "x y" key), records it,
-  *    and merges ALL its occurrences in every word. Same-symbol pairs
+  *    frequent (ties: smallest "x y" key in UTF-8 byte order), records
+  *    it, and merges ALL its occurrences in every word. Same-symbol pairs
   *    (x = x) are excluded: with x != y, occurrences cannot overlap, so
   *    "merge all occurrences" is a single data-parallel expression instead
   *    of a sequential left-to-right fold — the restriction that keeps both
-  *    engines bit-identical. Loop control is driver-side but carries only a
-  *    1-row statistic per round (the chosen pair — the CC/changed-flag
-  *    discipline); the corpus is touched once (the vocab aggregation) and
-  *    every round runs on the VOCAB frame, which is bounded by distinct
-  *    words, not corpus size.
+  *    engines bit-identical. The corpus is touched once, by the vocab
+  *    aggregation in Spark; its result is bounded by distinct words, not
+  *    corpus size, so it is collected once and the rounds run as a plain
+  *    driver loop over it (no Spark job per round).
   *  - APPLY ([[applyWords]]): GPT-2-style — repeatedly find the
   *    lowest-ranked merge whose pair is present and merge all its
   *    occurrences, up to [[ApplySteps]] rounds (each round strictly shrinks
@@ -34,12 +34,13 @@ import org.apache.spark.sql.functions._
   *    word frame and joined back, so tokenization cost scales with the
   *    vocabulary, not the corpus.
   *
-  * Scale shape: learning = one corpus aggregation + N vocab-frame rounds;
-  * application = one distinct + one equi-join + one aggregation over the
-  * corpus, everything else vocab-sized. The per-step expressions sit behind
-  * `graft_barrier` so CollapseProject cannot inline the splice expression
-  * (which references its input ~7 times) into an exponential textual tree —
-  * the PCA chain discipline.
+  * Scale shape: learning = one corpus aggregation + N driver-side rounds
+  * over the collected vocab; application = one distinct + one equi-join +
+  * one aggregation over the corpus, everything else vocab-sized. The
+  * application steps' expressions sit behind `graft_barrier` so
+  * CollapseProject cannot inline the splice expression (which references
+  * its input ~7 times) into an exponential textual tree — the PCA chain
+  * discipline.
   */
 object BpeTokenizer {
 
@@ -47,8 +48,8 @@ object BpeTokenizer {
     * 64 is where this corpus's gate entry sits: the synthetic `documents`
     * vocabulary is 31 distinct words (max length 8), and greedy BPE
     * EXHAUSTS it at 89 merges — there is no 256-merge table to learn here.
-    * The architecture is round-count-agnostic (each round costs one
-    * vocab-frame aggregation + a 1-row argmax, and the loop exits on
+    * The Spark work is round-count-agnostic (one corpus aggregation; each
+    * round is a driver pass over the collected vocab, and the loop exits on
     * exhaustion), so a production corpus dials `nMerges` to 10⁴–10⁵
     * directly; `Round9Spec` pins the exhaustion behavior by requesting 256
     * and asserting termination + greedy-prefix stability vs this table.
@@ -62,13 +63,6 @@ object BpeTokenizer {
     * regardless of merge-table size.
     */
   val ApplySteps = 8
-
-  /** Checkpoint the learn chain every this many rounds — bounds both the
-    * stacked-projection plan depth the per-round argmax re-analyzes and the
-    * RDD task-serialization recursion (which overflows the stack near 60
-    * chained wrappers). One vocab-sized materialization per window.
-    */
-  private val TruncateEvery = 6
 
   /** The pinned merge table consumed by [[tokens]] and [[TokenCounter.Bpe]]:
     * the [[learnFrom]] output on the sf0.01 `documents` corpus (round-9
@@ -160,87 +154,63 @@ object BpeTokenizer {
     f.selectExpr("w", "CAST(size(ss) AS INT) AS n_sub")
   }
 
-  /** Learn [[NMerges]] merges from any frame with a text column: vocab
-    * aggregation once over the corpus, then N rounds of (pair count, argmax,
-    * merge) on the vocab frame. Returns (rank INT, pair STRING, n BIGINT).
+  /** Learn [[NMerges]] merges from any frame with a text column: the vocab
+    * aggregation runs once over the corpus in Spark, and the rounds (pair
+    * count, argmax, merge) run in [[mergeRounds]] over the collected vocab.
+    * Returns (rank INT, pair STRING, n BIGINT).
     */
   def learnFrom(docs: DataFrame, nMerges: Int = NMerges,
                 alphabet: String = charsSql): DataFrame = {
     require(nMerges >= 1)
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.registerAll(spark)
-    import org.apache.spark.storage.StorageLevel
     val toks = Tokenize.Whitespace.sql("text")
     // the corpus aggregation is map-side parallel (partial counts combine
-    // before the shuffle); the RESULTING state is vocabulary-bounded — KBs
-    // to MBs at any corpus scale — so it lives on ONE partition: every
-    // learning round is then a single-task chain + a 1-map-task argmax
-    // shuffle instead of 32 near-empty tasks x nMerges rounds (the
-    // round-count, not the corpus, dominates learn cost)
+    // before the shuffle); its result is vocabulary-bounded (KBs to MBs at
+    // any corpus scale), so one collect hands it to the merge loop
     val vocab = docs.selectExpr(s"explode($toks) AS w")
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .selectExpr("w", "cnt", s"$alphabet AS ss")
-      .coalesce(1)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Materialize the corpus aggregation (the only corpus-sized work) while
-    // AQE is still on, then run the merge loop with AQE OFF: every round is
-    // 1-2 micro-stages over the single-partition vocabulary-bounded state,
-    // and AQE's per-stage re-planning + materialization barriers are pure
-    // driver latency there — measured as the dominant cost of the loop
-    // (task time ~1.3 s vs ~8 s wall at sf0.1; round count is a vocabulary
-    // property, so this overhead does NOT amortize with corpus scale).
-    // The override lives in a CLONED session (same SparkContext, same
-    // cached blocks, separate SQLConf), not a toggle on the caller's shared
-    // session conf — a concurrent query on the same session would otherwise
-    // silently run with AQE off for the loop's duration (round-12 advice).
-    vocab.count()
-    val learner = spark.newSession()
-    learner.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.functions.GraftFunctions.registerAll(learner)
-    // the state chain needs TWO growth bounds for large merge tables:
-    // plan-side, the barriered splice projections stack one per round (the
-    // argmax would re-analyze r projections at round r); RDD-side, every
-    // wrapper deepens task-serialization recursion until it overflows the
-    // stack (~60 rounds). A checkpoint every [[TruncateEvery]] rounds cuts
-    // BOTH lineages at the cost of one vocab-sized materialization —
-    // between truncation points the chain stays lazy (each argmax recomputes
-    // at most TruncateEvery splices over the vocab frame).
-    // the loop's state frame is rebuilt in the learner session from the
-    // materialized RDD (shared block store — no recompute): the whole merge
-    // loop plans and executes under the learner's AQE-off conf
-    var state: DataFrame = learner.createDataFrame(vocab.rdd, vocab.schema)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-    var exhausted = false
-    try {
-    for (r <- 1 to nMerges if !exhausted) {
-      // the 1-row argmax is the round's only driver-side data (loop-control
-      // statistic, like the doubling loops' changed flag)
-      val best = state
-        .selectExpr("cnt",
-          "explode(CASE WHEN size(ss) < 2 THEN CAST(array() AS ARRAY<STRUCT<x: STRING, y: STRING>>) " +
-            "ELSE transform(sequence(1, size(ss) - 1), " +
-            "i -> struct(element_at(ss, i) AS x, element_at(ss, i + 1) AS y)) END) AS p")
-        .filter("p.x <> p.y")
-        .groupBy(col("p.x").as("x"), col("p.y").as("y"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, concat(col("x"), lit(" "), col("y")).asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (bx, by, n) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((r, s"$bx $by", n))
-        state = state.selectExpr("w", "cnt",
-          s"graft_barrier(${spliceSql("ss", sq(bx), sq(by))}) AS ss")
-        if (r % TruncateEvery == 0) state = Lifecycle.released(state)
-      }
-    }
-    } finally {
-      vocab.unpersist()
-    }
+      .selectExpr("cnt", s"$alphabet AS ss")
+      .collect().map(r => (r.getLong(0), r.getSeq[String](1).toArray))
     import spark.implicits._
-    merges.toSeq.toDF("rank", "pair", "n").selectExpr(
+    mergeRounds(vocab, nMerges).toDF("rank", "pair", "n").selectExpr(
       "CAST(rank AS INT) AS rank", "pair", "CAST(n AS BIGINT) AS n")
   }
+
+  /** Up to `nMerges` greedy rounds over `(cnt, ss)` words, stopping when no
+    * pair is left. A round counts every adjacent `x != y` pair weighted by
+    * `cnt`, takes the highest count (ties: the smallest "x y" key in UTF-8
+    * byte order, which is Spark's and DuckDB's string order; `String`'s
+    * UTF-16 `compareTo` differs above U+FFFF), and merges it by
+    * [[spliceSql]]'s per-index rule.
+    */
+  private def mergeRounds(vocab: Array[(Long, Array[String])],
+                          nMerges: Int): Seq[(Int, String, Long)] = {
+    var words = vocab
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
+    var exhausted = false
+    for (r <- 1 to nMerges if !exhausted) {
+      val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((cnt, ss) <- words; i <- 0 until ss.length - 1 if ss(i) != ss(i + 1))
+        pairs((ss(i), ss(i + 1))) = pairs.getOrElse((ss(i), ss(i + 1)), 0L) + cnt
+      if (pairs.isEmpty) exhausted = true
+      else {
+        val n = pairs.valuesIterator.max
+        val (bx, by) = pairs.iterator.collect { case (p, `n`) => p }
+          .minBy { case (x, y) => UTF8String.fromString(s"$x $y") }
+        merges += ((r, s"$bx $by", n))
+        words = words.map { case (cnt, ss) => (cnt, splice(ss, bx, by)) }
+      }
+    }
+    merges.toSeq
+  }
+
+  /** [[spliceSql]] on a driver-held word. */
+  private def splice(ss: Array[String], bx: String, by: String): Array[String] =
+    ss.indices.flatMap { i =>
+      if (i + 1 < ss.length && ss(i) == bx && ss(i + 1) == by) Some(bx + by)
+      else if (i > 0 && ss(i - 1) == bx && ss(i) == by) None
+      else Some(ss(i))
+    }.toArray
 
   /** Catalog entry: learn the merge table from `documents`. */
   def learn(s: SparkSession, dir: String): DataFrame =
@@ -485,8 +455,8 @@ object BpeTokenizer {
     * 31-word documents corpus exhausts at 89 — [[learnFrom]]'s exhaustion
     * pin). On [[graft.ops.TextQueries.richCorpus]]'s ~2048-word hex
     * dictionary the rank-256 pair still counts in the hundreds, so every
-    * round does real frequency work — the vocabulary-scaled measurement
-    * production tokenizers (10^4-10^5 merges) are shaped like.
+    * round does real frequency work over a ~2048-word vocab — the
+    * vocabulary-scaled shape of production tokenizers (10^4-10^5 merges).
     */
   val RichMerges = 256
 

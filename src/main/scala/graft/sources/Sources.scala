@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
 import org.apache.hadoop.mapred.{InputSplit, JobConf}
@@ -222,8 +222,9 @@ object Sinks {
     arranged.write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", targetRecordsPerFile)
       .parquet(path)
-    val files = new java.io.File(path).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
+    val dest = new Path(path)
+    val files = dest.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+      .listStatus(dest).count(_.getPath.getName.endsWith(".parquet"))
     (rows, files.toLong)
   }
 

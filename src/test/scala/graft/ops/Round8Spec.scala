@@ -157,6 +157,17 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == expected, s"learned:\n$got\nexpected:\n$expected")
   }
 
+  test("BPE learn matches the sequential reference on the rich arm") {
+    // the top count ties between pairs sharing a left symbol ("0 6" and
+    // "0 9" at rank 35 on sf0.01), which the constructed corpus never does
+    val docs = TextQueries.richCorpus(spark, "/root/testdata/sf0.01")
+    val words = docs.select("text").collect().flatMap(_.getString(0).split(" "))
+    val vocab = words.groupBy(identity).view.mapValues(_.length.toLong).toMap
+    val got = BpeTokenizer.learnFrom(docs, BpeTokenizer.RichMerges).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+    assert(got == BpeRef.learn(vocab, BpeTokenizer.RichMerges))
+  }
+
   test("BPE apply with the learned table matches the reference per word (learn->apply loop)") {
     import spark.implicits._
     val docs = Seq((1L, "the cat sat on the mat"), (2L, "the bat and the cat"),

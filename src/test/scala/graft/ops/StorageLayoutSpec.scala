@@ -165,6 +165,13 @@ class StorageLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // contents survive bit-exactly (same multiset of rows)
     assert(src.exceptAll(out).isEmpty && out.exceptAll(src).isEmpty)
+    // a URI destination: the written files are counted through its FileSystem
+    val uriDir = new java.io.File(Files.createTempDirectory("graft-compact-uri").toFile, "events")
+    val (uriRows, uriFiles) = graft.sources.Sinks.compactParquet(
+      src, uriDir.toURI.toString, targetRecordsPerFile = 500L)
+    assert(uriRows == rows)
+    assert(uriFiles == uriDir.listFiles().count(_.getName.endsWith(".parquet")) && uriFiles > 0,
+      s"$uriFiles files reported for ${uriDir.toURI}")
   }
 
   test("range-clustered write produces disjoint per-file key ranges") {
