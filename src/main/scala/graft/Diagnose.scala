@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -7,7 +8,9 @@ import scala.collection.mutable
   * then wall, summed task run/cpu time and task count per Spark job, in
   * submission order — the "which of this query's ~N jobs is the expensive
   * one" question Bench's per-query totals cannot answer. The printed times
-  * exclude the plan printing. Diagnostic only.
+  * exclude the plan printing; each run also prints how many classes the
+  * code generator compiled (0 on a warm run means every generated class
+  * was a cache hit). Diagnostic only.
   *
   * `sbt "runMain graft.Diagnose <name> [sfDir]"`
   */
@@ -66,6 +69,7 @@ object Diagnose {
     for (run <- 0 to 1) {
       spark.catalog.clearCache()
       prof.reset()
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val df = catalog(name)(spark, sfDir)
       val built = System.nanoTime() - t0
@@ -79,7 +83,8 @@ object Diagnose {
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val dt = (built + System.nanoTime() - t1) / 1e9
-      println(f"=== run $run: $name $dt%.2f s ===")
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+      println(f"=== run $run: $name $dt%.2f s, $compiled classes compiled ===")
     }
     // listener bus is async — give trailing events a moment
     Thread.sleep(500)

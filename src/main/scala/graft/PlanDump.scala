@@ -47,12 +47,8 @@ object PlanDump {
           .selectExpr("doc_id", "CAST(text AS BINARY) AS media"))._1),
       "mm_frame_dedup" -> (() => ops.MultimodalQueries.frameDedupPlan(s, dir)._1),
       "q_pagerank_round" -> { () =>
-        val (edgesDeg, hinted) = I.pagerankPrepare(g, I.coOccurrence(s, dir, "y != src"))
-        I.pagerankRound(edgesDeg, g.current, hinted)
-      },
-      "q_pagerank_directed_round" -> { () =>
-        val (edgesDeg, hinted) = I.pagerankDirectedPrepare(g, I.coOccurrence(s, dir, "y > src"))
-        I.pagerankDirectedRound(edgesDeg, g.current, hinted)
+        val (graph, dm) = I.pagerankPrepare(g, I.coOccurrence(s, dir, "y != src"))
+        I.pagerankRound(graph, g.current, dm)
       },
       "emb_dup_clusters_propagate" -> (() => ccRound._1),
       "emb_dup_clusters_double" -> (() => ccRound._2),

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Every loop here, and connected components in [[DedupQueries]], steps its
   * state through one [[Lifecycle.Generations]]: persist the next
-  * generation, run the round's one materializing count, release the
+  * generation, run the round's one materializing check, release the
   * predecessor, and re-wrap the frame from the materialized RDD on the
   * kernel's truncation cadence (every round for pagerank and k-core; every
   * [[JumpCheckpointInterval]] rounds here, whose self-join embeds the
@@ -158,13 +158,16 @@ object IterativeQueries {
       .agg(count(lit(1)).as("n_parts"), max(col("depth")).as("max_depth"),
         sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("subtree_price"))
 
-  /** Fixed-point iteration count for [[pagerank]] — enough rounds for the
-    * rank ordering to stabilize on the test graph while keeping the oracle's
-    * unrolled CTE chain small.
+  /** Round caps of [[pagerank]] and [[pagerankDirected]]: each oracle
+    * unrolls exactly this many rounds; the kernel may exit earlier at the
+    * EXACT integer fixpoint (once a round moves no rank, every later round
+    * is a no-op — the q_kcore proof shape, sound because the arithmetic is
+    * pure fixed-point integer).
     */
   private val PagerankIters = 10
+  private val PagerankDirectedIters = 12
 
-  /** Rank scale for [[pagerank]]'s fixed-point arithmetic: ranks live in
+  /** Rank scale of the PageRank fixed-point arithmetic: ranks live in
     * [0, 10^12] as BIGINTs, so every sum is exact and order-independent —
     * float PageRank can never hash-match across engines (sum order differs),
     * integer PageRank matches bit-for-bit.
@@ -176,27 +179,24 @@ object IterativeQueries {
     * iterative-centrality workload a warehouse cannot express at all
     * (recursive CTEs forbid aggregation in the recursive arm; the reference
     * delegates even plain recursion to the downstream warehouse, see
-    * `sql_dialects.py`). Damping 0.85, [[PagerankIters]] synchronous rounds,
-    * all arithmetic in scaled-BIGINT fixed point ([[PagerankScale]]) with
-    * floor division on non-negative values — Spark `div` and DuckDB `//`
-    * agree exactly, so the DuckDB oracle (the same rounds unrolled as
-    * MATERIALIZED CTEs) hash-matches bit-for-bit. The co-occurrence edge set
-    * is symmetric, so every node has out-degree ≥ 1 — no dangling-mass
-    * redistribution term needed.
-    *
-    * Scale shape: the edge frame (with its source's out-degree attached) is
-    * shuffled onto `src` ONCE and persisted; each round is then one join
-    * that reuses that partitioning (only the rank vector — one long per
-    * node, orders of magnitude smaller than the edges — shuffles) plus one
-    * partial-aggregated groupBy on `dst`. The graph-wide constants (node
-    * count, teleport base) ride along as a broadcast 1-row frame, never a
-    * driver scalar. Per-order edge fan-out is quadratic only in the order's
-    * line count (bounded ≤ 7 in TPC-H shapes).
+    * `sql_dialects.py`). Damping 0.85, at most [[PagerankIters]] synchronous
+    * rounds of [[pagerankFrom]]. The edge set is symmetric, so no node is a
+    * sink and the dangling mass is always 0.
     */
   def pagerank(s: SparkSession, dir: String): DataFrame =
-    pagerankFrom(coOccurrence(s, dir, "y != src"))
+    pagerankFrom(s, coOccurrence(s, dir, "y != src"), "q_pagerank", PagerankIters)._1
 
-  /** The part co-occurrence edges of the pagerank kernels: every (src, dst)
+  /** PageRank on a genuinely DIRECTED graph: the co-occurrence pairs
+    * oriented low-key → high-key, so nodes that only ever appear as the
+    * higher endpoint have out-degree 0 — real dangling sinks, whose mass
+    * [[pagerankFrom]] hands back to every node each round. At most
+    * [[PagerankDirectedIters]] rounds.
+    */
+  def pagerankDirected(s: SparkSession, dir: String): DataFrame =
+    pagerankFrom(s, coOccurrence(s, dir, "y > src"), "q_pagerank_directed",
+      PagerankDirectedIters)._1
+
+  /** The part co-occurrence edges of the pagerank entries: every (src, dst)
     * pair of parts in one order that `keep` (a predicate over `src` and the
     * other part `y`) admits. Per-order pair expansion via ONE groupBy + a
     * DOUBLE explode instead of a self-join: the fact table is read and
@@ -217,216 +217,140 @@ object IterativeQueries {
       .select(col("src"), explode(expr(s"filter(ps, y -> $keep)")).as("dst"))
       .distinct()
 
-  /** [[pagerank]]'s kernel over an arbitrary (src, dst) edge frame. The
-    * edge set must contain every node as a source (symmetric edges satisfy
-    * this) — PageRank without dangling-mass redistribution. Every
-    * generation is materialized and re-wrapped (the directed kernel's
-    * shape, adopted in round 10): the per-round rank vector is node-count
-    * bounded, and as a materialized LogicalRDD it can be broadcast-hinted
-    * below the [[BroadcastNodeCap]] dial — each round is then ONE map-side
-    * pass over the once-partitioned edges plus a partial-aggregated
-    * groupBy, with no per-round edge sort (the lazy 10-round chain
-    * sort-merged the full edge frame every round: measured 11.6 -> ~6 s at
-    * sf0.1). Above the dial the join falls back to shuffled form — only the
-    * rank vector moves — and materialization doubles as lineage
-    * truncation, the fault-tolerance checkpointing synchronous PageRank
-    * wants at scale anyway.
+  /** The PageRank kernel over a set of distinct (src, dst) edges; a node
+    * may have no out-edges (a dangling sink). Each round hands every node
+    * the teleport base plus 85% of its in-neighbors' `rank div deg` and of
+    * its `dm div n` share of the mass sitting on sinks, all in
+    * scaled-BIGINT fixed point ([[PagerankScale]]) with floor division on
+    * non-negative values — Spark `div`, Scala `/` and DuckDB `//` agree
+    * exactly, so [[pagerankOracle]] (the same rounds unrolled as
+    * MATERIALIZED CTEs) hash-matches bit-for-bit. The loop stops after
+    * `maxRounds`, or at the exact fixpoint: the round that moves no rank.
+    *
+    * Every round is one [[Lifecycle.Generations]] step: persist, one
+    * materializing check ([[pagerankCheck]]: the moved ranks and the next
+    * round's dangling mass), release the predecessor, re-wrap. Jobs are
+    * labelled `<entry>: edges | round <r> | result`. Returns the
+    * (partkey, pr_fixed) ranks and the rounds run.
     */
-  private[graft] def pagerankFrom(edges: DataFrame,
-      nodeCap: Long = BroadcastNodeCap): DataFrame =
-    Lifecycle.generations(edges.sparkSession) { g =>
-      val (edgesDeg, hinted) = pagerankPrepare(g, edges, nodeCap)
-      for (_ <- 1 to PagerankIters)
-        g.advance(pagerankRound(edgesDeg, g.current, hinted), truncate = true)(_.count())
-      g.released(g.current.select(col("node").as("partkey"), col("rank").as("pr_fixed")))
+  private[graft] def pagerankFrom(spark: SparkSession, edges: DataFrame, entry: String,
+      maxRounds: Int, nodeCap: Long = BroadcastNodeCap): (DataFrame, Int) =
+    Lifecycle.generations(spark) { g =>
+      def phase(p: String): Unit = spark.sparkContext.setJobDescription(s"$entry: $p")
+      phase("edges")
+      val (graph, dm1) = pagerankPrepare(g, edges, nodeCap)
+      // runs rounds from `round + 1` on; returns the last one run
+      def rounds(dm: Long, round: Int): Int =
+        if (round == maxRounds) round
+        else {
+          phase(s"round ${round + 1}")
+          val (moved, next) = g.advance(pagerankRound(graph, g.current, dm), truncate = true)(
+            pagerankCheck)
+          if (moved == 0) round + 1 else rounds(next, round + 1)
+        }
+      val ran = rounds(dm1, 0)
+      phase("result")
+      (g.released(g.current.select(col("node").as("partkey"), col("rank").as("pr_fixed"))), ran)
     }
 
+  /** [[pagerankFrom]]'s prepared graph: `edges` is the persisted edge frame
+    * (src, dst, deg = src's out-degree, self), `hinted` the broadcast dial,
+    * `n` the node count (1 on an empty graph, whose rounds run over no
+    * rows) and `base` the teleport base.
+    */
+  private[graft] final case class PagerankGraph(edges: DataFrame,
+      hinted: DataFrame => DataFrame, n: Long, base: Long)
+
   /** [[pagerankFrom]]'s setup, shared with `PlanDump` and the plan specs:
-    * returns the persisted edge frame and the broadcast dial, and leaves
-    * generation 0 as `g.current`.
+    * returns the prepared graph and round 1's dangling mass, and leaves
+    * generation 0 (every node at rank `Scale div n`) as `g.current`.
     *
-    * Out-degree comes from a window over the SAME shuffle that co-locates
-    * the edges on src — the edge build (an expensive self-join + distinct)
-    * runs exactly once; a groupBy+join spelling would recompute it for each
-    * join side and again for the constants frame below. The persisted frame
-    * is then re-keyed on dst: the rank join is BROADCAST below the node dial
-    * (src co-location buys nothing), while every round's contribution
-    * aggregate groups by dst — caching on the aggregation key makes each
-    * round's groupBy exchange-FREE (guide §2.4: establish the partitioning
-    * once, reuse it every round), one build-time shuffle paid once against
-    * one shuffle+stage barrier per round.
+    * The edges are cached with one self row per node (src = dst = node,
+    * `self`, its out-degree as `deg`, 0 on a sink), re-keyed on dst: a
+    * round's `groupBy(dst)` is then exchange-free (guide §2.4: establish
+    * the partitioning once, reuse it every round), and the self row brings
+    * every node into it with its previous rank and out-degree, in-edges or
+    * not. Both come from ONE aggregate per node (its out-neighbor list), so
+    * the edge build runs once. One action builds the cache and counts the
+    * nodes and sinks; the node count is the broadcast dial.
     */
   private[graft] def pagerankPrepare(g: Lifecycle.Generations, edges: DataFrame,
-      nodeCap: Long = BroadcastNodeCap): (DataFrame, DataFrame => DataFrame) = {
-    val edgesDeg = g.persist(edges
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
+      nodeCap: Long = BroadcastNodeCap): (PagerankGraph, Long) = {
+    val noNeighbor = lit(null).cast(edges.schema("dst").dataType)
+    val cached = g.persist(edges
+      .select(explode(array(struct(col("src").as("node"), col("dst").as("nbr")),
+        struct(col("dst").as("node"), noNeighbor.as("nbr")))).as("e"))
+      .groupBy(col("e.node").as("node"))
+      .agg(collect_list(col("e.nbr")).as("out")) // drops the nulls: out-neighbors only
+      .select(col("node").as("src"), size(col("out")).cast("bigint").as("deg"),
+        posexplode(concat(array(col("node")), col("out"))))
+      .select(col("src"), col("col").as("dst"), col("deg"), (col("pos") === 0).as("self"))
       .repartition(col("dst")))
-    // graph-wide constants as a broadcast 1-row frame: n nodes, the teleport
-    // base (1-d)/n, and the uniform initial rank — all in fixed point,
-    // derived from the persisted frame (no re-derivation of the edge set).
-    // Joined ONCE into generation 0 and carried as a column of the rank
-    // vector from then on: a per-round crossJoin(consts) would re-run the
-    // countDistinct over the full edge frame every round (one extra
-    // edge-scan job per round at any scale, for a value that never changes).
-    val consts = broadcast(edgesDeg.agg(countDistinct(col("src")).as("n")).select(
-      expr(s"((CAST($PagerankScale AS BIGINT) * 15) div 100) div n").as("base"),
-      expr(s"CAST($PagerankScale AS BIGINT) div n").as("init")))
-    val init0 = g.start(edgesDeg.select(col("src").as("node")).distinct()
-      .crossJoin(consts)
-      .select(col("node"), col("init").as("rank"), col("base")), truncate = true)
-    (edgesDeg, dial(init0.count() <= nodeCap))
+    val nodes = cached.filter(col("self"))
+    val stats = nodes.agg(count(lit(1)), count_if(col("deg") === 0)).collect().head
+    val (nodeCount, sinks) = (stats.getLong(0), stats.getLong(1))
+    val n = math.max(nodeCount, 1L)
+    val init = PagerankScale / n
+    g.start(nodes.crossJoin(constants(cached.sparkSession, "rank" -> init))
+      .select(col("src").as("node"), col("rank")), truncate = true,
+      _.select(col("node"), col("rank")))
+    // the rank vector is node-count bounded, but it surfaces as a LogicalRDD
+    // (no stats), so the planner would sort-merge the full edge frame
+    // against it every round. Below the dial, hint it broadcast: the rank
+    // join goes map-side over the once-partitioned edges; above it — web-
+    // scale node counts — the join falls back to the shuffled form, where
+    // only the rank vector moves. Same rows either way.
+    (PagerankGraph(cached, dial(nodeCount <= nodeCap), n, PagerankScale * 15 / 100 / n),
+      sinks * init)
   }
 
   /** The broadcast hint when `bcast`, else no hint. */
   private[graft] def dial(bcast: Boolean): DataFrame => DataFrame =
     if (bcast) broadcast(_) else identity
 
-  /** One synchronous round: contribution aggregate over the once-partitioned
-    * edges, teleport applied. `base` rides the rank vector (constant per
-    * graph, so min() inside the contrib aggregate reproduces it exactly) —
-    * no per-round consts re-derivation.
+  /** A one-row local relation of BIGINT constants, for a cross join. Its
+    * values reach the generated code as data: a `lit` is inlined, so every
+    * new value would compile the round's classes again. The cartesian hint
+    * keeps it off a broadcast, which would run a job of its own.
     */
-  private[graft] def pagerankRound(edgesDeg: DataFrame, ranks: DataFrame,
-      hinted: DataFrame => DataFrame): DataFrame =
-    edgesDeg.join(hinted(ranks), col("src") === col("node"))
+  private def constants(spark: SparkSession, values: (String, Long)*): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(values.map(_._2): _*)),
+      StructType(values.map(v => StructField(v._1, LongType, nullable = false))))
+      .hint("shuffle_replicate_nl")
+
+  /** One synchronous round over the prepared edges: the broadcast rank
+    * join and one exchange-free `groupBy(dst)`, whose self rows give each
+    * node its previous rank and out-degree. The teleport base and the
+    * dangling share `dm div n` enter as [[constants]].
+    */
+  private[graft] def pagerankRound(graph: PagerankGraph, ranks: DataFrame, dm: Long): DataFrame =
+    graph.edges.join(graph.hinted(ranks), col("src") === col("node"))
       .groupBy(col("dst"))
-      .agg(sum(expr("rank div deg")).as("contrib"), min(col("base")).as("base"))
-      .select(col("dst").as("node"),
-        expr("base + (85 * contrib) div 100").as("rank"), col("base"))
+      .agg(sum(expr("if(self, 0, rank div deg)")).as("contrib"),
+        sum(expr("if(self, rank, 0)")).as("prev"), sum(expr("if(self, deg, 0)")).as("odeg"))
+      .crossJoin(constants(ranks.sparkSession, "base" -> graph.base, "share" -> dm / graph.n))
+      .select(col("dst").as("node"), expr("base + (85 * (contrib + share)) div 100").as("rank"),
+        col("prev"), col("odeg"))
 
-  /** Round cap for [[pagerankDirected]] — the oracle unrolls exactly this
-    * many rounds; the kernel may exit earlier at the EXACT integer fixpoint
-    * (once a round changes no rank, every later round is a no-op — the
-    * q_kcore proof shape, sound here because the arithmetic is pure
-    * fixed-point integer).
+  /** A generation's one materializing action: (ranks that moved, the mass
+    * on sinks, which is the next round's dangling mass).
     */
-  private val PagerankDirectedIters = 12
+  private def pagerankCheck(gen: DataFrame): (Long, Long) = {
+    val r = gen.agg(count_if(col("rank") =!= col("prev")),
+      coalesce(sum(expr("if(odeg = 0, rank, 0)")), lit(0L))).collect().head
+    (r.getLong(0), r.getLong(1))
+  }
 
-  /** Node-count ceiling for broadcasting the per-round rank/contrib
-    * vectors. Budgeted in BYTES of the built HashedRelation, not row
-    * count: a broadcast long-keyed relation costs ~50-100 B/row
-    * (UnsafeRow + map overhead), and the driver holds each round's build
-    * until the ContextCleaner retires it — 512k rows keeps every build
-    * under ~50 MB, safely inside default driver/executor broadcast
-    * budgets even with a few generations in flight. Larger graphs keep
-    * the shuffled join (only the rank vector moves).
+  /** Node-count ceiling for broadcasting the per-round rank vector.
+    * Budgeted in BYTES of the built HashedRelation, not row count: a
+    * broadcast long-keyed relation costs ~50-100 B/row (UnsafeRow + map
+    * overhead), and the driver holds each round's build until the
+    * ContextCleaner retires it — 512k rows keeps every build under ~50 MB,
+    * safely inside default driver/executor broadcast budgets even with a
+    * few generations in flight. Larger graphs keep the shuffled join (only
+    * the rank vector moves).
     */
   private[ops] val BroadcastNodeCap = 512000L
-
-  /** PageRank on a genuinely DIRECTED graph: the co-occurrence pairs
-    * oriented low-key → high-key, so nodes that only ever appear as the
-    * higher endpoint have out-degree 0 — real dangling sinks. Two things
-    * [[pagerank]]'s symmetric kernel cannot handle, both standard for web-
-    * scale crawl graphs:
-    *
-    *  - dangling-mass redistribution: each round collects the rank sitting
-    *    on out-degree-0 nodes (ONE 1-row aggregate over the rank vector)
-    *    and hands every node its `dm div n` share before damping —
-    *    without it the sinks silently drain mass and ranks are wrong;
-    *  - convergence early-exit: each round's projection carries a `moved`
-    *    flag (new rank ≠ old rank), and the round-end count that
-    *    materializes the generation doubles as the fixpoint check.
-    *
-    * All arithmetic stays scaled-BIGINT fixed point ([[PagerankScale]],
-    * floor division on non-negatives), so the DuckDB oracle — the same
-    * rounds unrolled with a per-round dangling-mass CTE — hash-matches
-    * bit-for-bit, and the fixpoint is EXACT (integer equality), which is
-    * what makes the early exit provably equivalent to the full unroll.
-    *
-    * Scale shape: identical to [[pagerank]] (edges+degree shuffled onto src
-    * once and persisted; only the rank vector moves per round) plus one
-    * 1-row aggregate per round; each generation is persisted, its
-    * predecessor released, lineage truncated to a LogicalRDD (the vector
-    * feeds the contrib join, the dangling aggregate, and the moved check).
-    */
-  def pagerankDirected(s: SparkSession, dir: String): DataFrame =
-    pagerankDirectedFrom(s, coOccurrence(s, dir, "y > src"))._1
-
-  /** [[pagerankDirected]]'s kernel over an arbitrary (src, dst) edge frame —
-    * no out-degree precondition. Returns (ranks, roundsRun) so specs can
-    * observe the early exit.
-    */
-  private[graft] def pagerankDirectedFrom(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = PagerankDirectedIters,
-      nodeCap: Long = BroadcastNodeCap): (DataFrame, Int) =
-    Lifecycle.generations(spark) { g =>
-      val sc = spark.sparkContext
-      sc.setJobDescription("pagerank_directed: build edges+degrees")
-      val (edgesDeg, hinted) = pagerankDirectedPrepare(g, edges, nodeCap)
-      var round = 0
-      var fixpoint = false
-      while (round < maxRounds && !fixpoint) {
-        round += 1
-        sc.setJobDescription(s"pagerank_directed: round $round")
-        // the count that materializes the generation answers "converged?"
-        fixpoint = g.advance(pagerankDirectedRound(edgesDeg, g.current, hinted),
-          truncate = true)(_.filter(col("moved")).count()) == 0
-      }
-      sc.setJobDescription("pagerank_directed: release")
-      (g.released(g.current.select(col("node").as("partkey"), col("rank").as("pr_fixed"))),
-        round)
-    }
-
-  /** [[pagerankDirectedFrom]]'s setup, shared with `PlanDump` and the plan
-    * specs: returns the persisted edge frame and the broadcast dial, and
-    * leaves generation 0 as `g.current`. The edges are cached re-keyed on
-    * dst for the same reason as [[pagerankPrepare]]'s.
-    */
-  private[graft] def pagerankDirectedPrepare(g: Lifecycle.Generations, edges: DataFrame,
-      nodeCap: Long = BroadcastNodeCap): (DataFrame, DataFrame => DataFrame) = {
-    val edgesDeg = g.persist(edges
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .repartition(col("dst")))
-    // node universe with out-degree (0 = dangling sink), one row per node
-    val nodeDeg = g.persist(edgesDeg.select(col("src").as("node"), col("deg").as("odeg"))
-      .unionAll(edgesDeg.select(col("dst").as("node"), lit(0L).as("odeg")))
-      .groupBy(col("node")).agg(max(col("odeg")).as("odeg")))
-    val consts = broadcast(nodeDeg.agg(count(lit(1)).as("n")).select(
-      col("n"),
-      expr(s"((CAST($PagerankScale AS BIGINT) * 15) div 100) div n").as("base"),
-      expr(s"CAST($PagerankScale AS BIGINT) div n").as("init")))
-    // `base` and `n` are joined once here and carried as columns of every
-    // generation (constant per graph): a per-round crossJoin(consts) would
-    // re-aggregate nodeDeg every round for values that never change
-    g.start(nodeDeg.crossJoin(consts)
-      .select(col("node"), col("odeg"), col("init").as("rank"), col("base"), col("n")),
-      truncate = true)
-    // the rank vector and the contrib frame are both NODE-count bounded,
-    // but they surface as LogicalRDDs (no stats), so the planner would
-    // sort-merge the full edge frame against them EVERY round. Below the
-    // dial, hint them broadcast: the contrib join goes map-side over the
-    // once-partitioned edges (per-round cost = one edge scan + a partial
-    // agg, no per-round edge sort); above it — web-scale node counts — the
-    // joins fall back to the shuffled form, where only the rank vector
-    // moves. Same rows either way; this is the hint AQE would derive if
-    // the generations carried statistics.
-    (edgesDeg, dial(nodeDeg.count() <= nodeCap))
-  }
-
-  /** One synchronous directed round: dangling-mass 1-row broadcast,
-    * contribution aggregate over the once-partitioned edges, teleport +
-    * redistribution, moved flag. `base`/`n` ride the rank vector (constant
-    * per graph) — no per-round consts re-derivation.
-    */
-  private[graft] def pagerankDirectedRound(edgesDeg: DataFrame, ranks: DataFrame,
-      hinted: DataFrame => DataFrame): DataFrame = {
-    // the mass stranded on sinks this round: 1-row, broadcast
-    val dm = broadcast(ranks.filter(col("odeg") === 0)
-      .agg(coalesce(sum(col("rank")), lit(0L)).as("dm")))
-    val contrib = edgesDeg
-      .join(hinted(ranks.select(col("node"), col("rank"))), col("src") === col("node"))
-      .groupBy(col("dst")).agg(sum(expr("rank div deg")).as("contrib"))
-    ranks.select(col("node"), col("odeg"), col("rank").as("prev"),
-        col("base"), col("n"))
-      .join(hinted(contrib), col("node") === col("dst"), "left")
-      .crossJoin(dm)
-      .select(col("node"), col("odeg"),
-        expr("base + (85 * (coalesce(contrib, CAST(0 AS BIGINT)) + dm div n)) div 100")
-          .as("rank"),
-        col("prev"), col("base"), col("n"))
-      .select(col("node"), col("odeg"), col("rank"),
-        (col("rank") =!= col("prev")).as("moved"), col("base"), col("n"))
-  }
 
   /** Per-node triangle counts + local clustering coefficient over the
     * strong part co-occurrence graph (parts co-appearing in ≥ 2 orders —
@@ -662,47 +586,22 @@ object IterativeQueries {
        |GROUP BY 1""".stripMargin
   }
 
-  /** The same rounds as [[pagerank]], unrolled as a MATERIALIZED CTE chain
-    * (DuckDB inlines single-reference CTEs — an un-materialized chain where
-    * each round references the previous round's whole plan twice goes
-    * exponential).
+  /** [[pagerankFrom]]'s rounds over the co-occurrence pairs `a.l_partkey
+    * <pairOp> b.l_partkey`, unrolled `rounds` deep as a MATERIALIZED CTE
+    * chain (DuckDB inlines single-reference CTEs — an un-materialized chain
+    * where each round references the previous round's whole plan twice goes
+    * exponential), with a per-round dangling-mass CTE (0 on a symmetric
+    * graph). Exact-integer throughout, so the kernel's early exit at the
+    * fixpoint cannot diverge from the full unroll.
     */
-  private def pagerankOracle: String = {
+  private def pagerankOracle(pairOp: String, rounds: Int): String = {
     val scale = s"CAST($PagerankScale AS BIGINT)"
     val base = s"(($scale * 15) // 100) // (SELECT n FROM nn)"
     val head = Seq(
-      """edges AS MATERIALIZED (
+      s"""edges AS MATERIALIZED (
         |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
         |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey)""".stripMargin,
-      "outdeg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
-      "nn AS MATERIALIZED (SELECT count(*) AS n FROM outdeg)",
-      s"r0 AS MATERIALIZED (SELECT src AS node, $scale // (SELECT n FROM nn) AS rank FROM outdeg)")
-    val rounds = (0 until PagerankIters).map { t =>
-      s"""r${t + 1} AS MATERIALIZED (
-         |  SELECT e.dst AS node,
-         |         CAST($base + (85 * sum(r.rank // d.deg)) // 100 AS BIGINT) AS rank
-         |  FROM edges e JOIN r$t r ON e.src = r.node JOIN outdeg d ON e.src = d.src
-         |  GROUP BY e.dst)""".stripMargin
-    }
-    (head ++ rounds).mkString("WITH ", ",\n", "") +
-      s"\nSELECT node AS partkey, rank AS pr_fixed FROM r$PagerankIters"
-  }
-
-  /** The same rounds as [[pagerankDirected]], unrolled with a per-round
-    * dangling-mass CTE (the 1-row aggregate the Spark kernel broadcasts).
-    * Exact-integer throughout, so extra Spark-side rounds past the fixpoint
-    * (or the kernel's early exit before this unroll's depth) cannot
-    * diverge.
-    */
-  private def pagerankDirectedOracle: String = {
-    val scale = s"CAST($PagerankScale AS BIGINT)"
-    val base = s"(($scale * 15) // 100) // (SELECT n FROM nn)"
-    val head = Seq(
-      """edges AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)""".stripMargin,
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey $pairOp b.l_partkey)""".stripMargin,
       "outdeg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
       "nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
       "nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes)",
@@ -710,7 +609,7 @@ object IterativeQueries {
         |  SELECT n.node, coalesce(d.deg, 0) AS odeg
         |  FROM nodes n LEFT JOIN outdeg d ON d.src = n.node)""".stripMargin,
       s"r0 AS MATERIALIZED (SELECT node, $scale // (SELECT n FROM nn) AS rank FROM nodes)")
-    val rounds = (1 to PagerankDirectedIters).map { t =>
+    val unrolled = (1 to rounds).map { t =>
       s"""d$t AS MATERIALIZED (
          |  SELECT coalesce(sum(r.rank), 0) AS dm
          |  FROM r${t - 1} r JOIN nd ON nd.node = r.node AND nd.odeg = 0),
@@ -724,8 +623,8 @@ object IterativeQueries {
          |      (SELECT dm FROM d$t) // (SELECT n FROM nn))) // 100 AS BIGINT) AS rank
          |  FROM nd LEFT JOIN c$t c ON c.node = nd.node)""".stripMargin
     }
-    (head ++ rounds).mkString("WITH ", ",\n", "") +
-      s"\nSELECT node AS partkey, rank AS pr_fixed FROM r$PagerankDirectedIters"
+    (head ++ unrolled).mkString("WITH ", ",\n", "") +
+      s"\nSELECT node AS partkey, rank AS pr_fixed FROM r$rounds"
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -738,8 +637,8 @@ object IterativeQueries {
   )
 
   val oracleSql: Map[String, String] = Map(
-    "q_pagerank" -> pagerankOracle,
-    "q_pagerank_directed" -> pagerankDirectedOracle,
+    "q_pagerank" -> pagerankOracle("<>", PagerankIters),
+    "q_pagerank_directed" -> pagerankOracle("<", PagerankDirectedIters),
     "q_kcore" -> kcoreOracle,
     "q_triangles" ->
       """WITH pe AS MATERIALIZED (

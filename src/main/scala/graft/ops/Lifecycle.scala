@@ -132,8 +132,8 @@ object Lifecycle {
       * partition (a full count, not `limit(1)`): a partly built generation
       * is recomputed through the whole generation chain by the next round.
       */
-    def advance(next: DataFrame, truncate: Boolean, sides: DataFrame*)(
-        check: DataFrame => Long): Long = {
+    def advance[A](next: DataFrame, truncate: Boolean, sides: DataFrame*)(
+        check: DataFrame => A): A = {
       val retiring = sides.map(_.persist(StorageLevel.MEMORY_AND_DISK)).toList ::: held
       val n = next.persist(StorageLevel.MEMORY_AND_DISK)
       held = n :: retiring

@@ -174,6 +174,7 @@ object RelationalizeQueries {
     * strings. Schemas are KB-sized driver statistics; the diff is local.
     */
   def relMigrate(spark: SparkSession, dir: String): DataFrame = {
+    import graft.core.SqlDialect.quoteIdent
     import spark.implicits._
     def outTags(docs: DataFrame): Map[String, String] =
       RelationalizeSpark.collectSchemas(
@@ -186,10 +187,9 @@ object RelationalizeQueries {
       (old.get(c), nw.get(c)) match {
         case (None, Some(tag)) =>
           val t = graft.core.PostgresDialect.typeMapping(tag)
-          Some((c, "added",
-            s"""ALTER TABLE "public"."events" ADD COLUMN "$c" $t;"""))
+          Some((c, "added", s"""ALTER TABLE "public"."events" ADD COLUMN ${quoteIdent(c)} $t;"""))
         case (Some(_), None) =>
-          Some((c, "removed", s"""-- retire column "$c" (kept for backfill)"""))
+          Some((c, "removed", s"-- retire column ${quoteIdent(c)} (kept for backfill)"))
         case _ => None
       }
     }
@@ -419,11 +419,11 @@ object RelationalizeQueries {
         |  FROM oo FULL JOIN onw ON oo.oc = onw.oc)
         |SELECT "column", change,
         |  CASE WHEN change = 'added' THEN
-        |    'ALTER TABLE "public"."events" ADD COLUMN "' || "column" || '" ' ||
+        |    'ALTER TABLE "public"."events" ADD COLUMN "' || replace("column", '"', '""') || '" ' ||
         |    CASE ntag WHEN 'int' THEN 'BIGINT' WHEN 'str' THEN 'VARCHAR(65535)'
         |              WHEN 'bool' THEN 'BOOLEAN' WHEN 'float' THEN 'FLOAT'
         |              WHEN 'datetime' THEN 'TIMESTAMP' ELSE 'BOOLEAN' END || ';'
-        |  ELSE '-- retire column "' || "column" || '" (kept for backfill)' END AS stmt
+        |  ELSE '-- retire column "' || replace("column", '"', '""') || '" (kept for backfill)' END AS stmt
         |FROM d WHERE change <> 'same'""".stripMargin,
     // the full DDL string re-assembled in SQL: lattice -> output columns ->
     // type map -> string_agg with the dialect's exact separator layout

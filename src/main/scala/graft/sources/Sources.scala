@@ -256,18 +256,20 @@ object Sinks {
       schemas: Map[String, graft.core.ChoiceSchema], s3Location: String,
       schemaName: String, iamRole: String, region: String): Map[String, Seq[String]] =
     schemas.map { case (t, sch) =>
+      import graft.core.SqlDialect.{qualified, quoteLiteral}
+      val table = qualified(schemaName, t)
       t -> Seq(
-        s"""DROP TABLE IF EXISTS "$schemaName"."$t";""",
+        s"DROP TABLE IF EXISTS $table;",
         sch.generateDdl(t, schemaName, graft.core.PostgresDialect),
-        s"""COPY "$schemaName"."$t"
-           |FROM 's3://$s3Location$t.json.gz'
-           |iam_role '$iamRole'
-           |region '$region'
+        s"""COPY $table
+           |FROM ${quoteLiteral(s"s3://$s3Location$t.json.gz")}
+           |iam_role ${quoteLiteral(iamRole)}
+           |region ${quoteLiteral(region)}
            |FORMAT AS json 'auto ignorecase'
            |TRUNCATECOLUMNS
            |GZIP;""".stripMargin,
-        s"""ANALYZE "$schemaName"."$t";""",
-        s"""SELECT COUNT(1) FROM "$schemaName"."$t";""")
+        s"ANALYZE $table;",
+        s"SELECT COUNT(1) FROM $table;")
     }
 
   /** K8: NaN/Infinity scrub — the reference serializes them as JSON null

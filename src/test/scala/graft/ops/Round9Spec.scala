@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-9 pins: directed PageRank (dangling-mass redistribution + exact
-  * integer fixpoint early exit), and the substring-extraction memoization.
+/** Round-9 pins: the larger BPE merge tables, byte-level BPE, the GPT-2
+  * pre-tokenizer, filtered vector search, CG training, the PNG codec, soft
+  * dedup weights and the substring-extraction memoization. (Its directed
+  * PageRank pins live in PagerankSpec.)
   */
 class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
-  private val Scale = 1000000000000L
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -22,75 +23,6 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
-
-  // --- q_pagerank_directed -------------------------------------------------
-
-  test("directed pagerank: early exit fires at the exact integer fixpoint (cycle graph)") {
-    import spark.implicits._
-    // a directed n-cycle is out-degree-1 regular: uniform rank is the EXACT
-    // fixed point of the integer recurrence (base + (85*init) div 100 == init
-    // for n | Scale), so round 1 moves nothing and the loop must exit there
-    val n = 5L
-    val cycle = (1L to n).map(i => (i, i % n + 1)).toDF("src", "dst")
-    val (out, rounds) = IterativeQueries.pagerankDirectedFrom(spark, cycle, maxRounds = 12)
-    assert(rounds == 1, s"expected fixpoint detection on round 1, ran $rounds rounds")
-    val ranks = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val init = Scale / n
-    assert(ranks.size == n && ranks.values.forall(_ == init),
-      s"cycle ranks must stay uniform at $init: $ranks")
-  }
-
-  test("directed pagerank: dangling mass is redistributed, not drained") {
-    import spark.implicits._
-    // star with a sink: 1..4 -> 5, node 5 dangling. Without the dm term the
-    // sink's rank would decay toward base each round while total mass leaks;
-    // with it, total mass stays within floor-loss slack of Scale.
-    val star = (1L to 4L).map(i => (i, 5L)).toDF("src", "dst")
-    val (out, rounds) = IterativeQueries.pagerankDirectedFrom(spark, star, maxRounds = 12)
-    val ranks = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ranks.size == 5)
-    val total = ranks.values.sum
-    // each round floors at most (100 + n + n) ulps per node; 12 rounds x 5
-    // nodes x a generous constant still keeps the loss under 10^4 of 10^12
-    assert(total > Scale - 10000L && total <= Scale,
-      s"mass not conserved under dangling redistribution: $total vs $Scale")
-    // the sink must hold MORE than a leaf: it receives every leaf's rank
-    assert(ranks(5L) > ranks(1L),
-      s"sink rank ${ranks(5L)} not above leaf rank ${ranks(1L)}")
-    assert(rounds > 1, "star graph cannot be at fixpoint after one round")
-  }
-
-  test("directed pagerank matches an independent integer reference on a small graph") {
-    import spark.implicits._
-    // 1->2, 1->3, 2->3, 4->1: node 3 dangling; hand-run the same integer
-    // recurrence sequentially and require bit equality
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 1L))
-    val df = edges.toDF("src", "dst")
-    val iters = 12
-    val outDeg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
-    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-    val n = nodes.size.toLong
-    val base = ((Scale * 15) / 100) / n
-    var rank = nodes.map(_ -> Scale / n).toMap
-    var moved = true
-    var rounds = 0
-    while (rounds < iters && moved) {
-      rounds += 1
-      val dm = nodes.filter(v => !outDeg.contains(v)).map(rank).sum
-      val contrib = edges.groupBy(_._2).map { case (d, es) =>
-        d -> es.map(e => rank(e._1) / outDeg(e._1)).sum
-      }
-      val next = nodes.map(v =>
-        v -> (base + (85 * (contrib.getOrElse(v, 0L) + dm / n)) / 100)).toMap
-      moved = next != rank
-      rank = next
-    }
-    val (out, sparkRounds) = IterativeQueries.pagerankDirectedFrom(spark, df, maxRounds = iters)
-    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == rank, s"spark $got != reference $rank")
-    assert(sparkRounds == rounds,
-      s"spark ran $sparkRounds rounds, sequential reference ran $rounds")
-  }
 
   // --- BPE at the larger merge table ----------------------------------------
 

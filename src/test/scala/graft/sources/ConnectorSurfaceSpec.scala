@@ -89,5 +89,21 @@ class ConnectorSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
         |GZIP;""".stripMargin)
     assert(stmts(3) == """ANALYZE "analytics"."t";""")
     assert(stmts(4) == """SELECT COUNT(1) FROM "analytics"."t";""")
+
+    // names from document keys holding `"` and `'` stay one identifier or
+    // literal each
+    val key = "t\"x'y"
+    val odd = Sinks.redshiftLoadStatements(Map(key -> res.schemas("t")), "bucket/p'/",
+      "ana\"lytics", "arn:aws:iam::0:role/it's", "us-east-1")(key)
+    val table = """"ana""lytics"."t""x'y""""
+    assert(odd(0) == s"DROP TABLE IF EXISTS $table;")
+    assert(odd(1).startsWith(s"CREATE TABLE IF NOT EXISTS $table ("))
+    assert(odd(2).startsWith(
+      s"""COPY $table
+        |FROM 's3://bucket/p''/t"x''y.json.gz'
+        |iam_role 'arn:aws:iam::0:role/it''s'
+        |""".stripMargin))
+    assert(odd(3) == s"ANALYZE $table;")
+    assert(odd(4) == s"SELECT COUNT(1) FROM $table;")
   }
 }
