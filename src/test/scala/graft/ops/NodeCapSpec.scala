@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shuffled branch of connected components (PagerankSpec gates
-  * PageRank's). Every graph the sf0.01 gate builds is far below
+/** The shuffled branches of pagerank, directed pagerank and connected
+  * components. Every graph the sf0.01 gate builds is far below
   * `BroadcastNodeCap`, so the gate only runs the broadcast joins; a
   * `nodeCap` below every node count forces the shuffled joins, which must
   * return the same rows and leave the block store empty.
@@ -28,6 +28,22 @@ class NodeCapSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  test("pagerank: both branches agree on the cycle, star and 256-path") {
+    // the symmetric entry runs the kernel on symmetrized edges: no sinks
+    graphs.foreach { case (name, g) =>
+      val sym = g ++ g.map(_.swap)
+      assert(sameRows(spark, s"pagerank $name")(cap => IterativeQueries.pagerankFrom(
+        spark, edges(spark, sym), "spec", 10, nodeCap = cap)._1).nonEmpty)
+    }
+  }
+
+  test("directed pagerank: both branches agree on the cycle, star and 256-path") {
+    graphs.foreach { case (name, g) =>
+      assert(sameRows(spark, s"directed pagerank $name")(cap => IterativeQueries.pagerankFrom(
+        spark, edges(spark, g), "spec", 12, nodeCap = cap)._1).nonEmpty)
+    }
+  }
+
   test("connected components: both branches agree on the cycle, star and 256-path") {
     import spark.implicits._
     graphs.foreach { case (name, g) =>
@@ -40,9 +56,7 @@ class NodeCapSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 }
 
-/** The small graphs and the branch check that NodeCapSpec and PagerankSpec
-  * share.
-  */
+/** The small graphs and the branch check, shared with PagerankSpec. */
 object NodeCapSpec {
   import org.scalatest.Assertions._
 

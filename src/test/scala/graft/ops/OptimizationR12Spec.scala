@@ -6,9 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Focused pins for the round-12 optimization changes: the optimizations
   * restructure internals (overlap expression, memoized index parameters,
-  * the connected-components round plan) and these tests hold each one to
-  * bit-equivalence with the formulation it replaced. (The PageRank round
-  * plan pin lives in PagerankSpec.)
+  * exchange-free pagerank rounds) and these tests hold each one to
+  * bit-equivalence with the formulation it replaced.
   */
 class OptimizationR12Spec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -103,6 +102,30 @@ class OptimizationR12Spec extends AnyFunSuite with BeforeAndAfterAll {
   /** The shuffle exchanges in a plan fragment (broadcasts excluded). */
   private def shuffles(plan: String): Seq[String] =
     plan.split("\n").toSeq.filter(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
+
+  test("pagerank round plan is exchange-free above the cached edges and keeps the broadcast join") {
+    Lifecycle.generations(spark) { g =>
+      val (graph, dm) = IterativeQueries.pagerankPrepare(g,
+        IterativeQueries.coOccurrence(spark, dir, "y != src"))
+      // everything above the InMemoryTableScan is the per-round work, and it
+      // must carry NO Exchange
+      val above = aboveCache(IterativeQueries.pagerankRound(graph, g.current, dm))
+      assert(!above.contains("Exchange"), s"per-round exchange reappeared:\n$above")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("directed pagerank round plan shuffles nothing above the cached edges and keeps the broadcast joins") {
+    Lifecycle.generations(spark) { g =>
+      val (graph, dm) = IterativeQueries.pagerankPrepare(g,
+        IterativeQueries.coOccurrence(spark, dir, "y > src"))
+      // the rank vector is broadcast; the groupBy(dst) reuses the cache's
+      // dst partitioning
+      val above = aboveCache(IterativeQueries.pagerankRound(graph, g.current, dm))
+      assert(shuffles(above).isEmpty, s"per-round shuffle reappeared:\n$above")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
 
   test("connected-components propagate round shuffles only the node-bounded label union and keeps the broadcast join") {
     import spark.implicits._
